@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -196,15 +197,29 @@ object Bench {
     val sortedQueries = timedQueries.toSeq.sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // A rep that throws is never timed: it stays out of `samples`, and
+    // the query is listed under "failed" with its first failure's reason.
+    val failures = scala.collection.mutable.Map.empty[String, (Int, String)]
     for (_ <- 1 to reps; (name, fn) <- sortedQueries) {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).count()
+        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+      } catch {
+        case NonFatal(e) =>
+          val (n, reason) = failures.getOrElse(name,
+            (0, s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+          failures(name) = (n + 1, reason)
+      }
     }
-    // (median, min, max) per query; median of an even count averages
-    // the middle pair, though reps defaults to odd.
+    def failedJson(key: String => String, reasonChars: Int): String =
+      failures.toSeq.sortBy(_._1).map { case (name, (n, reason)) =>
+        "\"" + key(name) + "\":" + jstr(s"$n/$reps reps: $reason".take(reasonChars))
+      }.mkString("{", ",", "}")
+    // (median, min, max) per query over its successful reps; median of
+    // an even count averages the middle pair, though reps defaults to odd.
     val results: Seq[(String, (Double, Double, Double))] =
-      sortedQueries.map { case (name, _) =>
+      sortedQueries.filter(q => samples(q._1).nonEmpty).map { case (name, _) =>
         val s = samples(name).sorted
         val med =
           if (s.length % 2 == 1) s(s.length / 2)
@@ -217,7 +232,7 @@ object Bench {
     val total = results.map(_._2._1).sum
     val excluded = verificationTwins.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$throughput$envBlock,"excluded_verification_twins":$excluded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$throughput$envBlock,"excluded_verification_twins":$excluded,"sf":"$sfDir","failed":${failedJson(identity, 160)}}""")
     // The artifact of record keeps only the LAST ~2000 chars of stdout,
     // and the full-detail line above is ~5KB — its '{"metric"' head has
     // been truncated out of every round's tail, defeating JSON parsing.
@@ -240,7 +255,7 @@ object Bench {
       case (k, (med, mn, mx)) if mx - mn > 0.5 * med && mx - mn > 0.3 =>
         "\"" + k.takeWhile(_ != '_') + "\":[" + fmt(mn, 2) + "," + fmt(mx, 2) + "]"
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","reps":$reps,"sf":$sfNum$throughput$envBlock,"noisy_spread":$noisy,"queries":$qsShort,"excluded_verification_twins":$excluded}""")
+    println(s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","reps":$reps,"sf":$sfNum$throughput$envBlock,"noisy_spread":$noisy,"queries":$qsShort,"excluded_verification_twins":$excluded,"failed":${failedJson(_.takeWhile(_ != '_'), 60)}}""")
     spark.stop()
   }
 }

@@ -1094,8 +1094,7 @@ final class GraftEngine(val spark: SparkSession) {
   def applyFunctionJsonRows(name: String, inputJson: String)
       : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
     val (schema, row) = JsonRow.parseFlat(inputJson)
-    compiledApplies.getOrElseUpdate((name, schema), compileApply(name, schema))
-      match {
+    compiledApply(name, schema) match {
         case Some(c) =>
           // no lock: the projection is thread-local (see CompiledApply)
           // so 8 concurrent scoring clients evaluate in parallel — the
@@ -1124,21 +1123,33 @@ final class GraftEngine(val spark: SparkSession) {
   private val compiledApplies = scala.collection.concurrent.TrieMap[
     (String, org.apache.spark.sql.types.StructType), Option[CompiledApply]]()
 
+  private[graft] def compiledApply(name: String,
+      schema: org.apache.spark.sql.types.StructType): Option[CompiledApply] =
+    compiledApplies.getOrElseUpdate((name, schema), compileApply(name, schema))
+
   /** The type converters are stateless closures (each call allocates
     * its own rows) and safe to share; the PROJECTION reuses a mutable
     * result row, so each thread gets its own instance via ThreadLocal
-    * — the codegen cache makes the per-thread compile a lookup. */
-  private final case class CompiledApply(
+    * — the codegen cache makes the per-thread compile a lookup.
+    * `boundExprs` gives each new projection its own bound copy of the
+    * expression trees (see compileApply). */
+  private[graft] final case class CompiledApply(
       toCatalyst: Any => Any,
-      projFactory: () =>
-        org.apache.spark.sql.catalyst.expressions.Projection,
+      boundExprs: () =>
+        Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       fromCatalyst: Any => Any,
       outSchema: org.apache.spark.sql.types.StructType) {
+    def newProjection(): org.apache.spark.sql.catalyst.expressions.Projection = {
+      val proj = org.apache.spark.sql.catalyst.expressions.SafeProjection
+        .create(boundExprs())
+      proj.initialize(0) // non-deterministic exprs need a partition
+      proj
+    }
     private val proj = new ThreadLocal[
         org.apache.spark.sql.catalyst.expressions.Projection] {
       override def initialValue():
           org.apache.spark.sql.catalyst.expressions.Projection =
-        projFactory()
+        newProjection()
     }
     def apply(row: Any): Any =
       fromCatalyst(proj.get()(toCatalyst(row)
@@ -1147,7 +1158,7 @@ final class GraftEngine(val spark: SparkSession) {
 
   private def compileApply(name: String,
       inSchema: org.apache.spark.sql.types.StructType): Option[CompiledApply] = {
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, SafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
     import org.apache.spark.sql.types.{StructField, StructType}
     try {
@@ -1167,33 +1178,26 @@ final class GraftEngine(val spark: SparkSession) {
       }
       p match {
         case Project(exprs, l: LocalRelation) =>
-          // Each thread binds its own DEEP COPY of the expression trees:
-          // SafeProjection can fall back to CodegenFallback/interpreted
-          // evaluation, where a stateful (non-deterministic) expression
-          // instance carries mutable state — sharing one tree across 8
-          // concurrent scoring threads would race without the old
-          // route-wide lock. Copying at factory time keeps the hot path
-          // lock-free (the r14 change) AND state-isolated.
-          val projFactory = () => {
-            val fresh = exprs.map(e => BindReferences.bindReference(
-              e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression]
-                .transformUp { case x => x.makeCopy(
-                  x.productIterator.map(_.asInstanceOf[AnyRef]).toArray) },
-              l.output))
-            val proj = SafeProjection.create(fresh)
-            proj.initialize(0) // non-deterministic exprs need a partition
-            proj
-          }
-          projFactory() // compile eagerly so an unprojectable plan fails HERE
+          // Each thread binds its own copy of every STATEFUL node, at
+          // any depth: SafeProjection can fall back to CodegenFallback/
+          // interpreted evaluation, where a stateful expression instance
+          // (rand's generator) carries mutable state, so sharing one
+          // tree across concurrent scoring threads would race. (A
+          // transformUp/makeCopy rebuild is not enough: Catalyst keeps
+          // value-equal children, so only the root would be fresh.)
+          val boundExprs = () => exprs.map(e => BindReferences.bindReference(
+            e.freshCopyIfContainsStatefulExpression(), l.output))
           val outSchema = StructType(exprs.map(e =>
             StructField(e.name, e.dataType, e.nullable)))
-          Some(CompiledApply(
+          val compiled = CompiledApply(
             org.apache.spark.sql.catalyst.CatalystTypeConverters
               .createToCatalystConverter(inSchema),
-            projFactory,
+            boundExprs,
             org.apache.spark.sql.catalyst.CatalystTypeConverters
               .createToScalaConverter(outSchema),
-            outSchema))
+            outSchema)
+          compiled.newProjection() // compile eagerly so an unprojectable plan fails HERE
+          Some(compiled)
         case _ => None
       }
     } catch { case _: Throwable => None }

@@ -1,6 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Table access over the driver-generated parquet directories.
   *
@@ -10,11 +15,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * §1.4) — the same decision the reference's own `tabular` dataset
   * makes (`/root/reference/plugins/tabular/tabular_dataset.cc:2681`).
   *
-  * Scale note: every loader returns a lazily-planned scan. Catalyst
-  * pushes filters/projections into the Parquet reader, so callers can
-  * compose freely — nothing is materialized here. On a real cluster the
-  * same paths would be a partitioned table / Delta location; no code
-  * here assumes single-node layout.
+  * Opening a table reads metadata only, the way the reference opens a
+  * dataset: `load` lists the path once and reads ONE Parquet footer on
+  * the driver (the single file, or a directory's first data file by
+  * name, as Spark's own non-merging inference picks it), converts it
+  * with Spark's converter and returns a lazily-planned scan over that
+  * schema. No Spark job runs here; Catalyst still pushes filters and
+  * projections into the Parquet reader when a query executes. The
+  * schema is read from the file on every call, never declared per
+  * table nor cached: the testdata's physical types differ between
+  * generations (see `events`).
+  *
+  * Fallback: plain `spark.read.parquet` (schema inference, one job)
+  * when the path is missing or holds no data file (so the error stays
+  * Spark's `AnalysisException`), when it holds sub-directories
+  * (partition discovery) or `_metadata` summary files (which Spark's
+  * inference prefers), and when `spark.sql.parquet.mergeSchema` is on.
   */
 object Tables {
 
@@ -46,7 +62,37 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
     tune(spark)
-    spark.read.parquet(s"$dir/$table.parquet")
+    val path = s"$dir/$table.parquet"
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The schema Spark's non-merging inference would pick, read from one
+    * footer on the driver; None where `load` falls back to inference.
+    * The converter is built from the session conf after `tune`, so
+    * `nanosAsLong` and Spark's row-metadata key apply as they would
+    * under inference. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    if (state.conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = state.newHadoopConf()
+    val root = new Path(path)
+    val listed: Seq[FileStatus] =
+      try root.getFileSystem(hadoopConf).listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    if (listed.exists(f => f.isDirectory ||
+        Set("_metadata", "_common_metadata")(f.getPath.getName))) return None
+    listed.filterNot(f => hidden(f.getPath.getName))
+      .sortBy(_.getPath.getName).headOption.map { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, hadoopConf))
+        try ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, reader.getFooter),
+          new ParquetToSparkSchemaConverter(state.conf))
+        finally reader.close()
+      }
   }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")

@@ -192,12 +192,16 @@ object GraftSql {
     "vector_sum")
 
 
+  /** Resolver over the test tables in `dir`; `events` goes
+    * through its timestamp-normalizing loader. */
+  private def testTables(spark: SparkSession, dir: String): String => DataFrame = {
+    case "events" => Tables.events(spark, dir)
+    case name => Tables.load(spark, dir, name)
+  }
+
   /** Query over the driver test tables in `dir`. */
   def query(spark: SparkSession, dir: String, sql: String): DataFrame =
-    queryTables(spark, name => Tables.load(spark, dir, name) match {
-      case df if name == "events" => Tables.events(spark, dir)
-      case df => df
-    }, sql)
+    queryTables(spark, testTables(spark, dir), sql)
 
   /** Query over an arbitrary table resolver (the dataset registry). */
   def queryTables(spark: SparkSession, tables: String => DataFrame,
@@ -228,8 +232,5 @@ object GraftSql {
   /** Parameterized query: `$name` placeholders bound from `params`. */
   def query(spark: SparkSession, dir: String, sql: String,
       params: Map[String, Any]): DataFrame =
-    queryTables(spark, name => Tables.load(spark, dir, name) match {
-      case df if name == "events" => Tables.events(spark, dir)
-      case df => df
-    }, sql, params)
+    queryTables(spark, testTables(spark, dir), sql, params)
 }

@@ -45,6 +45,31 @@ class RestSpec extends AnyFunSuite {
     assert(r.isNullAt(1))
   }
 
+  test("compiled scoring: each thread's projection owns its nested stateful nodes") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.types._
+    val engine = new GraftEngine(spark)
+    engine.createFunction("nested_rand_f", df =>
+      df.select((org.apache.spark.sql.functions.rand(1) + df("a")).as("r")))
+    val schema = StructType(Seq(StructField("a", LongType)))
+    val compiled = engine.compiledApply("nested_rand_f", schema)
+    assert(compiled.isDefined, "the function should compile to a projection")
+    // build one projection's expressions on each of two threads
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val perThread = try {
+      Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Seq[Expression]] {
+        def call(): Seq[Expression] = compiled.get.boundExprs()
+      })).map(_.get())
+    } finally pool.shutdown()
+    val stateful = perThread.map(_.flatMap(_.collect { case x if x.stateful => x }))
+    assert(stateful.forall(_.size == 1), stateful)
+    // the stateful node sits below the root (rand(1) + a AS r)
+    assert(perThread.forall(_.forall(root => !root.stateful)))
+    assert(stateful(0).head ne stateful(1).head)
+    val out = engine.applyFunctionJsonRows("nested_rand_f", """{"a": 2}""")._2
+    assert(out.head.getDouble(0) >= 2.0 && out.head.getDouble(0) < 3.0)
+  }
+
   test("fetcher: url → (content, error) against a local HTTP fixture") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
