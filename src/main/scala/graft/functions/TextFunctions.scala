@@ -47,6 +47,26 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     size(tokens(text, "\\s+"))
 
+  /** Positional word n-grams: every `n`-token window of `toks` joined
+    * with `sep`, in document order. Empty below `n` tokens, null for a
+    * null array, null tokens skipped (as `concat_ws` skips them). One
+    * native loop per row ([[graft.plans.NGrams]]). */
+  def ngrams(toks: Column, n: Int, sep: String): Column =
+    graft.plans.NGrams.column(toks, n, sep)
+
+  /** Interpreted twin of [[ngrams]] (the pre-native per-position
+    * lambda) — differential-test oracle. Slow: every position copies
+    * its window, and the lambda re-evaluates `toks` once per position
+    * unless `toks` is a plain attribute. */
+  def ngramsReference(toks: Column, n: Int, sep: String): Column =
+    when(toks.isNotNull,
+      when(size(toks) >= n,
+        transform(sequence(lit(1), size(toks) - lit(n - 1)),
+          i => concat_ws(sep, slice(toks, i, lit(n)))))
+        .otherwise(emptyStrings))
+
+  private def emptyStrings: Column = array().cast("array<string>")
+
   /** Full `tokenize` option surface (reference config:
     * splitChars, ngramRange, minTokenLength —
     * `sql/builtin_functions.cc:1915`): bag of n-grams (nMin..nMax)
@@ -56,13 +76,9 @@ object TextFunctions {
       minTokenLength: Int = 1,
       splitRegex: String = "[\\s,;:!?.()\\[\\]{}\"']+"): Column = {
     val toks = filter(tokens(text, splitRegex), t => length(t) >= minTokenLength)
-    val grams = (nMin to nMax).map { n =>
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - lit(n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-    }.reduce(concat(_, _))
-    graft.plans.TokenCounts.column(grams)
+    graft.plans.TokenCounts.column((nMin to nMax)
+      .map(n => coalesce(ngrams(toks, n, " "), emptyStrings))
+      .reduce(concat(_, _)))
   }
 
   /** BPE-ish subword count approximation: words + punctuation runs +
@@ -78,9 +94,7 @@ object TextFunctions {
     * (< n tokens) yield one shingle of the whole doc. */
   def shingles(text: Column, n: Int): Column = {
     val toks = tokens(text)
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
+    when(size(toks) >= n, ngrams(toks, n, " "))
       .otherwise(array(concat_ws(" ", toks)))
   }
 
@@ -381,14 +395,10 @@ object TextFunctions {
         slice(toks, lit(offset + 1),
           if (limit >= 0) lit(limit) else size(toks))
       else toks
-    val grams: Column = (nMin to nMax).map[Column] { n =>
+    val bag = graft.plans.TokenCounts.column((nMin to nMax).map[Column] { n =>
       if (n == 1) windowed
-      else when(size(windowed) >= n,
-        transform(sequence(lit(1), size(windowed) - lit(n - 1)),
-          i => concat_ws("_", slice(windowed, i, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-    }.reduce((x, y) => concat(x, y))
-    val bag = graft.plans.TokenCounts.column(grams)
+      else coalesce(ngrams(windowed, n, "_"), emptyStrings)
+    }.reduce((x, y) => concat(x, y)))
     value match {
       case Some(v) => transform_values(bag, (_, _) => v)
       case None => bag

@@ -566,7 +566,12 @@ object Dedup {
     * identical fingerprint (hamming 0) or matching on any of 4
     * 16-bit chunks then hamming ≤ maxHamming (standard simhash
     * chunk-index trick: any pair within hamming 3 of 64 bits must
-    * agree on at least one of 4 chunks). */
+    * agree on at least one of 4 chunks).
+    *
+    * Eager by default, as [[hammingPairs]] is: the call persists and
+    * counts the fingerprints, then materializes the pairs with
+    * [[graft.core.DfOps.cut]]. `persistSignatures = false` is the
+    * plan-only path. */
   def simHashPairs(docs: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000,
       persistSignatures: Boolean = true): DataFrame =
@@ -578,7 +583,18 @@ object Dedup {
     * the candidate trick shared by text simhash and image dHash: any
     * pair within hamming `maxHamming` ≤ 3 of 64 bits must agree on at
     * least one of 4 16-bit chunks, so candidates = chunk-equality
-    * join, verified with the exact popcount. */
+    * join, verified with the exact popcount.
+    *
+    * Eager by default: with `persistSignatures = true` the call itself
+    * runs Spark jobs — it persists the signature frame and counts it,
+    * then materializes the pair set with [[graft.core.DfOps.cut]] and
+    * unpersists the signatures before returning. Building the frame
+    * therefore costs the full job even if it is never consumed, and
+    * the returned frame's lineage is cut (a `localCheckpoint`, not
+    * recoverable on executor loss unless `graft.checkpointDir` is
+    * set). `persistSignatures = false` is the plan-only path: no job
+    * at call time, a lazy frame with full lineage, at the price of
+    * recomputing the signatures once per consumer. */
   def hammingPairs(items: DataFrame, fingerprintCol: String, idCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000,
       persistSignatures: Boolean = true): DataFrame = {
@@ -668,7 +684,12 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup pairs: LSH-bucket on random-hyperplane
-    * sign bits, verify cosine within bucket. */
+    * sign bits, verify cosine within bucket.
+    *
+    * Eager by default, as [[hammingPairs]] is: the call persists and
+    * counts the bucketed vectors, then materializes the pairs with
+    * [[graft.core.DfOps.cut]], so the result's lineage is cut.
+    * `persistSignatures = false` is the plan-only path. */
   def embeddingPairs(emb: DataFrame, vecCol: String, idCol: String,
       minCosine: Double = 0.95, nBits: Int = 8,
       maxBucket: Int = 10000,

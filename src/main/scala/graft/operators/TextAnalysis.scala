@@ -633,9 +633,9 @@ object TextAnalysis {
     *     count × gramChars / total_chars, capped at 1 (overlaps are
     *     not position-deduped — the standard reimplementation).
     *
-    * Scale shape: pure per-row math — one native [[graft.plans.TokenCounts]]
-    * map build per (row, n), zero shuffles, zero windows; composes
-    * with any scan. */
+    * Scale shape: pure per-row math — one native [[graft.plans.NGrams]]
+    * gram build and one [[graft.plans.TokenCounts]] map build per
+    * (row, n), zero shuffles, zero windows; composes with any scan. */
   def gopherRepetition(docs: DataFrame, idCol: String, textCol: String,
       keep: Seq[String] = Nil): DataFrame = {
     val topNs = Seq(2, 3, 4)
@@ -671,13 +671,8 @@ object TextAnalysis {
     }
     // n-gram stats: grams joined with ' ', counted in one native map
     // build; char length excludes the n-1 joiners
-    def gramEntries(n: Int): Column = {
-      val grams = when(size(col("__w")) >= n,
-        transform(sequence(lit(1), size(col("__w")) - n + 1),
-          i => concat_ws(" ", slice(col("__w"), i, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-      map_entries(graft.plans.TokenCounts.column(grams))
-    }
+    def gramEntries(n: Int): Column =
+      map_entries(graft.plans.TokenCounts.column(T.ngrams(col("__w"), n, " ")))
     def gramChars(n: Int, e: Column): Column =
       e.getField("value").cast("long") *
         (length(e.getField("key")) - (n - 1))

@@ -226,6 +226,51 @@ object TokenCounts {
     GraftColumnBridge.column(TokenCounts(GraftColumnBridge.expression(tokens)))
 }
 
+/** Positional word n-grams in ONE pass: array<string> → the `n`-token
+  * windows joined with `sep`, in document order. Same output as the
+  * interpreted `transform(sequence(..), i => concat_ws(sep,
+  * slice(toks, i, n)))` (TextFunctions.ngramsReference): an empty
+  * array below `n` tokens, null for null input, null tokens skipped
+  * as concat_ws skips them. The lambda form re-evaluates any captured
+  * non-attribute expression once per position; this is one loop per
+  * row. */
+case class NGrams(child: Expression, n: Int, sep: String)
+    extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"n-gram width must be at least 1, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_ngrams"
+
+  private lazy val sepUtf8: UTF8String = UTF8String.fromString(sep)
+
+  override def nullSafeEval(input: Any): Any = {
+    val toks = input.asInstanceOf[ArrayData]
+    val m = toks.numElements()
+    if (m < n) return new GenericArrayData(Array.empty[Any])
+    val words = new Array[UTF8String](m)
+    var i = 0
+    while (i < m) {
+      if (!toks.isNullAt(i)) words(i) = toks.getUTF8String(i)
+      i += 1
+    }
+    // concatWs is ConcatWs's own join: it copies the bytes and skips nulls
+    val out = new Array[Any](m - n + 1)
+    var s = 0
+    while (s < out.length) {
+      out(s) = UTF8String.concatWs(sepUtf8, java.util.Arrays.copyOfRange(words, s, s + n): _*)
+      s += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def withNewChildInternal(c: Expression): NGrams = copy(child = c)
+}
+
+object NGrams {
+  def column(tokens: Column, n: Int, sep: String): Column =
+    GraftColumnBridge.column(NGrams(GraftColumnBridge.expression(tokens), n, sep))
+}
+
 /** 64-bit SimHash: array<long> token-hashes → long via per-bit
   * majority vote — same output as TextFunctions.simHash64's Column
   * formulation. */

@@ -231,8 +231,8 @@ object Procedures {
     * (ranged-with-__pid, tiny (__pid, __offset, __total) table). */
   private def withPartitionOffsets(df: DataFrame,
       orderBy: Seq[Column]): (DataFrame, DataFrame) = {
-    val nPart = try df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => 200 }
+    val nPart = df.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "200").toInt
     val ranged = df.repartitionByRange(math.max(nPart, 1), orderBy: _*)
       .withColumn("__pid", spark_partition_id())
     // ≤ nPart rows: the single-partition windows below are over a
@@ -381,8 +381,8 @@ object Procedures {
   def sequencePack(df: DataFrame, idCol: String, nTokensCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val nPart = try df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => 200 }
+    val nPart = df.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "200").toInt
     val ranged = pinRanged(
       df.repartitionByRange(math.max(nPart, 1), col(idCol))
         .withColumn("__pid", spark_partition_id())
@@ -425,8 +425,8 @@ object Procedures {
   def sequencePackGrouped(df: DataFrame, groupCol: String, idCol: String,
       nTokensCol: String, budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val nPart = try df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => 200 }
+    val nPart = df.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "200").toInt
     val ranged = pinRanged(df
       .repartitionByRange(math.max(nPart, 1), col(groupCol), col(idCol))
       .withColumn("__pid", spark_partition_id())
