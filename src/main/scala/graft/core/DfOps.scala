@@ -25,8 +25,9 @@ object DfOps {
     * blocks unrecoverable MID-JOB. Setting the session conf
     * `graft.checkpointDir` to a shared filesystem (HDFS/S3) switches
     * every cut in the engine to RELIABLE `Dataset.checkpoint()` — the
-    * right mode for the 100 TB target, mirroring
-    * `Dedup.minHashDedupTransitive`'s per-call `checkpointDir` option.
+    * right mode for the 100 TB target. It is the only switch: the Dedup
+    * pair finders and `Dedup.minHashDedupTransitive`'s closure loop cut
+    * through here too.
     */
   // the last root handed to setCheckpointDir (raw conf value, not the
   // qualified form Spark stores — comparing against getCheckpointDir

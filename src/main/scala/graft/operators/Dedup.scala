@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.core.DfOps
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for large text corpora.
@@ -12,6 +14,30 @@ import graft.functions.{TextFunctions => T, VectorFunctions => V}
   * signature/bucket key → per-bucket verification. No driver-side
   * state, no collect; candidate generation is O(rows·bands) and the
   * only quadratic work is within LSH buckets (bounded below).
+  *
+  * Every bucketed pair finder — [[minHashPairs]], [[hammingPairs]]
+  * and [[simHashPairs]], [[embeddingPairs]], [[semanticDedup]] and
+  * [[dedupAgainstIndex]] — is one shape, run by one private helper:
+  * signature → pin → bucket join → verify → cut → release. The
+  * signature frame feeds several consumers (the hot-bucket count, both
+  * join sides, the verify joins), so it is persisted MEMORY_AND_DISK
+  * and counted once; the pair plan is built over that pin, its result
+  * is materialized with [[graft.core.DfOps.cut]], and the pin is
+  * unpersisted before the call returns, also when the pair stage
+  * throws. Nothing cached survives the call.
+  *
+  * Every pair finder is therefore EAGER: the call itself runs Spark
+  * jobs (the pin's count, then the cut), even if the returned frame is
+  * never consumed, and that frame's lineage is cut (a
+  * `localCheckpoint`, not recoverable on executor loss unless the
+  * session conf `graft.checkpointDir` is set). Two entry points pay one
+  * job more than the shape alone: [[semanticDedup]] counts its cluster
+  * assignment before the pair stage reads it, and
+  * [[minHashDedupAgainst]] pins the band table of the existing corpus
+  * (it is [[buildIndex]] → [[dedupAgainstIndex]] → `release()`).
+  * Plan-only inspection uses the lazy `private[graft]` pair-plan
+  * functions the helper runs (`minHashPairPlan`, `hammingPairPlan`,
+  * `embeddingPairPlan`).
   */
 object Dedup {
 
@@ -46,6 +72,19 @@ object Dedup {
       .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
       .select(keyCols.map(col): _*)
     df.join(broadcast(hot), keyCols, "left_anti")
+  }
+
+  /** The one pair-finder shape (see [[Dedup]]): pin `signatures`, build
+    * `pairPlan` over the pin, cut its result, release the pin. The
+    * count materializes the pin NOW: the consumers of one action can
+    * run concurrently, and each would recompute an unfilled cache. */
+  private def pinned(signatures: DataFrame)(
+      pairPlan: DataFrame => DataFrame): DataFrame = {
+    val pin = signatures.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      pin.count()
+      DfOps.cut(pairPlan(pin))
+    } finally pin.unpersist(false)
   }
 
   /** Exact substring-span dedup (Lee et al. 2022, "Deduplicating
@@ -119,77 +158,82 @@ object Dedup {
     * on the band key. `maxBucket` drops degenerate buckets (e.g. empty
     * docs all hashing together) before the quadratic within-bucket
     * pairing — the standard guard that keeps worst-case work
-    * O(bucketCap²·buckets). */
+    * O(bucketCap²·buckets). Eager, like every pair finder: see
+    * [[Dedup]]. */
   def minHashPairs(docs: DataFrame, textCol: String, idCol: String,
       bands: Int = 8, rowsPerBand: Int = 4, shingleN: Int = 3,
-      threshold: Double = 0.7, maxBucket: Int = 1000,
-      persistSignatures: Boolean = true): DataFrame = {
-    val k = bands * rowsPerBand
-    // Stage 1 (map-side): one pass per doc — distinct HASHED shingles
-    // (longs, not strings: Jaccard over the hash sets is equivalent up
-    // to ~2^-64 collisions at ~6× less memory) + native minhash
-    // signature. Only (id, band, key) goes into the self-join. `base`
-    // feeds THREE consumers (band explode, signature prefilter, exact
-    // verify) — without persist each one re-reads the corpus and
-    // re-shingles, tripling the most expensive map stage;
-    // MEMORY_AND_DISK keeps the working set bounded at scale.
-    val base0 = docs.select(col(idCol).as("id"),
+      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
+    pinned(minHashSignatures(docs, textCol, idCol, shingleN, bands * rowsPerBand))(
+      minHashPairPlan(_, bands, rowsPerBand, threshold, maxBucket))
+
+  /** The lazy pair stage of [[minHashPairs]] over a signature frame:
+    * band candidates, deduplicated across bands BEFORE the expensive
+    * verification (a pair colliding in all 8 bands would otherwise be
+    * verified 8 times), then the prefilter and exact Jaccard. */
+  private[graft] def minHashPairPlan(sigs: DataFrame, bands: Int,
+      rowsPerBand: Int, threshold: Double, maxBucket: Int): DataFrame = {
+    val keys = bandKeys(sigs, bands, rowsPerBand, maxBucket)
+    verifyJaccard(bandCandidates(keys, keys).filter(col("id_a") < col("id_b")),
+      sigs, sigs, bands * rowsPerBand, threshold)
+  }
+
+  /** MinHash signature stage (map-side, one pass per doc): (id, sh, sig)
+    * — the distinct HASHED shingles (longs, not strings: Jaccard over
+    * the hash sets is equivalent up to ~2^-64 collisions at ~6× less
+    * memory) and the native k-component minhash signature. */
+  private[graft] def minHashSignatures(docs: DataFrame, textCol: String,
+      idCol: String, shingleN: Int, k: Int): DataFrame =
+    docs.select(col(idCol).as("id"),
       T.shingleHashes(col(textCol), shingleN).as("sh"))
       .withColumn("sig", T.minHashFromHashes(col("sh"), k))
-    val base = if (persistSignatures) {
-      val b = base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize NOW: the three downstream stages of one action can
-      // run concurrently, each recomputing an unfilled cache — an eager
-      // count guarantees exactly one shingling pass
-      b.count()
-      b
-    } else base0
-    val bandTable = base
+
+  /** Band-key stage: the (id, band, key) rows of a signature frame,
+    * hot buckets dropped by [[dropHotGroups]]. */
+  private[graft] def bandKeys(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+      maxBucket: Int): DataFrame =
+    dropHotGroups(sigs
       .select(col("id"), explode(T.minHashBands(col("sig"), bands, rowsPerBand)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.key").as("key"))
-    val pruned = dropHotGroups(bandTable, Seq("band", "key"), maxBucket)
-    // Stage 2: candidate pairs, deduplicated across bands BEFORE the
-    // expensive verification (a pair colliding in all 8 bands would
-    // otherwise be verified 8 times).
-    val cand = pruned.select(col("band"), col("key"), col("id").as("id_a"))
-      .join(pruned.select(col("band"), col("key"), col("id").as("id_b")),
+      .select(col("id"), col("b.band").as("band"), col("b.key").as("key")),
+      Seq("band", "key"), maxBucket)
+
+  /** Distinct (id_a, id_b) pairs whose rows share a band key; `id_a`
+    * comes from `keysA`, `id_b` from `keysB`. */
+  private[graft] def bandCandidates(keysA: DataFrame,
+      keysB: DataFrame): DataFrame =
+    keysA.select(col("band"), col("key"), col("id").as("id_a"))
+      .join(keysB.select(col("band"), col("key"), col("id").as("id_b")),
         Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    // Stage 3a: cheap prefilter on the minhash-ESTIMATED jaccard
-    // (fraction of agreeing signature components, std error ~1/sqrt(k))
-    // — signatures are k longs vs ~100-string shingle arrays, so this
-    // join moves far less data and discards hopeless candidates before
-    // the exact set arithmetic. Margin 3/sqrt(k) keeps recall ≈ 1.
+
+  /** Cheap prefilter on the minhash-ESTIMATED Jaccard (fraction of
+    * agreeing signature components, std error ~1/√k): signatures are k
+    * longs vs the full hashed shingle arrays, so this join moves far
+    * less data and discards hopeless band collisions before the exact
+    * set arithmetic. Margin 3/√k keeps recall ≈ 1. */
+  private[graft] def signaturePrefilter(cand: DataFrame, sigsA: DataFrame,
+      sigsB: DataFrame, k: Int, threshold: Double): DataFrame = {
     val margin = 3.0 / math.sqrt(k.toDouble)
-    val sigs = base.select(col("id"), col("sig"))
-    val prefiltered = cand
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+    cand
+      .join(sigsA.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(sigsB.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .withColumn("est",
         aggregate(zip_with(col("sig_a"), col("sig_b"),
           (x, y) => when(x === y, 1.0).otherwise(0.0)),
           lit(0.0), (acc, x) => acc + x) / k)
       .filter(col("est") >= threshold - margin)
       .select(col("id_a"), col("id_b"))
-    // Stage 3b: exact shingle-Jaccard verification of the survivors.
-    val verified = prefiltered
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+  }
+
+  /** Verify stage: [[signaturePrefilter]], then exact shingle-Jaccard
+    * verification of the survivors → (id_a, id_b, jaccard). */
+  private def verifyJaccard(cand: DataFrame, sigsA: DataFrame,
+      sigsB: DataFrame, k: Int, threshold: Double): DataFrame =
+    signaturePrefilter(cand, sigsA, sigsB, k, threshold)
+      .join(sigsA.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(sigsB.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         T.jaccardArrays(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (persistSignatures) {
-      // Materialize the (near-dup-sized, tiny vs corpus) pair set, then
-      // release the signature cache — repeated calls in one session
-      // would otherwise accumulate executor memory/disk until eviction.
-      // localCheckpoint also cuts the 3-consumer lineage, so downstream
-      // reuse (dedup / transitive closure) never re-runs the LSH.
-      val out = graft.core.DfOps.cut(verified)
-      base.unpersist(false)
-      out
-    } else verified
-  }
 
   /** MinHash-LSH dedup: drop every doc that has a verified near-dup
     * with a smaller id (single-link to the smallest id — one LSH pass,
@@ -209,36 +253,27 @@ object Dedup {
     * shape. Same banded LSH as `minHashPairs` but the candidate join is
     * new×existing (never existing×existing: the kept corpus is already
     * deduped and only pays one signature pass), and only the new side
-    * is filtered. At 100 TB the existing side's (id, band, key) table
-    * is the only thing that reshuffles per batch — consider persisting
-    * it alongside the corpus. */
+    * is filtered. One-shot use of [[buildIndex]] →
+    * [[dedupAgainstIndex]] → `release()`; build the index yourself when
+    * many batches hit the same corpus. */
   def minHashDedupAgainst(newDocs: DataFrame, existing: DataFrame,
       textCol: String, idCol: String,
       bands: Int = 8, rowsPerBand: Int = 4, shingleN: Int = 3,
       threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    val (newBase, oldBase, _, prefiltered) = incrementalCandidates(
-      newDocs, existing, textCol, idCol, bands, rowsPerBand, shingleN,
-      threshold, maxBucket)
-    val dupNew = prefiltered
-      .join(newBase.select(col("id").as("id_new"), col("sh").as("sh_new")), Seq("id_new"))
-      .join(oldBase.select(col("id").as("id_old"), col("sh").as("sh_old")), Seq("id_old"))
-      .filter(T.jaccardArrays(col("sh_new"), col("sh_old")) >= threshold)
-      .select(col("id_new").as("__dup_id")).distinct()
-    // materialize (policy: DfOps.cut), then release both signature
-    // caches (same session-leak fix as minHashPairs)
-    val dupNewPinned = graft.core.DfOps.cut(dupNew)
-    newBase.unpersist(false)
-    oldBase.unpersist(false)
-    newDocs.join(dupNewPinned, newDocs(idCol) === col("__dup_id"), "left_anti")
+    val index = buildIndex(existing, textCol, idCol, bands, rowsPerBand,
+      shingleN, maxBucket)
+    // dedupAgainstIndex is eager (its dup set is cut), so the result
+    // never reads the index caches released here
+    try dedupAgainstIndex(newDocs, index, textCol, idCol, threshold)
+    finally index.release()
   }
 
   /** A reusable LSH index over a kept corpus: signatures + banded
-    * bucket table, both persisted. `minHashDedupAgainst` re-shingles
-    * the existing corpus on EVERY call — correct for one-shot use,
-    * wasteful when the same corpus gates many batches (daily ingest,
-    * streaming). Build once, dedup many, `release()` when done. At
-    * 100 TB the band table is the thing to keep hot: it is the only
-    * corpus-derived input to each batch's candidate join. */
+    * bucket table, both persisted. Build once, dedup many, `release()`
+    * when done — the corpus is shingled once however many batches
+    * (daily ingest, streaming) it gates. At 100 TB the band table is
+    * the thing to keep hot: it is the only corpus-derived input to each
+    * batch's candidate join. */
   final case class MinHashIndex private[operators] (
       base: DataFrame, bandTable: DataFrame,
       bands: Int, rowsPerBand: Int, shingleN: Int, maxBucket: Int) {
@@ -251,160 +286,59 @@ object Dedup {
   def buildIndex(existing: DataFrame, textCol: String, idCol: String,
       bands: Int = 8, rowsPerBand: Int = 4, shingleN: Int = 3,
       maxBucket: Int = 1000): MinHashIndex = {
-    val k = bands * rowsPerBand
-    val base = existing.select(col(idCol).as("id"),
-      T.shingleHashes(col(textCol), shingleN).as("sh"))
-      .withColumn("sig", T.minHashFromHashes(col("sh"), k))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = minHashSignatures(existing, textCol, idCol, shingleN,
+      bands * rowsPerBand).persist(StorageLevel.MEMORY_AND_DISK)
     base.count()
-    val bandTable = dropHotGroups(base
-      .select(col("id"), explode(T.minHashBands(col("sig"), bands, rowsPerBand)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.key").as("key")),
-      Seq("band", "key"), maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandTable = bandKeys(base, bands, rowsPerBand, maxBucket)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     bandTable.count()
     MinHashIndex(base, bandTable, bands, rowsPerBand, shingleN, maxBucket)
   }
 
   /** Drop from `newDocs` everything that near-duplicates the indexed
-    * corpus — `minHashDedupAgainst` against a prebuilt index. Same
-    * pipeline shape: band-collision candidates → signature-estimate
-    * prefilter (margin 3/√k) → exact shingle-Jaccard verify →
-    * broadcast anti join of the dup ids. */
+    * corpus. Same stages as [[minHashPairs]]: band-collision
+    * candidates (new × indexed) → signature-estimate prefilter (margin
+    * 3/√k) → exact shingle-Jaccard verify → anti join of the dup ids.
+    * Eager, like every pair finder: see [[Dedup]]. */
   def dedupAgainstIndex(newDocs: DataFrame, index: MinHashIndex,
       textCol: String, idCol: String,
       threshold: Double = 0.7): DataFrame = {
     val k = index.bands * index.rowsPerBand
-    val newBase = newDocs.select(col(idCol).as("id"),
-      T.shingleHashes(col(textCol), index.shingleN).as("sh"))
-      .withColumn("sig", T.minHashFromHashes(col("sh"), k))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newBase.count()
-    val newBands = dropHotGroups(newBase
-      .select(col("id"),
-        explode(T.minHashBands(col("sig"), index.bands, index.rowsPerBand)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.key").as("key")),
-      Seq("band", "key"), index.maxBucket)
-    val cand = newBands.select(col("band"), col("key"), col("id").as("id_new"))
-      .join(index.bandTable.select(col("band"), col("key"), col("id").as("id_old")),
-        Seq("band", "key"))
-      .select(col("id_new"), col("id_old")).distinct()
-    val margin = 3.0 / math.sqrt(k.toDouble)
-    val prefiltered = cand
-      .join(newBase.select(col("id").as("id_new"), col("sig").as("sig_new")), Seq("id_new"))
-      .join(index.base.select(col("id").as("id_old"), col("sig").as("sig_old")), Seq("id_old"))
-      .withColumn("est",
-        aggregate(zip_with(col("sig_new"), col("sig_old"),
-          (x, y) => when(x === y, 1.0).otherwise(0.0)),
-          lit(0.0), (acc, x) => acc + x) / k)
-      .filter(col("est") >= threshold - margin)
-      .select(col("id_new"), col("id_old"))
-    val dupNew = prefiltered
-      .join(newBase.select(col("id").as("id_new"), col("sh").as("sh_new")), Seq("id_new"))
-      .join(index.base.select(col("id").as("id_old"), col("sh").as("sh_old")), Seq("id_old"))
-      .filter(T.jaccardArrays(col("sh_new"), col("sh_old")) >= threshold)
-      .select(col("id_new").as("__dup_id")).distinct()
-    val dupNew2 = graft.core.DfOps.cut(dupNew)
-    newBase.unpersist(false)
+    val dupNew = pinned(minHashSignatures(newDocs, textCol, idCol,
+        index.shingleN, k)) { sigs =>
+      val keys = bandKeys(sigs, index.bands, index.rowsPerBand, index.maxBucket)
+      verifyJaccard(bandCandidates(keys, index.bandTable), sigs, index.base,
+        k, threshold)
+        .select(col("id_a").as("__dup_id")).distinct()
+    }
     // no broadcast hint: the dup set is batch-sized in the worst case
     // (a fully-duplicated batch); AQE picks broadcast when it is small
-    newDocs.join(dupNew2, newDocs(idCol) === col("__dup_id"), "left_anti")
-  }
-
-  /** The candidate-generation front of `minHashDedupAgainst`, exposed
-    * package-private so tests can measure how much the
-    * signature-estimate prefilter shrinks the exact-verify join.
-    * Returns (newBase, oldBase, bandCandidates, prefiltered); the two
-    * bases are persisted — the caller must unpersist them. */
-  private[graft] def incrementalCandidates(newDocs: DataFrame,
-      existing: DataFrame, textCol: String, idCol: String,
-      bands: Int, rowsPerBand: Int, shingleN: Int,
-      threshold: Double, maxBucket: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val k = bands * rowsPerBand
-    def sigs(docs: DataFrame) = docs.select(col(idCol).as("id"),
-      T.shingleHashes(col(textCol), shingleN).as("sh"))
-      .withColumn("sig", T.minHashFromHashes(col("sh"), k))
-    def bandTable(base: DataFrame) = dropHotGroups(base
-      .select(col("id"), explode(T.minHashBands(col("sig"), bands, rowsPerBand)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.key").as("key")),
-      Seq("band", "key"), maxBucket)
-    val newBase = sigs(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    newBase.count()
-    val oldBase = sigs(existing)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    oldBase.count()
-    val cand = bandTable(newBase).select(col("band"), col("key"), col("id").as("id_new"))
-      .join(bandTable(oldBase).select(col("band"), col("key"), col("id").as("id_old")),
-        Seq("band", "key"))
-      .select(col("id_new"), col("id_old")).distinct()
-    // Cheap prefilter on the minhash-ESTIMATED Jaccard (mirrors
-    // minHashPairs stage 3a): signatures are k longs vs the full hashed
-    // shingle arrays, so band-collision false positives are discarded
-    // before the heaviest join (both shingle sets) ever runs.
-    val margin = 3.0 / math.sqrt(k.toDouble)
-    val prefiltered = cand
-      .join(newBase.select(col("id").as("id_new"), col("sig").as("sig_new")), Seq("id_new"))
-      .join(oldBase.select(col("id").as("id_old"), col("sig").as("sig_old")), Seq("id_old"))
-      .withColumn("est",
-        aggregate(zip_with(col("sig_new"), col("sig_old"),
-          (x, y) => when(x === y, 1.0).otherwise(0.0)),
-          lit(0.0), (acc, x) => acc + x) / k)
-      .filter(col("est") >= threshold - margin)
-      .select(col("id_new"), col("id_old"))
-    (newBase, oldBase, cand, prefiltered)
+    newDocs.join(dupNew, newDocs(idCol) === col("__dup_id"), "left_anti")
   }
 
   /** MinHash-LSH dedup with TRANSITIVE closure: a chain A~B~C (A and C
     * not directly similar) collapses to one keeper, unlike the
-    * single-link `minHashDedup`. Connected components via iterative
-    * min-label propagation over the verified-pairs graph — the graph is
-    * orders of magnitude smaller than the corpus (only near-dup rows
-    * appear), each iteration is one shuffle on the node id, and
-    * convergence takes O(component diameter) ≤ maxIter rounds.
-    * A checkpoint cuts the growing lineage each round so the plan
-    * stays bounded. By default that is `localCheckpoint` (executor
-    * block store — fine single-JVM and fastest), but on a real
-    * cluster a lost/preempted executor makes localCheckpoint blocks
-    * unrecoverable MID-ITERATION, killing the whole job. Pass
-    * `checkpointDir` (HDFS/S3/any shared FS) to switch every cut to
-    * RELIABLE `Dataset.checkpoint()` so the closure loop survives
-    * executor loss — the right mode for the 100 TB target. */
+    * single-link `minHashDedup`. Connected components of the
+    * verified-pairs graph by [[connectedComponentsStar]] (Kiveris et
+    * al. large-star/small-star: O(log n) rounds regardless of how ids
+    * are laid out along the graph, where [[connectedComponents]]'
+    * pointer jumping degrades to O(diameter) on value-scrambled ids) —
+    * the graph is orders of magnitude smaller than the corpus (only
+    * near-dup rows appear). A [[graft.core.DfOps.cut]] bounds the
+    * growing lineage each round, so the session conf
+    * `graft.checkpointDir` (HDFS/S3/any shared FS) switches the closure
+    * loop to RELIABLE checkpoints that survive executor loss — the
+    * right mode for the 100 TB target. */
   def minHashDedupTransitive(docs: DataFrame, textCol: String, idCol: String,
       bands: Int = 8, rowsPerBand: Int = 4, shingleN: Int = 3,
       threshold: Double = 0.7, maxIter: Int = 20,
-      maxBucket: Int = 1000, checkpointDir: Option[String] = None): DataFrame = {
-    val cut: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        docs.sparkSession.sparkContext.setCheckpointDir(dir)
-        // statsSafe: clamp the carried origin stats, or the closure
-        // loop's per-round join products compound into a
-        // BigInteger-overflowing tower (DfOps.cut does the same)
-        df => graft.core.DfOps.statsSafe(df.checkpoint())
-      // no explicit dir: the engine-wide policy (session conf
-      // `graft.checkpointDir` → reliable, else localCheckpoint)
-      case None => graft.core.DfOps.cut
-    }
+      maxBucket: Int = 1000): DataFrame = {
     val pairs = minHashPairs(docs, textCol, idCol, bands, rowsPerBand,
       shingleN, threshold, maxBucket).select(col("id_a"), col("id_b"))
-    // session conf `graft.cc.algorithm`: "star" (default — Kiveris et
-    // al. large-star/small-star, O(log n) rounds GUARANTEED regardless
-    // of how ids are laid out along the graph) or "jump" (min-label
-    // propagation + pointer jumping, 2 shuffles/round, but O(graph
-    // diameter) rounds when ids are value-scrambled relative to
-    // adjacency — see [[connectedComponents]]'s caveat; measured
-    // non-converged at 50 rounds on a 332-node scrambled cycle that
-    // star closes in 8). Both converge to the same labels (component
-    // min id) — OperatorsSpec proves bit-equality where both converge.
-    val algo = docs.sparkSession.conf
-      .getOption("graft.cc.algorithm").getOrElse("star")
-    val (labels, _) =
-      if (algo == "jump") connectedComponents(pairs, maxIter, cut)
-      // minHashPairs emits distinct verified (id_a < id_b) pairs, so
-      // star contraction can skip its canonicalize-distinct shuffle
-      else connectedComponentsStar(pairs, maxIter, cut,
-        pairsCanonical = true)
+    // minHashPairs emits distinct verified (id_a < id_b) pairs, so
+    // star contraction can skip its canonicalize-distinct shuffle
+    val (labels, _) = connectedComponentsStar(pairs, maxIter,
+      pairsCanonical = true)
     val dupIds = labels.filter(col("label") =!= col("id"))
       .select(col("id").as("__dup_id"))
     docs.join(dupIds, docs(idCol) === col("__dup_id"), "left_anti")
@@ -427,16 +361,16 @@ object Dedup {
     * the min still travels ONE HOP per round, and convergence
     * degrades to O(component diameter): measured NOT converged after
     * 50 rounds where [[connectedComponentsStar]] closes in 8. Star
-    * contraction is therefore the default in minHashDedupTransitive;
-    * this formulation remains for ordered-id graphs where its 2
-    * shuffles/round are cheaper. Returns (labels(id, label),
-    * rounds). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      cut: DataFrame => DataFrame = graft.core.DfOps.cut): (DataFrame, Int) = {
-    val edges = cut(pairs
+    * contraction is therefore what minHashDedupTransitive runs; this
+    * formulation remains as the reference the star specs compare
+    * against, and for ordered-id graphs where its 2 shuffles/round are
+    * cheaper. Returns (labels(id, label), rounds). */
+  def connectedComponents(pairs: DataFrame,
+      maxIter: Int = 20): (DataFrame, Int) = {
+    val edges = DfOps.cut(pairs
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .distinct())
-    var labels = cut(edges.select(col("id_a").as("id")).distinct()
+    var labels = DfOps.cut(edges.select(col("id_a").as("id")).distinct()
       .withColumn("label", col("id")))
     var converged = edges.isEmpty
     var i = 0
@@ -455,7 +389,7 @@ object Dedup {
       // is a limit-1 scan of the frame the checkpoint just materialized
       // — no extra join-against-old-labels job per round.
       val parents = l1.select(col("id").as("label"), col("label").as("__plabel"))
-      val updated = cut(l1.join(parents, Seq("label"), "left")
+      val updated = DfOps.cut(l1.join(parents, Seq("label"), "left")
         .select(col("id"),
           coalesce(col("__plabel"), col("label")).as("label"),
           (coalesce(col("__plabel"), col("label")) =!= col("__old")).as("__chg")))
@@ -484,8 +418,8 @@ object Dedup {
     * labels, bit-for-bit (OperatorsSpec proves equality on chain /
     * star / mixed graphs, and against a union-find oracle on the
     * scrambled cycle where jump does not converge). Convergence is
-    * O(log n) rounds REGARDLESS of id layout — the property that made
-    * it the default (`graft.cc.algorithm`, minHashDedupTransitive):
+    * O(log n) rounds REGARDLESS of id layout — the property that makes
+    * minHashDedupTransitive run it:
     * on an ordered 500-link chain it matches pointer jumping (10 vs 9
     * rounds; ours already path-doubles), and on a value-scrambled
     * 332-cycle it closes in 8 rounds where pointer jumping is still
@@ -495,7 +429,6 @@ object Dedup {
     * (state lives IN the shrinking edge set). Returns (labels(id,
     * label), rounds). */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-      cut: DataFrame => DataFrame = graft.core.DfOps.cut,
       pairsCanonical: Boolean = false): (DataFrame, Int) = {
     // canonical (larger u, smaller v) edges, self-loops dropped.
     // `pairsCanonical` skips the distinct shuffle when the caller
@@ -506,7 +439,7 @@ object Dedup {
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
     val e0 = if (pairsCanonical) e0raw else e0raw.distinct()
-    var edges = cut(e0)
+    var edges = DfOps.cut(e0)
     var i = 0
     var done = edges.isEmpty
     while (!done && i < maxIter) {
@@ -529,7 +462,7 @@ object Dedup {
           .select(col("v").as("u"), col("m").as("v"))
         .union(withMin.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
-      val next = cut(rewired)
+      val next = DfOps.cut(rewired)
       // fixpoint test: `next` IS a star forest — every child u has
       // exactly one parent edge and no parent v is itself a child.
       // Equivalent to the set-equality check it replaces (both star
@@ -566,52 +499,32 @@ object Dedup {
     * identical fingerprint (hamming 0) or matching on any of 4
     * 16-bit chunks then hamming ≤ maxHamming (standard simhash
     * chunk-index trick: any pair within hamming 3 of 64 bits must
-    * agree on at least one of 4 chunks).
-    *
-    * Eager by default, as [[hammingPairs]] is: the call persists and
-    * counts the fingerprints, then materializes the pairs with
-    * [[graft.core.DfOps.cut]]. `persistSignatures = false` is the
-    * plan-only path. */
+    * agree on at least one of 4 chunks). Eager, like every pair
+    * finder: see [[Dedup]]. */
   def simHashPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 1000,
-      persistSignatures: Boolean = true): DataFrame =
+      maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
     hammingPairs(docs.select(col(idCol).as("id"),
       T.simHash64(col(textCol)).as("sim")), "sim", "id",
-      maxHamming, maxBucket, persistSignatures)
+      maxHamming, maxBucket)
 
   /** Near-dup pairs among 64-bit fingerprints by hamming distance —
     * the candidate trick shared by text simhash and image dHash: any
     * pair within hamming `maxHamming` ≤ 3 of 64 bits must agree on at
     * least one of 4 16-bit chunks, so candidates = chunk-equality
-    * join, verified with the exact popcount.
-    *
-    * Eager by default: with `persistSignatures = true` the call itself
-    * runs Spark jobs — it persists the signature frame and counts it,
-    * then materializes the pair set with [[graft.core.DfOps.cut]] and
-    * unpersists the signatures before returning. Building the frame
-    * therefore costs the full job even if it is never consumed, and
-    * the returned frame's lineage is cut (a `localCheckpoint`, not
-    * recoverable on executor loss unless `graft.checkpointDir` is
-    * set). `persistSignatures = false` is the plan-only path: no job
-    * at call time, a lazy frame with full lineage, at the price of
-    * recomputing the signatures once per consumer. */
+    * join, verified with the exact popcount. The pin holds the
+    * fingerprints (simhash/dHash: tokenize + per-token hash + 64
+    * accumulators per row), read by the hot-chunk count and both join
+    * sides. Eager, like every pair finder: see [[Dedup]]. */
   def hammingPairs(items: DataFrame, fingerprintCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 1000,
-      persistSignatures: Boolean = true): DataFrame = {
-    val withSig0 = items.select(col(idCol).as("id"),
-      col(fingerprintCol).as("sim")).filter(col("sim").isNotNull)
-    // The fingerprint expression (simhash/dHash: tokenize + per-token
-    // hash + 64 accumulators per row) feeds THREE consumers — the
-    // hot-chunk count, and both sides of the self-join. Without the
-    // pin each consumer recomputes it, tripling the most expensive
-    // map stage (the minHashPairs discipline, r15: measured 3 full
-    // fingerprint passes in the q47 plan before).
-    val withSig = if (persistSignatures) {
-      val w = withSig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      w.count() // materialize NOW: concurrent fills would each recompute
-      w
-    } else withSig0
-    val chunked0 = withSig.withColumn("chunk", explode(array(
+      maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
+    pinned(items.select(col(idCol).as("id"),
+      col(fingerprintCol).as("sim")).filter(col("sim").isNotNull))(
+      hammingPairPlan(_, maxHamming, maxBucket))
+
+  /** The lazy pair stage of [[hammingPairs]] over an (id, sim) frame. */
+  private[graft] def hammingPairPlan(fingerprints: DataFrame,
+      maxHamming: Int, maxBucket: Int): DataFrame = {
+    val chunked0 = fingerprints.withColumn("chunk", explode(array(
       (0 until 4).map(i => struct(lit(i).as("i"),
         shiftrightunsigned(col("sim"), i * 16).bitwiseAND(lit(0xFFFFL)).as("v"))): _*)))
     // Degenerate-bucket guard (same as minHashPairs): a hot chunk value
@@ -620,18 +533,10 @@ object Dedup {
     val chunked = dropHotGroups(chunked0, Seq("chunk"), maxBucket)
     val a = chunked.select(col("chunk"), col("id").as("id_a"), col("sim").as("sim_a"))
     val b = chunked.select(col("chunk"), col("id").as("id_b"), col("sim").as("sim_b"))
-    val pairs = a.join(b, Seq("chunk")).filter(col("id_a") < col("id_b"))
+    a.join(b, Seq("chunk")).filter(col("id_a") < col("id_b"))
       .withColumn("hamming", T.hamming64(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .groupBy(col("id_a"), col("id_b")).agg(min(col("hamming")).as("hamming"))
-    if (persistSignatures) {
-      // materialize the (near-dup-sized) pair set, release the cache —
-      // same persist→use→unpersist-within-one-invocation shape as
-      // minHashPairs; nothing survives the call
-      val out = graft.core.DfOps.cut(pairs)
-      withSig.unpersist(false)
-      out
-    } else pairs
   }
 
   /** Exact dedup of an incoming batch AGAINST a kept corpus with a
@@ -684,62 +589,32 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup pairs: LSH-bucket on random-hyperplane
-    * sign bits, verify cosine within bucket.
-    *
-    * Eager by default, as [[hammingPairs]] is: the call persists and
-    * counts the bucketed vectors, then materializes the pairs with
-    * [[graft.core.DfOps.cut]], so the result's lineage is cut.
-    * `persistSignatures = false` is the plan-only path. */
+    * sign bits, verify cosine within bucket. The pin holds the
+    * bucketed vectors, so the corpus scan and the per-row LSH mat-vec
+    * run once for the hot-bucket count and both join sides. Eager,
+    * like every pair finder: see [[Dedup]]. */
   def embeddingPairs(emb: DataFrame, vecCol: String, idCol: String,
       minCosine: Double = 0.95, nBits: Int = 8,
-      maxBucket: Int = 10000,
-      persistSignatures: Boolean = true): DataFrame = {
-    val withB0 = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", V.lshBucket(col("v"), nBits))
-    // the bucketed frame feeds THREE consumers (hot-bucket count, both
-    // self-join sides) — pin it so the corpus scan + per-row LSH
-    // mat-vec run once, not three times (the minHashPairs discipline,
-    // r15; persist→use→unpersist inside this one invocation)
-    val withBp = if (persistSignatures) {
-      val w = withB0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      w.count()
-      w
-    } else withB0
+      maxBucket: Int = 10000): DataFrame =
+    pinned(emb.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .withColumn("bucket", V.lshBucket(col("v"), nBits)))(
+      embeddingPairPlan(_, minCosine, maxBucket))
+
+  /** The lazy pair stage of [[embeddingPairs]] over an (id, v, bucket)
+    * frame. */
+  private[graft] def embeddingPairPlan(bucketed: DataFrame,
+      minCosine: Double, maxBucket: Int): DataFrame = {
     // Hot-bucket guard: near-identical embeddings (zero vectors, padding
     // artifacts) all land in one hyperplane bucket → quadratic verify.
-    val withB = dropHotGroups(withBp, Seq("bucket"), maxBucket)
+    val withB = dropHotGroups(bucketed, Seq("bucket"), maxBucket)
     val a = withB.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
     val b = withB.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    val pairs = a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
+    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
       .withColumn("cosine", V.cosine(col("v_a"), col("v_b")))
       .filter(col("cosine") >= minCosine)
       .select(col("id_a"), col("id_b"), col("cosine")).distinct()
-    if (persistSignatures) {
-      val out = graft.core.DfOps.cut(pairs)
-      withBp.unpersist(false)
-      out
-    } else pairs
   }
 
-  /** SemDeDup-style semantic dedup (Abbas et al. 2023,
-    * arXiv:2303.09540): assign every embedding to its nearest centroid
-    * by dot product, verify cosine only WITHIN each cluster, and from
-    * every near-duplicate pair drop the row MORE similar to its
-    * centroid (the paper keeps the low-centroid-similarity example as
-    * the more informative one; ties drop the larger id).
-    *
-    * Scale shape: the centroid table rides in the plan as literals
-    * (k·dim doubles), so assignment is pure map-side codegen'd math —
-    * ZERO shuffle; the only shuffle is the per-cluster self-join,
-    * quadratic within a cluster and bounded by `maxCluster` via
-    * [[dropHotGroups]]. At 100 TB the centroid count is the knob:
-    * k ~ n/maxCluster keeps every cluster join-sized while the
-    * centroid literal stays a few hundred KB. Differs from
-    * [[embeddingPairs]] (hyperplane LSH buckets) in that clusters are
-    * data-adaptive — pass k-means centroids for the paper's behavior,
-    * or any fixed matrix for a deterministic coarse partition.
-    *
-    * Returns survivors as (id, cluster, csim). */
   /** Shared assignment stage of the semantic-dedup family: every row
     * gets (id, v, vn unit-normalized, cluster, csim) from ONE native
     * matrix-vector eval against the plan-literal centroids — pure
@@ -787,53 +662,68 @@ object Dedup {
   private def q8Margin(dim: Int): Double =
     2.0 * math.sqrt(dim.toDouble) / 255.0 + dim.toDouble / (255.0 * 255.0)
 
+  /** SemDeDup-style semantic dedup (Abbas et al. 2023,
+    * arXiv:2303.09540): assign every embedding to its nearest centroid
+    * by dot product, verify cosine only WITHIN each cluster, and from
+    * every near-duplicate pair drop the row MORE similar to its
+    * centroid (the paper keeps the low-centroid-similarity example as
+    * the more informative one; ties drop the larger id).
+    *
+    * Scale shape: the centroid table rides in the plan as literals
+    * (k·dim doubles), so assignment is pure map-side codegen'd math —
+    * ZERO shuffle; the only shuffle is the per-cluster self-join,
+    * quadratic within a cluster and bounded by `maxCluster` via
+    * [[dropHotGroups]]. At 100 TB the centroid count is the knob:
+    * k ~ n/maxCluster keeps every cluster join-sized while the
+    * centroid literal stays a few hundred KB. Differs from
+    * [[embeddingPairs]] (hyperplane LSH buckets) in that clusters are
+    * data-adaptive — pass k-means centroids for the paper's behavior,
+    * or any fixed matrix for a deterministic coarse partition.
+    *
+    * The pin holds the assignment, read by the hot-cluster count, both
+    * self-join sides and the two exact-rescore joins; the final
+    * anti-join's map-side re-evaluation is the only repeat. Eager, like
+    * every pair finder: see [[Dedup]].
+    *
+    * Returns survivors as (id, cluster, csim). */
   def semanticDedup(emb: DataFrame, vecCol: String, idCol: String,
       centroids: Array[Array[Double]], minCosine: Double = 0.95,
       maxCluster: Int = 10000): DataFrame = {
-    // The assignment (a dim×centroids mat-vec per row) feeds FIVE
-    // consumers below (hot-cluster count, both self-join sides, two
-    // exact-rescore joins) — persist it so the matrix math runs once,
-    // then (after pinning the small loser set) release the cache; the
-    // final anti-join's map-side re-evaluation is the only repeat.
-    // Same discipline as minHashPairs' signature cache.
-    val assigned = assignClusters(emb, vecCol, idCol, centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val guarded = dropHotGroups(assigned, Seq("cluster"), maxCluster)
     // Quantized prefilter over the quadratic stage: the self-join scans
     // 64-BYTE int8 codes (8× less payload than array<double>) and keeps
     // only pairs whose integer-exact approximate dot clears
     // minCosine − ε, where ε bounds the quantization error for unit
     // vectors — so NO true pair is ever dropped and the exact re-score
-    // below makes the result bit-identical to the unquantized
-    // formulation (differential-tested in OperatorsSpec).
+    // makes the result bit-identical to the unquantized formulation
+    // (differential-tested in OperatorsSpec).
     val eps = q8Margin(centroids.headOption.map(_.length).getOrElse(0))
     val q = graft.plans.VectorExprs.quantizeUnit8(col("vn"))
-    val a = guarded.select(col("cluster"), col("id").as("id_a"),
-      q.as("q_a"), col("csim").as("csim_a"))
-    val b = guarded.select(col("cluster"), col("id").as("id_b"),
-      q.as("q_b"), col("csim").as("csim_b"))
-    val candidates = a.join(b, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(graft.plans.VectorExprs.dotQ8(col("q_a"), col("q_b")) >=
-        minCosine - eps)
-      .select(col("id_a"), col("id_b"), col("csim_a"), col("csim_b"))
-    // Exact re-score: only the (rare) candidate pairs touch the full
-    // vectors again — the quantizedTopK rerank shape.
-    val losers = candidates
-      .join(assigned.select(col("id").as("id_a"), col("vn").as("vn_a")),
-        Seq("id_a"))
-      .join(assigned.select(col("id").as("id_b"), col("vn").as("vn_b")),
-        Seq("id_b"))
-      .filter(V.dot(col("vn_a"), col("vn_b")) >= minCosine)
-      .select(when(col("csim_a") > col("csim_b") ||
-          (col("csim_a") === col("csim_b") && col("id_a") > col("id_b")),
-        col("id_a")).otherwise(col("id_b")).as("id"))
-      .distinct()
-    // pin the (near-dup-sized, tiny vs corpus) loser set, then release
-    // the assignment cache — the quadratic stages above all read it
-    val losersPinned = graft.core.DfOps.cut(losers)
-    assigned.unpersist(false)
-    assigned.join(losersPinned, Seq("id"), "left_anti")
+    val assigned = assignClusters(emb, vecCol, idCol, centroids)
+    val losers = pinned(assigned) { pin =>
+      val guarded = dropHotGroups(pin, Seq("cluster"), maxCluster)
+      val a = guarded.select(col("cluster"), col("id").as("id_a"),
+        q.as("q_a"), col("csim").as("csim_a"))
+      val b = guarded.select(col("cluster"), col("id").as("id_b"),
+        q.as("q_b"), col("csim").as("csim_b"))
+      val candidates = a.join(b, Seq("cluster"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(graft.plans.VectorExprs.dotQ8(col("q_a"), col("q_b")) >=
+          minCosine - eps)
+        .select(col("id_a"), col("id_b"), col("csim_a"), col("csim_b"))
+      // Exact re-score: only the (rare) candidate pairs touch the full
+      // vectors again — the quantizedTopK rerank shape.
+      candidates
+        .join(pin.select(col("id").as("id_a"), col("vn").as("vn_a")),
+          Seq("id_a"))
+        .join(pin.select(col("id").as("id_b"), col("vn").as("vn_b")),
+          Seq("id_b"))
+        .filter(V.dot(col("vn_a"), col("vn_b")) >= minCosine)
+        .select(when(col("csim_a") > col("csim_b") ||
+            (col("csim_a") === col("csim_b") && col("id_a") > col("id_b")),
+          col("id_a")).otherwise(col("id_b")).as("id"))
+        .distinct()
+    }
+    assigned.join(losers, Seq("id"), "left_anti")
       .select(col("id"), col("cluster"), col("csim"))
   }
 
@@ -869,7 +759,7 @@ object Dedup {
       maxCluster: Int = 10000): SemanticIndex = {
     val a = assignClusters(corpus, vecCol, idCol, centroids)
       .withColumn("q", graft.plans.VectorExprs.quantizeUnit8(col("vn")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     a.count() // materialize now: one assignment pass gates every batch
     SemanticIndex(a, centroids, maxCluster)
   }

@@ -168,14 +168,18 @@ class OperatorsSpec extends AnyFunSuite {
     // and broadcast the over-cap keys back — a Window.partitionBy over
     // the bucket key would shuffle every exploded row of a hot bucket
     // into one straggler task at scale
+    // audit the LAZY pair-plan stages the pin helper runs — the
+    // finders themselves cut the pair set, which hides the LSH stages
+    // from the final plan
     val plans = Seq(
-      Dedup.minHashPairs(doubled, "text", "doc_id", persistSignatures = false),
-      // persistSignatures=false: audit the LAZY pipeline — the
-      // production path eagerly checkpoints the pair set (r15), which
-      // hides the LSH stages from the final plan (minHashPairs' shape)
-      Dedup.simHashPairs(doubled, "text", "doc_id", persistSignatures = false),
-      Dedup.embeddingPairs(Tables.embeddings(spark, sf), "embedding", "vec_id",
-        persistSignatures = false))
+      Dedup.minHashPairPlan(
+        Dedup.minHashSignatures(doubled, "text", "doc_id", 3, 32), 8, 4, 0.7, 1000),
+      Dedup.hammingPairPlan(doubled.select(col("doc_id").as("id"),
+        graft.functions.TextFunctions.simHash64(col("text")).as("sim")), 3, 1000),
+      Dedup.embeddingPairPlan(Tables.embeddings(spark, sf)
+        .select(col("vec_id").as("id"), col("embedding").as("v"))
+        .withColumn("bucket",
+          graft.functions.VectorFunctions.lshBucket(col("v"), 8)), 0.95, 10000))
       .map(_.queryExecution.executedPlan.toString)
     plans.foreach { p =>
       assert(!p.contains("Window"), s"window in an LSH plan:\n${p.take(3000)}")
@@ -270,48 +274,46 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rJumpR == 50 && jumpR != truth,
       "pointer jumping now converges on the scrambled cycle — " +
         "revisit the default-algorithm choice and this pin")
-    // and the conf switch actually routes minHashDedupTransitive:
-    // star is the default; "jump" opts back into pointer jumping
-    val base = (0 until 40).map(i => s"tok$i").mkString(" ")
-    val b = (4 until 44).map(i => s"tok$i").mkString(" ")
-    val c = (8 until 48).map(i => s"tok$i").mkString(" ")
-    val docs = Seq((1L, base), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val keptDefault = Dedup.minHashDedupTransitive(docs, "text", "doc_id",
-      bands = 16, rowsPerBand = 2, threshold = 0.75)
-      .select("doc_id").as[Long].collect().toSet
-    assert(keptDefault === Set(1L))
-    spark.conf.set("graft.cc.algorithm", "jump")
-    try {
-      val kept = Dedup.minHashDedupTransitive(docs, "text", "doc_id",
-        bands = 16, rowsPerBand = 2, threshold = 0.75)
-        .select("doc_id").as[Long].collect().toSet
-      assert(kept === Set(1L))
-    } finally spark.conf.unset("graft.cc.algorithm")
   }
 
   test("transitive dedup with RELIABLE checkpointing matches localCheckpoint " +
       "exactly (cluster fault-tolerance mode)") {
     import spark.implicits._
-    // localCheckpoint blocks die with a lost executor; checkpointDir
-    // switches every lineage cut to reliable Dataset.checkpoint().
-    // Same corpus, both modes, identical survivor set — and the
-    // checkpoint dir actually receives RDD checkpoint data.
+    // localCheckpoint blocks die with a lost executor; the session
+    // conf graft.checkpointDir switches every lineage cut (DfOps.cut)
+    // to reliable Dataset.checkpoint(). Same corpus, both modes,
+    // identical survivor set — and the checkpoint dir actually
+    // receives RDD checkpoint data.
     val docs = graft.core.Tables.documents(spark, sf).limit(400)
       .select(col("doc_id"), col("text"))
     val base = Dedup.minHashDedupTransitive(docs, "text", "doc_id")
       .select("doc_id").as[Long].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    spark.conf.set("graft.checkpointDir", dir)
     try {
-      val reliable = Dedup.minHashDedupTransitive(docs, "text", "doc_id",
-        checkpointDir = Some(dir))
+      val reliable = Dedup.minHashDedupTransitive(docs, "text", "doc_id")
         .select("doc_id").as[Long].collect().toSet
       assert(reliable === base && base.nonEmpty)
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "reliable mode must write checkpoint files")
     } finally {
+      spark.conf.unset("graft.checkpointDir")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("a pair finder whose pair stage throws still releases its pin") {
+    import spark.implicits._
+    // map-typed ids pass the signature stage (select, pin, count) but
+    // cannot be ordered, so the pair stage's id_a < id_b fails
+    val items = Seq((1L, 7L), (2L, 7L)).toDF("k", "fp")
+      .select(map(lit("k"), col("k")).as("id"), col("fp"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException](
+      Dedup.hammingPairs(items, "fp", "id"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before,
+      "the failed call left its signature pin persisted")
   }
 
   test("global ranking matches the single-window formulation exactly") {
@@ -371,15 +373,17 @@ class OperatorsSpec extends AnyFunSuite {
     val incoming = (1 to 30).map(sh =>
       (100L + sh, (sh until sh + 60).map(i => s"tok$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val (nb, ob, cand, pre) = Dedup.incrementalCandidates(
-      incoming, existing, "text", "doc_id",
-      bands = 16, rowsPerBand = 2, shingleN = 3,
-      threshold = 0.95, maxBucket = 1000)
+    // the shared MinHash stages of dedupAgainstIndex: 16 bands × 2
+    // rows, 3-token shingles, hot-bucket cap 1000
+    val nb = Dedup.minHashSignatures(incoming, "text", "doc_id", 3, 32)
+    val ob = Dedup.minHashSignatures(existing, "text", "doc_id", 3, 32)
+    val cand = Dedup.bandCandidates(Dedup.bandKeys(nb, 16, 2, 1000),
+      Dedup.bandKeys(ob, 16, 2, 1000))
+    val pre = Dedup.signaturePrefilter(cand, nb, ob, 32, threshold = 0.95)
     val (nc, np) = (cand.count(), pre.count())
     info(s"band candidates=$nc, after signature prefilter=$np")
     assert(nc > 0, "fixture produced no band collisions")
     assert(np < nc, s"prefilter removed nothing ($np of $nc)")
-    nb.unpersist(); ob.unpersist()
   }
 
   test("stratified sample preserves strata at the requested fractions") {

@@ -97,11 +97,12 @@ class ScaleSpec extends AnyFunSuite {
     // survivor equivalence
     val expected = ids(Dedup.minHashDedup(b, "text", "doc_id",
       maxBucket = 1000))
-    // plan shape audited on the LAZY pipeline (the production path
-    // eagerly checkpoints the pair set, which hides the LSH stages
+    // plan shape audited on the LAZY pair-plan stage the pin helper
+    // runs (minHashPairs cuts the pair set, which hides the LSH stages
     // from the final plan)
-    assertShape(Dedup.minHashPairs(big, "text", "doc_id",
-      maxBucket = 10000, persistSignatures = false), "minHashPairs")
+    assertShape(Dedup.minHashPairPlan(
+      Dedup.minHashSignatures(big, "text", "doc_id", 3, 32), 8, 4, 0.7,
+      maxBucket = 10000), "minHashPairs")
     val (got, sec) = timed("minHashDedup 10x sf0.1")(
       ids(Dedup.minHashDedup(big, "text", "doc_id", maxBucket = 10000)))
     assert(got === expected)
