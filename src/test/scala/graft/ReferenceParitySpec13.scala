@@ -391,7 +391,7 @@ class ReferenceParitySpec13 extends AnyFunSuite {
   test("MLDB-749: import.text offset/limit against the titanic fixture") {
     def imp(name: String, extra: Map[String, String]): Long = {
       e.runProcedure("import.text", (Map(
-        "dataFileUrl" -> "/root/reference/testing/fixtures/titanic_train.csv",
+        "dataFileUrl" -> ReferenceFixture("fixtures/titanic_train.csv"),
         "outputDataset" -> name) ++ extra).get _)
       e.dataset(name).count()
     }

@@ -125,7 +125,7 @@ class ReferenceParitySpec14 extends AnyFunSuite {
     // line-number row naming is opt-in here (the reference's DEFAULT —
     // a typed import shouldn't always pay the line pass; documented)
     eng.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/fixtures/titanic_train.csv",
+      "dataFileUrl" -> ReferenceFixture("fixtures/titanic_train.csv"),
       "named" -> "lineNumber()",
       "outputDataset" -> "csv973").get _)
     val nums = eng.query("select cast (rowName() as number) as n from csv973")

@@ -144,7 +144,7 @@ class ReferenceParitySpec15 extends AnyFunSuite {
 
   test("MLDB-1353: gaussian clustering separates iris; function matches dataset") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "outputDataset" -> "iris1353").get _)
     val iris = q("select * from iris1353")
@@ -234,7 +234,7 @@ class ReferenceParitySpec15 extends AnyFunSuite {
 
   test("MLDB-1766: dt categorical on 20% of iris is imperfect on the rest") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "outputDataset" -> "iris1766").get _)
     val iris = q("select * from iris1766").withColumn("__rid",

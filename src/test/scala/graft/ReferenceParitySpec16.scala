@@ -35,9 +35,19 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   // --- MLDB-1638-import-text-structured-names.js ------------------------------
 
+  // The reference's dataset/MLDB-1638.csv, restated from the header
+  // cells and values the two tests below spell out.
+  private lazy val csv1638: String = {
+    val f = java.nio.file.Files.createTempFile("graft1638", ".csv")
+    java.nio.file.Files.writeString(f,
+      "a,b,c.a,c.b,\"\"\"d.a\"\"\"\n1,2,3,4,5\n")
+    f.toFile.deleteOnExit()
+    f.toString
+  }
+
   test("MLDB-1638: structuredColumnNames false keeps headers as single elements") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/MLDB-1638.csv",
+      "dataFileUrl" -> csv1638,
       "outputDataset" -> "unstructured1638").get _)
     // header cells: a, b, c.a, c.b, """d.a""" (CSV-unescaped: "d.a").
     // Unstructured (the default): each is ONE path element, printed
@@ -52,7 +62,7 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   test("MLDB-1638: structuredColumnNames true parses headers as paths") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/MLDB-1638.csv",
+      "dataFileUrl" -> csv1638,
       "structuredColumnNames" -> "true",
       "outputDataset" -> "structured1638").get _)
     val cols = e.dataset("structured1638").columns.sorted.toSeq
@@ -66,7 +76,7 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   test("MLDB-1428: iris imports with supplied headers, line-number row names") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "encoding" -> "latin1",
       "headers" -> "a,b,c,d,label",
       "named" -> "lineNumber()",
@@ -84,7 +94,7 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   test("MLDB-1428: import select supports * excluding(c)") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "a,b,c,d,label",
       "select" -> "* excluding(c)",
       "outputDataset" -> "iris1428ex").get _)
@@ -119,7 +129,7 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   test("MLDB-1718: a column named '0' with very long cells imports and groups") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/MLDB-1718-long_string.txt",
+      "dataFileUrl" -> ReferenceFixture("dataset/MLDB-1718-long_string.txt"),
       "delimiter" -> "\t",
       "headers" -> "0",
       "named" -> "lineNumber()",
@@ -215,7 +225,7 @@ class ReferenceParitySpec16 extends AnyFunSuite {
 
   test("MLDB-1353: gaussianclustering.train procedure + function entity agree") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "named" -> "lineNumber()",
       "outputDataset" -> "iris1353e").get _)

@@ -33,7 +33,7 @@ class ReferenceParitySpec18 extends AnyFunSuite {
 
   private lazy val iris647: Unit = {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "named" -> "lineNumber()",
       "outputDataset" -> "iris_dataset").get _)

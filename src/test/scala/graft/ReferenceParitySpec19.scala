@@ -57,7 +57,7 @@ class ReferenceParitySpec19 extends AnyFunSuite {
 
   test("MLDB-2143: UTF-8 labels train, apply, and report statistics") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sl,sw,pl,pw,class",
       "outputDataset" -> "iris2143").get _)
     e.runProcedure("transform", Map(

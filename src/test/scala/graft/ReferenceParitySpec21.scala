@@ -26,11 +26,13 @@ class ReferenceParitySpec21 extends AnyFunSuite {
       df.drop("rowName")
     else df
   }
-  private val fixture = "/root/reference/testing/dataset/json_dataset.json"
-  private val badFixture =
-    "/root/reference/testing/dataset/json_dataset_invalid.json"
+  // each test resolves its fixture at the top of its body, outside any
+  // intercept, so a missing file cancels the test instead of failing it
+  private val jsonDataset = "dataset/json_dataset.json"
+  private val jsonDatasetInvalid = "dataset/json_dataset_invalid.json"
 
   test("MLDB-1266: import.json names rows by line number, encodes arrays") {
+    val fixture = ReferenceFixture(jsonDataset)
     e.runProcedure("import.json", Map(
       "dataFileUrl" -> fixture,
       "arrays" -> "encode",
@@ -61,6 +63,7 @@ class ReferenceParitySpec21 extends AnyFunSuite {
   }
 
   test("MLDB-1266: invalid lines error unless ignoreBadLines") {
+    val badFixture = ReferenceFixture(jsonDatasetInvalid)
     intercept[IllegalArgumentException](
       e.runProcedure("import.json", Map(
         "dataFileUrl" -> badFixture,
@@ -78,6 +81,7 @@ class ReferenceParitySpec21 extends AnyFunSuite {
   }
 
   test("MLDB-1266: where / select / named post-expressions") {
+    val fixture = ReferenceFixture(jsonDataset)
     e.runProcedure("import.json", Map(
       "dataFileUrl" -> fixture, "where" -> "colA IN (1, 2)",
       "outputDataset" -> "jw").get _)
@@ -125,6 +129,7 @@ class ReferenceParitySpec21 extends AnyFunSuite {
   }
 
   test("MLDB-1266: arrays 'parse' expands numbered (sub-)columns") {
+    val fixture = ReferenceFixture(jsonDataset)
     e.runProcedure("import.json", Map(
       "dataFileUrl" -> fixture, "arrays" -> "parse",
       "outputDataset" -> "jp").get _)
@@ -138,6 +143,7 @@ class ReferenceParitySpec21 extends AnyFunSuite {
   }
 
   test("MLDB-1266: parse_json(lineText, {arrays: 'encode'}) matches the import") {
+    val fixture = ReferenceFixture(jsonDataset)
     // whole-line import then per-row parse — the reference's
     // equivalence check for the builtin
     e.runProcedure("import.text", Map(

@@ -29,7 +29,7 @@ class ReferenceParitySpec22 extends AnyFunSuite {
 
   test("MLDB-665: kmeans functionName auto-creates; centroids map to themselves") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "named" -> "lineNumber()",
       "outputDataset" -> "iris665").get _)

@@ -78,7 +78,7 @@ class ReferenceParitySpec23 extends AnyFunSuite {
 
   test("MLDB-654: /info reflects input features and output scores as ValueInfo") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "named" -> "lineNumber()",
       "outputDataset" -> "iris654").get _)
@@ -174,7 +174,7 @@ class ReferenceParitySpec23 extends AnyFunSuite {
 
   test("MLDB-961: string features one-hot as VALUE_EQUALS in /details") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "sepal length,sepal width,petal length,petal width,class",
       "named" -> "lineNumber()",
       "outputDataset" -> "iris961").get _)

@@ -39,12 +39,14 @@ class ReferenceParitySpec29 extends AnyFunSuite {
   // --- MLDB-861 ---------------------------------------------------------------------
 
   test("MLDB-861: utf8 and latin1 imports read the same content") {
+    val utf8 = ReferenceFixture("utf8.csv")
+    val latin1 = ReferenceFixture("latin1.csv")
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/utf8.csv",
+      "dataFileUrl" -> utf8,
       "encoding" -> "utf8",
       "outputDataset" -> "utf8_861").get _)
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/latin1.csv",
+      "dataFileUrl" -> latin1,
       "encoding" -> "latin1",
       "outputDataset" -> "latin1_861").get _)
     for (ds <- Seq("utf8_861", "latin1_861")) {
@@ -61,7 +63,7 @@ class ReferenceParitySpec29 extends AnyFunSuite {
   test("MLDB-2170: processExcelFormulas unwraps =\"…\" cells only") {
     e.runProcedure("import.text", Map(
       "dataFileUrl" ->
-        "/root/reference/testing/fixtures/MLDB-2170-csv-excel-formulas.csv",
+        ReferenceFixture("fixtures/MLDB-2170-csv-excel-formulas.csv"),
       "encoding" -> "latin1",
       "ignoreBadLines" -> "false",
       "ignoreExtraColumns" -> "true",

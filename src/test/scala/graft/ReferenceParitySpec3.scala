@@ -315,7 +315,7 @@ class ReferenceParitySpec3 extends AnyFunSuite {
 
   test("MLDB-2169: ignoreExtraColumns truncates wide rows to the header") {
     val df = sources.Sources.importText(spark,
-      "/root/reference/testing/fixtures/MLDB-2169-skip-extra-columns.csv",
+      ReferenceFixture("fixtures/MLDB-2169-skip-extra-columns.csv"),
       sources.Sources.TextImportConfig(encoding = "latin1",
         ignoreExtraColumns = true))
     assert(df.columns.toSeq === Seq("a", "b"))
@@ -325,7 +325,7 @@ class ReferenceParitySpec3 extends AnyFunSuite {
 
   test("MLDB-1649: a trailing header comma drops the empty last column") {
     val df = sources.Sources.importText(spark,
-      "/root/reference/testing/dataset/MLDB-1649.csv")
+      ReferenceFixture("dataset/MLDB-1649.csv"))
     assert(df.columns.toSeq === Seq("a", "b", "c"))
     assert(df.collect().toSeq.map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
       === Seq((1, 2, 3)))
@@ -356,9 +356,10 @@ class ReferenceParitySpec3 extends AnyFunSuite {
       delimiter = "\t", offset = 1, named = Some("uid"),
       schema = Some(StructType(Seq(StructField("uid", StringType),
         StructField("timestamp", StringType), StructField("score", DoubleType)))))
-    val results = for (ext <- Seq("lz4", "zip")) yield {
-      val df = sources.Sources.importText(spark,
-        s"/root/reference/testing/MLDB-1140-small_score.csv.$ext", cfg)
+    val files = Seq("lz4", "zip").map(ext =>
+      ReferenceFixture(s"MLDB-1140-small_score.csv.$ext"))
+    val results = for (file <- files) yield {
+      val df = sources.Sources.importText(spark, file, cfg)
       assert(df.columns.toSeq === Seq("uid", "timestamp", "score", "rowName"))
       df.orderBy("uid").collect().toSeq.map(_.toString)
     }
@@ -595,7 +596,7 @@ class ReferenceParitySpec3 extends AnyFunSuite {
 
   test("MLDB-1703: control bytes replace with the configured character") {
     val df = sources.Sources.importText(spark,
-      "/root/reference/testing/dataset/MDLB-1703_data.csv",
+      ReferenceFixture("dataset/MDLB-1703_data.csv"),
       sources.Sources.TextImportConfig(
         named = Some("rowName"), select = "* EXCLUDING(rowName)",
         replaceInvalidCharactersWith = Some(" ")))

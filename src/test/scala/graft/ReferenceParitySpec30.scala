@@ -36,7 +36,7 @@ class ReferenceParitySpec30 extends AnyFunSuite {
   // --- MLDB-2166 --------------------------------------------------------------------
 
   test("MLDB-2166: mime_type renders libmagic descriptions; blob-only") {
-    val jpg = "file:///root/reference/testing/logo-new.jpg"
+    val jpg = "file://" + ReferenceFixture("logo-new.jpg")
     val r = q(s"""select regex_search(
         mime_type(fetcher('$jpg')[content]), 'JPEG image data') as mime""")
       .head()

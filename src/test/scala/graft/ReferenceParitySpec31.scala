@@ -201,7 +201,7 @@ class ReferenceParitySpec31 extends AnyFunSuite {
   test("MLDB-592: titanic dt + boosted_stumps end-to-end with accuracy output") {
     e.runProcedure("import.text", Map(
       "dataFileUrl" ->
-        "/root/reference/testing/fixtures/titanic_train.csv",
+        ReferenceFixture("fixtures/titanic_train.csv"),
       "named" -> "lineNumber()",
       "select" -> "* EXCLUDING(PassengerId)",
       "outputDataset" -> "toy592").get _)

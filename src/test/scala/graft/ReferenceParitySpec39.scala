@@ -69,7 +69,7 @@ class ReferenceParitySpec39 extends AnyFunSuite {
   }
 
   test("MLDB-2097: parse_exif over a real camera JPEG answers metadata") {
-    val jpg = "file:///root/reference/testing/logo-new.jpg"
+    val jpg = "file://" + ReferenceFixture("logo-new.jpg")
     val r = q(s"select parse_exif(fetcher('$jpg')[content]) as meta")
       .head()
     val meta = r.getStruct(0)

@@ -38,7 +38,7 @@ class ReferenceParitySpec41 extends AnyFunSuite {
 
   test("MLDB-1273: row-input features reach the classifier identically in six forms") {
     e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/dataset/iris.data",
+      "dataFileUrl" -> ReferenceFixture("dataset/iris.data"),
       "headers" -> "a,b,c,d,class",
       "outputDataset" -> "iris1273").get _)
     e.createSqlExpressionFunction("feats", "{a,b,c,d} as row")

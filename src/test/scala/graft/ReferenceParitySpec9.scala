@@ -206,7 +206,7 @@ class ReferenceParitySpec9 extends AnyFunSuite {
 
   test("MLDB-1304: titanic demo — import.text → classifier train/test → explain") {
     val out = e.runProcedure("import.text", Map(
-      "dataFileUrl" -> "/root/reference/testing/fixtures/titanic_train.csv",
+      "dataFileUrl" -> ReferenceFixture("fixtures/titanic_train.csv"),
       "outputDataset" -> "titanic_raw").get _)
     assert(out.contains("\"rowCount\": 891"))
     // the demo's feature row {Sex, Age, Fare, Embarked, Parch, SibSp,
