@@ -480,8 +480,19 @@ final class GraftEngine(val spark: SparkSession) {
   /** Run an MLDB-dialect query against the registered datasets.
     * Registered sql.expression functions are callable inside the
     * query as `name({arg: expr, …})[output]` (macro expansion). */
-  def query(sql: String): DataFrame =
-    graft.sql.GraftSql.queryTables(spark, dataset, sql,
+  def query(sql: String): DataFrame = queryStmt(graft.sql.Parser.parse(sql))
+
+  /** A parsed (possibly rewritten) statement over the registered
+    * datasets — procedures that augment the user's query AST enter
+    * here. */
+  private def queryStmt(stmt: graft.sql.Ast.Select): DataFrame =
+    graft.sql.Lowering.run(dialect(dataset), stmt)
+
+  /** A lowering context over `tables` with the full function registries
+    * in scope — macros, $param lookups, row pivots and column
+    * functions — snapshotted now. */
+  private def dialect(tables: String => DataFrame): graft.sql.Lowering.Context =
+    graft.sql.Lowering.Context(spark, tables,
       macros = sqlMacros.toMap, lookups = paramLookups.toMap,
       rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
 
@@ -564,10 +575,7 @@ final class GraftEngine(val spark: SparkSession) {
     // entities. Snapshot at APPLY time (.toMap inside the closure):
     // functions registered after this one stay callable.
     functions(name) = df =>
-      graft.sql.Lowering.run(
-        graft.sql.Lowering.Context(spark, _ => df,
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap),
+      graft.sql.Lowering.run(dialect(_ => df),
         stmt.copy(from = Some(graft.sql.Ast.TableRef("__input", None))))
     compiledApplies.clear()
   }
@@ -842,10 +850,7 @@ final class GraftEngine(val spark: SparkSession) {
           .map(c => s""""$c": "$c"""").mkString("{", ", ", "}")
         val stmt = graft.sql.Parser.parse(
           s"""SELECT $name($args) AS * FROM __input""")
-        graft.sql.Lowering.run(
-          graft.sql.Lowering.Context(spark, _ => input,
-            macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-            rowPivots = rowPivotFns.toMap), stmt)
+        graft.sql.Lowering.run(dialect(_ => input), stmt)
       case None =>
         throw new NoSuchElementException(s"function '$name' not found")
     }
@@ -1234,6 +1239,8 @@ final class GraftEngine(val spark: SparkSession) {
   final class Run(val id: String) {
     @volatile var state: String = "executing"
     @volatile var error: Option[String] = None
+    /** the output dataset's row count, read off the result JSON; -1
+      * when the run registered none. */
     @volatile var rowCount: Long = -1
     /** progress steps as (name, type, percent) — the reference's
       * Progress shape (MLDB-1570). */
@@ -1266,17 +1273,6 @@ final class GraftEngine(val spark: SparkSession) {
   }
   private val runs = TrieMap[String, Run]()
 
-  /** The reference's per-procedure progress step names (MLDB-1570
-    * pins bucketize's iterating/bucketizing, both type 'percentile';
-    * MLDB-2110 polls merge/transform steps). */
-  private def progressStepsFor(tpe: String): Seq[(String, String)] =
-    tpe match {
-      case "bucketize" =>
-        Seq(("iterating", "percentile"), ("bucketizing", "percentile"))
-      case "transform" => Seq(("iterating", "percentile"))
-      case other => Seq(("executing", other))
-    }
-
   /** POST …/runs with the async header (MLDB-1570/2110, MLDB-305):
     * run the procedure on a background thread; the returned id is
     * GETtable at /v1/procedures/<n>/runs/<id> with state +
@@ -1284,7 +1280,11 @@ final class GraftEngine(val spark: SparkSession) {
   def startProcedureRunAsync(tpe: String,
       param: String => Option[String]): String = {
     val run = new Run(java.util.UUID.randomUUID().toString.take(8))
-    run.progress = progressStepsFor(tpe).map { case (n, t) => (n, t, 0.0) }
+    // the type's progress step names (MLDB-1570 pins bucketize's
+    // iterating/bucketizing, both type 'percentile'; MLDB-2110 polls
+    // transform's)
+    run.progress = procedureTypes.get(tpe).map(_.steps).filter(_.nonEmpty)
+      .getOrElse(Seq(("executing", tpe))).map { case (n, t) => (n, t, 0.0) }
     runs(run.id) = run
     // the listener bridge (MLDB-2110): Spark task completions in this
     // run's job group drive the progress percent — fine-grained and
@@ -1323,6 +1323,8 @@ final class GraftEngine(val spark: SparkSession) {
           s"procedure run ${run.id}", interruptOnCancel = true)
         val res = runProcedure(tpe, param)
         run.progress = run.progress.map { case (n, tt, _) => (n, tt, 100.0) }
+        run.rowCount = "\"rowCount\": (\\d+)".r.findFirstMatchIn(res)
+          .map(_.group(1).toLong).getOrElse(-1L)
         run.result = Some(res)
         run.finished = Some(java.time.Instant.now())
         if (!run.cancelled) run.state = "finished"
@@ -1346,29 +1348,9 @@ final class GraftEngine(val spark: SparkSession) {
 
   def runStatusOpt(id: String): Option[Run] = runs.get(id)
 
-  def startTransformRun(inputQuery: String, outputDataset: String): String = {
-    val run = new Run(java.util.UUID.randomUUID().toString.take(8))
-    runs(run.id) = run
-    val t = new Thread(() => {
-      try {
-        run.rowCount = runTransform(inputQuery, outputDataset).count()
-        run.state = "finished"
-      } catch { case e: Throwable =>
-        run.error = Some(String.valueOf(e.getMessage)); run.state = "error"
-      }
-    }, s"graft-run-${run.id}")
-    t.setDaemon(true)
-    t.start()
-    run.id
-  }
-
   def runStatus(id: String): Run =
     runs.getOrElse(id, throw new NoSuchElementException(s"run '$id' not found"))
 
-  /** Typed procedure dispatch — the reference's `PUT /v1/procedures`
-    * config model (`{type, params}`) for every batch procedure this
-    * engine ships. Returns a small JSON summary; dataset-producing
-    * types register their result under `outputDataset`. */
   /** Parse + validate a `percentileBuckets` config object
     * (`plugins/feature_gen/bucketize_procedure.cc` config: named
     * [lower, upper] percentile ranges, each within [0, 100],
@@ -1392,71 +1374,6 @@ final class GraftEngine(val spark: SparkSession) {
       case _ => ()
     }
     buckets
-  }
-
-  /** Procedure types whose input query must name a source dataset —
-    * the reference 400s a FROM-less trainingData at config-validation
-    * time (MLDB-1258's battery of 11). */
-  private val fromRequired = Set("classifier.train", "probabilizer.train",
-    "classifier.test", "tsne.train", "kmeans.train", "svm.train",
-    "bucketize", "export.csv", "ranking", "statsTable.train",
-    "statsTable.bagOfWords.train", "svd.train", "tfidf.train")
-
-  /** Creation-time config validation for named procedures (PUT
-    * /v1/procedures/<name>): the reference validates the config object
-    * itself before any run. */
-  def validateProcedure(tpe: String, param: String => Option[String]): Unit = {
-    if (fromRequired(tpe)) {
-      val q = param("trainingData").orElse(param("inputData"))
-        .orElse(param("testingData")).orElse(param("exportData"))
-        .orElse(param("inputQuery"))
-      q.foreach { text =>
-        val parsed = scala.util.Try(graft.sql.Parser.parse(text)).toOption
-        if (parsed.exists(_.from.isEmpty)) throw new IllegalArgumentException(
-          s"procedure '$tpe' input query must contain a FROM clause")
-      }
-    }
-    tpe match {
-      case "transform" =>
-        // the config's query must PARSE at creation — a broken
-        // inputData 400s the PUT (MLDB-2112's 'SELECT x:BUG:1'),
-        // though the entity itself still registers
-        param("inputQuery").orElse(structuredInput(param))
-          .orElse(param("inputData").filterNot(_.trim.startsWith("{")))
-          .foreach(q => graft.sql.Parser.parse(q))
-      case "bucketize" =>
-        require(param("inputData").orElse(param("inputQuery")).nonEmpty,
-          "You need to define inputData")
-        parsePercentileBuckets(param("percentileBuckets").getOrElse(
-          throw new IllegalArgumentException(
-            "bucketize needs percentileBuckets")))
-        ()
-      case "classifier.test" =>
-        // creation-time config validation (MLDB-804: an empty config
-        // 400s with the reference's message)
-        require(param("testingData").nonEmpty || param("select").nonEmpty,
-          "classifier.test expects a scalar named 'score' and a " +
-            "scalar named 'label'")
-      case "serial" =>
-        // the reference rejects self-containment at CONSTRUCTION
-        // (basic_procedures.cc:113; MLDB-621's deadlock PUT) — a step
-        // whose id names the procedure being created is a 400
-        import graft.js.JsInterp.{JsArrV, JsStr}
-        for {
-          body <- param("__body")
-          selfId <- param("__id")
-          steps <- scala.util.Try(ProcJson.field(ProcJson.parse(body),
-            "params").flatMap(ProcJson.field(_, "steps"))).toOption.flatten
-        } steps match {
-          case a: JsArrV => a.elems.foreach { s =>
-            if (ProcJson.field(s, "id").contains(JsStr(selfId)))
-              throw new IllegalArgumentException(
-                "Procedure contains itself as a child")
-          }
-          case _ => ()
-        }
-      case _ => ()
-    }
   }
 
   /** trained svd models by modelFileUrl: (trained columns with their
@@ -2469,10 +2386,36 @@ final class GraftEngine(val spark: SparkSession) {
     compiledApplies.clear()
   }
 
-  def runProcedure(tpe: String, param: String => Option[String]): String = {
+  // ---- procedure types (/v1/procedures, /v1/types/procedures) -------------
+
+  /** One call of a procedure type: the name it was called by, its
+    * params, and the param reads the run bodies share. */
+  private[api] final class ProcCall(val tpe: String,
+      val param: String => Option[String]) {
     def req(k: String): String = param(k).getOrElse(
       throw new IllegalArgumentException(s"procedure '$tpe' needs param '$k'"))
-    def registerOut(df: DataFrame): String = {
+    /** The reference's error for a run without its input query
+      * (MLDB-2119). */
+    def undefined(what: String): Nothing =
+      throw new IllegalArgumentException(s"You need to define $what")
+    /** The input query: `key`'s text, else the structured {select, from,
+      * …} form (`structuredInput`). */
+    def inputQuery(key: String, what: String): String =
+      param(key).orElse(structuredInput(param)).getOrElse(undefined(what))
+    def inputQuery(key: String): String = inputQuery(key, key)
+    def pgConfig: graft.sources.Postgres.PgConfig =
+      graft.sources.Postgres.PgConfig(
+        req("host"), param("port").map(_.toInt).getOrElse(5432),
+        param("database").getOrElse("postgres"),
+        param("user").getOrElse("postgres"),
+        param("password").getOrElse(""))
+    def mongoConfig: graft.sources.Mongo.MongoConfig =
+      graft.sources.Mongo.MongoConfig(req("host"),
+        param("port").map(_.toInt).getOrElse(27017))
+    /** Register `df` as the run's output dataset; `fallbackName` is a
+      * type's own output key (xlsx's `output`). */
+    def registerOut(df: DataFrame,
+        fallbackName: Option[String] = None): String = {
       // outputDataset may be a plain id, an {id} object (both land as
       // the id string), or an id-LESS typed object ({type:
       // "beh.mutable", params: {dataFileUrl}} — MLDB-1254's anonymous
@@ -2504,7 +2447,7 @@ final class GraftEngine(val spark: SparkSession) {
         }
       val name = param("outputDataset")
         .filterNot(s => s.startsWith("{") || s.startsWith("["))
-        .orElse(fromBody.map(_._1))
+        .orElse(fromBody.map(_._1)).orElse(fallbackName)
         .getOrElse(throw new IllegalArgumentException(
           s"procedure '$tpe' needs param 'outputDataset'"))
       createDataset(name, df)
@@ -2522,8 +2465,77 @@ final class GraftEngine(val spark: SparkSession) {
       }
       s"""{"outputDataset": "$name", "rowCount": ${df.count()}}"""
     }
-    tpe match {
-      case "bucketize" =>
+  }
+
+  /** One procedure type, registered once like the reference's typed
+    * procedure config (`core/procedure.h`): its run body, whether its
+    * input query must name a source, any other creation-time check, its
+    * async progress steps (MLDB-1570/2110; empty = one `executing` step),
+    * the config struct name `/v1/types/procedures/<t>/info` pins
+    * (empty = derived from the type name) and the other names it is
+    * registered under. */
+  private[api] final class ProcedureType(val run: ProcCall => String,
+      val needsFrom: Boolean, val check: ProcCall => Unit,
+      val steps: Seq[(String, String)], val configType: Option[String],
+      val aliases: Seq[String])
+
+  private def proc(needsFrom: Boolean = false,
+      check: ProcCall => Unit = _ => (), steps: Seq[(String, String)] = Nil,
+      configType: Option[String] = None, aliases: Seq[String] = Nil)(
+      run: ProcCall => String) =
+    new ProcedureType(run, needsFrom, check, steps, configType, aliases)
+
+  /** Creation-time config validation (PUT /v1/procedures/<name>): the
+    * reference validates the config object itself before any run. An
+    * unknown type is left to the run. */
+  def validateProcedure(tpe: String, param: String => Option[String]): Unit =
+    procedureTypes.get(tpe).foreach(validate(_, new ProcCall(tpe, param)))
+
+  private def validate(p: ProcedureType, call: ProcCall): Unit = {
+    import call.param
+    // the reference 400s a FROM-less input query at config-validation
+    // time (MLDB-1258's battery of 11)
+    if (p.needsFrom) {
+      val q = param("trainingData").orElse(param("inputData"))
+        .orElse(param("testingData")).orElse(param("exportData"))
+        .orElse(param("inputQuery"))
+      q.foreach { text =>
+        val parsed = scala.util.Try(graft.sql.Parser.parse(text)).toOption
+        if (parsed.exists(_.from.isEmpty)) throw new IllegalArgumentException(
+          s"procedure '${call.tpe}' input query must contain a FROM clause")
+      }
+    }
+    p.check(call)
+  }
+
+  /** Typed procedure dispatch — the reference's `PUT /v1/procedures`
+    * config model (`{type, params}`): every entry path validates the
+    * config, then runs the type's body. Returns a small JSON summary;
+    * dataset-producing types register their result under
+    * `outputDataset`. */
+  def runProcedure(tpe: String, param: String => Option[String]): String = {
+    val p = procedureTypes.getOrElse(tpe,
+      throw new IllegalArgumentException(s"unknown procedure type '$tpe'"))
+    val call = new ProcCall(tpe, param)
+    validate(p, call)
+    p.run(call)
+  }
+
+  /** Every procedure type this engine runs, keyed by type name; each
+    * alias is one more key on the same entry. `/v1/types/procedures`,
+    * creation validation and async progress all read it. */
+  private[api] val procedureTypes: Map[String, ProcedureType] = {
+    val table = Map[String, ProcedureType](
+      "bucketize" -> proc(needsFrom = true,
+          steps = Seq(("iterating", "percentile"), ("bucketizing", "percentile")),
+          check = { call => import call._
+            require(param("inputData").orElse(param("inputQuery")).nonEmpty,
+              "You need to define inputData")
+            parsePercentileBuckets(param("percentileBuckets").getOrElse(
+              throw new IllegalArgumentException(
+                "bucketize needs percentileBuckets")))
+            ()
+          }) { call => import call._
         // `bucketize` with the reference's NAMED percentile ranges
         // (`bucketize_procedure.cc:120-240`): rows of the inputData in
         // its ORDER BY order are assigned buckets by index range; rows
@@ -2532,12 +2544,8 @@ final class GraftEngine(val spark: SparkSession) {
         // augmented with `rowName() AS rowName` when absent so output
         // rows keep their names.
         val input = param("inputData").orElse(param("inputQuery"))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
-        val buckets = parsePercentileBuckets(
-          param("percentileBuckets").getOrElse(
-            throw new IllegalArgumentException(
-              "bucketize needs percentileBuckets")))
+          .getOrElse(undefined("inputData"))
+        val buckets = parsePercentileBuckets(req("percentileBuckets"))
         import graft.sql.Ast._
         val stmt = graft.sql.Parser.parse(input)
         val hasRn = stmt.items.exists {
@@ -2550,9 +2558,7 @@ final class GraftEngine(val spark: SparkSession) {
           else stmt.copy(items = stmt.items :+
             // builtin names are matched lowercase at lowering
             SelectItem(FnCall("rowname", Seq.empty), Some("rowName")))
-        val df0b = graft.sql.GraftSql.queryStmtTables(spark, dataset, stmt2,
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0b = queryStmt(stmt2)
         // a `*` over a dataset created without a rowName column (a
         // registered query result) expands to no rowName — synthesize
         // one from the sort position (MLDB-1043 test 9's empty input)
@@ -2563,16 +2569,24 @@ final class GraftEngine(val spark: SparkSession) {
               .cast("string"))
         registerOut(graft.procedures.Procedures.bucketizeNamed(
           df, "rowName", buckets))
-      case "transform" =>
+      },
+      "transform" -> proc(steps = Seq(("iterating", "percentile")),
+          configType = Some("MLDB::TransformDatasetConfig"),
+          check = { call => import call._
+            // the config's query must PARSE at creation — a broken
+            // inputData 400s the PUT (MLDB-2112's 'SELECT x:BUG:1'),
+            // though the entity itself still registers
+            param("inputQuery").orElse(structuredInput(param))
+              .orElse(param("inputData").filterNot(_.trim.startsWith("{")))
+              .foreach(q => graft.sql.Parser.parse(q))
+          }) { call => import call._
         // the reference's config key is inputData; inputQuery stays as
         // an accepted alias. The STRUCTURED form
         // ({select, from: {id}, where, orderBy, limit, offset} —
         // MLDB-1104/788) assembles the dialect text from its parts.
         // Missing input uses the reference's message (MLDB-2119).
         val input = param("inputQuery").orElse(structuredInput(param))
-          .orElse(param("inputData"))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
+          .orElse(param("inputData")).getOrElse(undefined("inputData"))
         val out1 = query(input)
         // a no-FROM transform names its constant row 'result' unless
         // NAMED overrode it (MLDB-409's no-FROM battery)
@@ -2595,7 +2609,8 @@ final class GraftEngine(val spark: SparkSession) {
               col(s"`$c`").isNotNull).reduce(_ || _))
           }
         registerOut(out)
-      case "melt" =>
+      },
+      "melt" -> proc() { call => import call._
         // `melt` over REST (`builtin/melt_procedure.cc:205`;
         // MLDB-1275): inputData selects a {to_fix} row carried on
         // every output row and a {to_melt} row whose cells become
@@ -2605,17 +2620,13 @@ final class GraftEngine(val spark: SparkSession) {
         // field names: no shuffle, no driver data pass.
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types.StructType
-        val input = param("inputData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
+        val input = inputQuery("inputData")
         val keyName = param("keyColumnName").getOrElse("key")
         val valName = param("valueColumnName").getOrElse("value")
         val stmt = graft.sql.Parser.parse(input)
         val stmt2 = stmt.copy(items = stmt.items :+ graft.sql.Ast.SelectItem(
           graft.sql.Ast.FnCall("rowname", Seq.empty), Some("__origRow")))
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset, stmt2,
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt2)
         def structFields(name: String): Seq[org.apache.spark.sql.types.StructField] =
           df0.schema.fields.find(_.name == name).map(_.dataType) match {
             case Some(st: StructType) => st.fields.toSeq
@@ -2642,7 +2653,9 @@ final class GraftEngine(val spark: SparkSession) {
             fixFields.map(f => col(s"`${f.name}`")) :+
             col("__kv.__k").as(keyName) :+
             col("__kv.__v").as(valName)): _*))
-      case "import.text" =>
+      },
+      "import.text" -> proc(configType = Some("MLDB::ImportTextConfig"),
+          ) { call => import call._
         // full ImportTextConfig surface over REST params
         // (`plugins/textual/importtext_procedure.cc:43-115`)
         def flag(k: String) = param(k).exists(_.toBoolean)
@@ -2670,7 +2683,8 @@ final class GraftEngine(val spark: SparkSession) {
           structuredColumnNames = flag("structuredColumnNames"))
         registerOut(graft.sources.Sources.importText(spark,
           req("dataFileUrl"), cfg))
-      case "import.json" =>
+      },
+      "import.json" -> proc() { call => import call._
         // full surface (testing/MLDB-1266-import_json.py): line-number
         // row names, select/where/named post-expressions, bad-line
         // handling, arrays encode|parse
@@ -2683,71 +2697,62 @@ final class GraftEngine(val spark: SparkSession) {
           named = param("named"),
           ignoreBadLines = param("ignoreBadLines").exists(_.toBoolean),
           arrays = param("arrays").getOrElse("encode")))
-      case "import.xlsx" | "experimental.import.xlsx" =>
+      },
+      "import.xlsx" -> proc(
+          aliases = Seq("experimental.import.xlsx")) { call => import call._
         // the reference registers the type as experimental.import.xlsx
         // (`plugins/tabular/xlsx_importer.cc`; MLDB-1011); the output
         // dataset id arrives as `output` there, `outputDataset` here
-        val outId = param("outputDataset").orElse(param("output"))
-          .getOrElse(throw new IllegalArgumentException(
-            s"procedure '$tpe' needs param 'outputDataset'"))
-        val df = graft.sources.Xlsx.importXlsx(spark,
+        registerOut(graft.sources.Xlsx.importXlsx(spark,
           req("dataFileUrl").stripPrefix("file://"),
-          param("sheet").map(Seq(_)))
-        createDataset(outId, df)
-        s"""{"outputDataset": "$outId", "rowCount": ${df.count()}}"""
-      case "import.git" =>
+          param("sheet").map(Seq(_))), fallbackName = param("output"))
+      },
+      "import.git" -> proc() { call => import call._
         // the reference takes file:// repository URLs (MLDB-1128's
         // config shape); the CLI walker wants the plain path
         registerOut(graft.sources.Git.importGit(spark,
           req("repository").stripPrefix("file://"),
           limit = param("limit").map(_.toInt)))
-      case "import.sqlite" =>
+      },
+      "import.sqlite" -> proc() { call => import call._
         registerOut(param("table") match {
           case Some(t) => graft.sources.Sqlite.importSqlite(spark, req("dataFileUrl"), t)
           case None => graft.sources.Sqlite.importSqliteSparse(spark, req("dataFileUrl"))
         })
-      case "import.sentiwordnet" =>
+      },
+      "import.sentiwordnet" -> proc() { call => import call._
         registerOut(graft.sources.Sources.importSentiWordNet(spark, req("dataFileUrl")))
-      case "postgresql.import" =>
+      },
+      "postgresql.import" -> proc() { call => import call._
         // reference: plugins/postgresql — here the pure-JVM wire reader
-        val cfg = graft.sources.Postgres.PgConfig(
-          req("host"), param("port").map(_.toInt).getOrElse(5432),
-          param("database").getOrElse("postgres"),
-          param("user").getOrElse("postgres"),
-          param("password").getOrElse(""))
         registerOut(param("query") match {
-          case Some(q) => graft.sources.Postgres.importQuery(spark, cfg, q)
-          case None => graft.sources.Postgres.importTable(spark, cfg,
+          case Some(q) => graft.sources.Postgres.importQuery(spark, pgConfig, q)
+          case None => graft.sources.Postgres.importTable(spark, pgConfig,
             req("table"), param("partitionColumn"),
             param("numPartitions").map(_.toInt).getOrElse(1))
         })
-      case "postgresql.export" =>
+      },
+      "postgresql.export" -> proc() { call => import call._
         // the recorder direction: dataset → table, per-partition INSERTs
-        val cfg = graft.sources.Postgres.PgConfig(
-          req("host"), param("port").map(_.toInt).getOrElse(5432),
-          param("database").getOrElse("postgres"),
-          param("user").getOrElse("postgres"),
-          param("password").getOrElse(""))
         val src = dataset(req("inputDataset"))
-        graft.sources.Postgres.exportTable(src, cfg, req("table"),
+        graft.sources.Postgres.exportTable(src, pgConfig, req("table"),
           createTable = param("createTable").exists(_.toBoolean))
         s"""{"exported": "${req("table")}", "rowCount": ${src.count()}}"""
-      case "mongodb.export" =>
+      },
+      "mongodb.export" -> proc() { call => import call._
         val src = dataset(req("inputDataset"))
-        graft.sources.Mongo.exportCollection(src,
-          graft.sources.Mongo.MongoConfig(req("host"),
-            param("port").map(_.toInt).getOrElse(27017)),
+        graft.sources.Mongo.exportCollection(src, mongoConfig,
           param("database").getOrElse("db"), req("collection"))
         s"""{"exported": "${req("collection")}", "rowCount": ${src.count()}}"""
-      case "mongodb.import" =>
+      },
+      "mongodb.import" -> proc() { call => import call._
         // reference: plugins/mongodb — here the pure-JVM OP_MSG reader
-        registerOut(graft.sources.Mongo.importCollection(spark,
-          graft.sources.Mongo.MongoConfig(req("host"),
-            param("port").map(_.toInt).getOrElse(27017)),
+        registerOut(graft.sources.Mongo.importCollection(spark, mongoConfig,
           param("database").getOrElse("db"), req("collection"),
           param("partitionField"),
           param("numPartitions").map(_.toInt).getOrElse(1)))
-      case "export.csv" =>
+      },
+      "export.csv" -> proc(needsFrom = true) { call => import call._
         // full surface (`plugins/textual/csv_export_procedure.cc`,
         // MLDB-1098): exportData QUERY (or a plain inputDataset),
         // headers / delimiter options; file:// URLs accepted
@@ -2767,7 +2772,8 @@ final class GraftEngine(val spark: SparkSession) {
           delimiter = param("delimiter").getOrElse(","),
           headers = param("headers").forall(_.toBoolean))
         s"""{"exported": "$path"}"""
-      case "export.shards" =>
+      },
+      "export.shards" -> proc() { call => import call._
         // training-data delivery: token-budget shards + manifest
         val path = req("outputUrl")
         val man = graft.procedures.Procedures.exportShards(
@@ -2777,7 +2783,9 @@ final class GraftEngine(val spark: SparkSession) {
           param("tokensPerShard").map(_.toLong).getOrElse(1000000L), path)
         val n = man.count()
         s"""{"exported": "$path", "shards": $n}"""
-      case "tsne.train" =>
+      },
+      "tsne.train" -> proc(needsFrom = true,
+          configType = Some("MLDB::TsneConfig")) { call => import call._
         // two input surfaces: the embedding-table form
         // (trainingDataset + vectorColumn) and the reference's
         // structured form ({from, limit, offset} over wide numeric
@@ -2845,7 +2853,9 @@ final class GraftEngine(val spark: SparkSession) {
           }
           s"""{"outputDataset": "$outName", "rowCount": ${emb.count()}}"""
         }
-      case "svd.train" =>
+      },
+      "svd.train" -> proc(needsFrom = true,
+          configType = Some("MLDB::SvdConfig")) { call => import call._
         // `svd.train` (`plugins/embedding/svd.cc`): trainingData (text
         // or the structured {select, from, where, orderBy, offset,
         // limit} form — MLDB-1127) over the registered datasets; the
@@ -2865,8 +2875,7 @@ final class GraftEngine(val spark: SparkSession) {
           .orElse(param("trainingData").filter(
             _.trim.toLowerCase.startsWith("select")))
           .orElse(param("trainingData")).orElse(param("inputData"))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
+          .getOrElse(undefined("inputData"))
         val df0raw = query(input)
         import org.apache.spark.sql.types._
         // string columns train as one-hot indicators named
@@ -2952,14 +2961,14 @@ final class GraftEngine(val spark: SparkSession) {
             spark.sparkContext.parallelize(rows), schema))
         }
         s"""{"trained": "$url", "numSingularValues": $kept}"""
-      case "kmeans.train" =>
+      },
+      "kmeans.train" -> proc(needsFrom = true,
+          configType = Some("MLDB::KmeansConfig")) { call => import call._
         // `kmeans.train` with centroidsDataset registration
         // (MLDB-1025's default-output contract: running the procedure
         // creates exactly the centroids dataset)
         import org.apache.spark.sql.functions._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
+        val input = inputQuery("trainingData", "inputData")
         val df0 = query(input)
         import org.apache.spark.sql.types._
         val feats = df0.schema.fields.filter { f =>
@@ -3040,7 +3049,8 @@ final class GraftEngine(val spark: SparkSession) {
             cluster.cast("long").as("cluster")))
         }
         s"""{"trained": true, "numClusters": $kk}"""
-      case "gaussianclustering.train" =>
+      },
+      "gaussianclustering.train" -> proc() { call => import call._
         // `gaussianclustering.train` (EM over gaussians,
         // `plugins/jml/em_interface.cc` / `em.cc`; pinned by
         // testing/MLDB-1353-EM.py): kmeans-seeded EM (see
@@ -3048,9 +3058,7 @@ final class GraftEngine(val spark: SparkSession) {
         // cluster, modelFileUrl keys the `gaussianclustering`
         // function entity.
         import org.apache.spark.sql.functions._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define inputData"))
+        val input = inputQuery("trainingData", "inputData")
         val df0 = query(input)
         import org.apache.spark.sql.types._
         val feats = df0.schema.fields.filter { f =>
@@ -3073,7 +3081,9 @@ final class GraftEngine(val spark: SparkSession) {
             col("cluster").cast("long").as("cluster")))
         }
         s"""{"trained": true, "numClusters": $kk}"""
-      case "classifier.train" =>
+      },
+      "classifier.train" -> proc(needsFrom = true,
+          configType = Some("MLDB::ClassifierConfig")) { call => import call._
         // `classifier.train` as a REST procedure
         // (`plugins/jml/classifier.cc`): trainingData selects
         // `{…} as features, <expr> as label`; mode ∈ boolean |
@@ -3082,9 +3092,7 @@ final class GraftEngine(val spark: SparkSession) {
         // it (MLDB-647's whole flow).
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         // a column cannot be both the label and a feature
         // (testing/MLDB-2188-label_feature_validation.py's message)
         scala.util.Try(graft.sql.Parser.parse(input)).toOption.foreach { stmt =>
@@ -3228,7 +3236,15 @@ final class GraftEngine(val spark: SparkSession) {
         clsModels(url) = (specs, mode, labels, model)
         param("functionName").foreach(createClassifierFunction(_, url))
         s"""{"trained": "$url", "mode": "$mode", "algorithm": "$algo"}"""
-      case "classifier.test" =>
+      },
+      "classifier.test" -> proc(needsFrom = true,
+          configType = Some("MLDB::AccuracyConfig"),
+          check = { call => import call._
+            // an empty config 400s with the reference's message (MLDB-804)
+            require(param("testingData").nonEmpty || param("select").nonEmpty,
+              "classifier.test expects a scalar named 'score' and a " +
+                "scalar named 'label'")
+          }) { call => import call._
         // `classifier.test` (`plugins/jml/accuracy.cc`): testingData
         // selects `<score expr> as score, <label expr> as label`
         // (boolean/regression) or a classifier-output row as score
@@ -3316,12 +3332,14 @@ final class GraftEngine(val spark: SparkSession) {
             }
             s"""{"auc": $auc}"""
         }
-      case "null" | "mock" =>
+      },
+      "null" -> proc(aliases = Seq("mock")) { _ =>
         // `null` / `mock` procedures (`builtin/basic_procedures.cc`):
         // do nothing, successfully (MLDB-326's run-id battery runs
         // against the null procedure)
         """{"status": "done"}"""
-      case "createEntity" =>
+      },
+      "createEntity" -> proc() { call => import call._
         // `createEntity` (`builtin/basic_procedures.cc:182-272`;
         // MLDB-985): create an entity from a procedure run and answer
         // its kind/config/status
@@ -3341,7 +3359,8 @@ final class GraftEngine(val spark: SparkSession) {
           case other => throw new IllegalArgumentException(
             s"createEntity kind '$other' is not supported (dataset only)")
         }
-      case "svm.train" =>
+      },
+      "svm.train" -> proc(needsFrom = true) { call => import call._
         // `svm.train` (`plugins/svm/svm.cc:464`; MLDB-991): the
         // trainingData's numeric columns minus `label` are the
         // embedding; labels are arbitrary values. One-vs-rest linear
@@ -3349,9 +3368,7 @@ final class GraftEngine(val spark: SparkSession) {
         // linear substitutes — documented divergence).
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val df0 = query(input)
         require(df0.columns.exists(_.equalsIgnoreCase("label")),
           "svm.train expects a 'label' column in trainingData")
@@ -3377,16 +3394,15 @@ final class GraftEngine(val spark: SparkSession) {
         svmModels(url) = (feats, ls, graft.ml.Models.svmMargins(model))
         param("functionName").foreach(createSvmFunction(_, url))
         s"""{"trained": "$url", "classes": ${ls.size}}"""
-      case "probabilizer.train" =>
+      },
+      "probabilizer.train" -> proc(needsFrom = true) { call => import call._
         // `probabilizer.train` (`plugins/jml/probabilizer.cc:292`):
         // fit Platt scaling σ(A·score + B) over `<expr> as score,
         // <expr> as label` rows; modelFileUrl keys the model for the
         // `probabilizer` function entity; functionName auto-creates it
         // (MLDB-59/573's flow).
         import org.apache.spark.sql.functions._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val df0 = query(input)
         def needP(c: String): String = df0.schema.fields
           .find(_.name.equalsIgnoreCase(c)).map(_.name).getOrElse(
@@ -3409,7 +3425,8 @@ final class GraftEngine(val spark: SparkSession) {
         probModels(url) = (a, b)
         param("functionName").foreach(createProbabilizerFunction(_, url))
         s"""{"trained": "$url", "params": {"A": $a, "B": $b}}"""
-      case "statsTable.train" =>
+      },
+      "statsTable.train" -> proc(needsFrom = true) { call => import call._
         // `statsTable.train` (`plugins/feature_gen/
         // stats_table_procedure.cc`; MLDB-873): per key column and
         // value, count trials and outcome hits. outputDataset holds
@@ -3420,9 +3437,7 @@ final class GraftEngine(val spark: SparkSession) {
         // loop. The FINAL table registers for the getCounts function.
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "statsTable.train needs outcomes")))
@@ -3434,10 +3449,7 @@ final class GraftEngine(val spark: SparkSession) {
         val outcomeItems = outcomes.zipWithIndex.map { case ((_, ex), i) =>
           graft.sql.Parser.parse(s"SELECT ($ex) AS __oc$i").items.head
         }
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset,
-          stmt0.copy(items = stmt0.items ++ outcomeItems),
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt0.copy(items = stmt0.items ++ outcomeItems))
         val keyCols = df0.columns.filterNot(c =>
           c.equalsIgnoreCase("rowName") || c.startsWith("__") ||
             c.equalsIgnoreCase("ts")).toSeq
@@ -3505,7 +3517,8 @@ final class GraftEngine(val spark: SparkSession) {
         statsTableModels(url) = (keyCols, outcomes.map(_._1), tables)
         param("functionName").foreach(createStatsTableFunction(_, url))
         s"""{"trained": "$url", "keyColumns": ${keyCols.size}}"""
-      case "statsTable.bagOfWords.train" =>
+      },
+      "statsTable.bagOfWords.train" -> proc(needsFrom = true) { call => import call._
         // `statsTable.bagOfWords.train` (`stats_table_procedure.cc:
         // 600-698`; MLDB-873/MLDBFB-506): the trainingData's columns
         // are WORDS (a tokenize bag per row); per word count the rows
@@ -3513,9 +3526,7 @@ final class GraftEngine(val spark: SparkSession) {
         // pass, two aggregates per word column — the vocabulary is the
         // (already-capped) dynamic schema.
         import org.apache.spark.sql.functions._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "statsTable.bagOfWords.train needs outcomes")))
@@ -3524,10 +3535,7 @@ final class GraftEngine(val spark: SparkSession) {
         val outcomeItems = outcomes.zipWithIndex.map { case ((_, ex), i) =>
           graft.sql.Parser.parse(s"SELECT ($ex) AS __oc$i").items.head
         }
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset,
-          stmt0.copy(items = stmt0.items ++ outcomeItems),
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt0.copy(items = stmt0.items ++ outcomeItems))
         val wordCols = df0.columns.filterNot(c =>
           c.equalsIgnoreCase("rowName") || c.startsWith("__") ||
             c.equalsIgnoreCase("ts")).toSeq
@@ -3570,7 +3578,8 @@ final class GraftEngine(val spark: SparkSession) {
             createStatsTablePosNegFunction(fn, url, o))
         }
         s"""{"trained": "$url", "words": ${words.size}}"""
-      case "experimental.distTable.train" =>
+      },
+      "experimental.distTable.train" -> proc() { call => import call._
         // `experimental.distTable.train` (`plugins/feature_gen/
         // dist_table_procedure.cc`; MLDB-1750): per key column and
         // value, track the distribution of each NUMERIC outcome.
@@ -3581,9 +3590,7 @@ final class GraftEngine(val spark: SparkSession) {
         // (word bags) instead of by value.
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "distTable.train needs outcomes")))
@@ -3615,10 +3622,7 @@ final class GraftEngine(val spark: SparkSession) {
             }) Nil
           else Seq(graft.sql.Ast.SelectItem(
             graft.sql.Ast.FnCall("rowname", Seq.empty), Some("rowName")))
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset,
-          stmt0.copy(items = stmt0.items ++ rnItem ++ outcomeItems ++ ordItems),
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt0.copy(items = stmt0.items ++ rnItem ++ outcomeItems ++ ordItems))
         val keyCols = df0.columns.filterNot(c =>
           c.equalsIgnoreCase("rowName") || c.startsWith("__") ||
             c.equalsIgnoreCase("ts")).toSeq
@@ -3774,7 +3778,8 @@ final class GraftEngine(val spark: SparkSession) {
         param("functionName").foreach(fn =>
           createDistTableGetStatsFunction(fn, url, Some(stats)))
         s"""{"trained": "$url", "keyColumns": ${keyCols.size}}"""
-      case "experimental.statsTable.derivedColumnsGenerator" =>
+      },
+      "experimental.statsTable.derivedColumnsGenerator" -> proc() { call => import call._
         // `experimental.statsTable.derivedColumnsGenerator`
         // (`stats_table_procedure.cc:523-592`): expand the expression
         // template once per trained key column — replace "trial" and
@@ -3803,7 +3808,8 @@ final class GraftEngine(val spark: SparkSession) {
           temp(i) = temp(i).replace("$tbl", stNames(i))
         createSqlExpressionFunction(fnId, temp.mkString(","))
         s"""{"functionId": "$fnId"}"""
-      case "classifier.experiment" =>
+      },
+      "classifier.experiment" -> proc() { call => import call._
         // `classifier.experiment` (`plugins/jml/
         // experiment_procedure.cc`; MLDB-878): train/test fold battery
         // over the classifier.train/test procedures, auto-creating a
@@ -3894,7 +3900,8 @@ final class GraftEngine(val spark: SparkSession) {
             s""""mean": $mean, "min": ${aucVals.min}, "std": $std}}"""
         }
         s"""{"folds": ${foldsJson.mkString("[", ",", "]")}$agg}"""
-      case "split" =>
+      },
+      "split" -> proc() { call => import call._
         // `split` (`builtin/datasetsplit_procedure.cc`): distribute
         // rows among output datasets keeping each LABEL represented in
         // every split and the label/row proportions near the requested
@@ -3985,7 +3992,8 @@ final class GraftEngine(val spark: SparkSession) {
             else joined.withColumnRenamed("__rn", "rowName"))
         }
         s"""{"splits": ${distributions.mkString("[", ", ", "]")}}"""
-      case "tfidf.train" =>
+      },
+      "tfidf.train" -> proc(needsFrom = true) { call => import call._
         // `tfidf.train` (`plugins/nlp/tfidf.cc:136-190`;
         // testing/MLDB-1101-tf-idf.py): count the documents each WORD
         // (column of the bag-of-words input) appears in — one
@@ -3994,9 +4002,7 @@ final class GraftEngine(val spark: SparkSession) {
         // = one row per word with its document count.
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
-        val input = param("trainingData").orElse(structuredInput(param))
-          .getOrElse(throw new IllegalArgumentException(
-            "You need to define trainingData"))
+        val input = inputQuery("trainingData")
         val df0raw = query(input)
         val dfr =
           if (df0raw.schema.headOption.exists(f =>
@@ -4028,7 +4034,8 @@ final class GraftEngine(val spark: SparkSession) {
           param("tfType").getOrElse("raw"),
           param("idfType").getOrElse("inverseSmooth")))
         s"""{"trained": "$url", "corpusSize": $n}"""
-      case "dataset.stats" =>
+      },
+      "dataset.stats" -> proc() { call => import call._
         // pro-plugin utility (`plugins/pro/*.cc:124-201`): per-column
         // type/null/distinct profile of a registered dataset. One
         // aggregate pass (exact null counts, approx distinct — the
@@ -4045,7 +4052,8 @@ final class GraftEngine(val spark: SparkSession) {
             s""""nulls": ${row.getLong(2 * i)}, "approxDistinct": ${row.getLong(2 * i + 1)}}"""
         }.mkString("[", ",", "]")
         s"""{"rowCount": $n, "columnCount": ${df.schema.fields.length}, "columns": $cols}"""
-      case "dataset.compact" =>
+      },
+      "dataset.compact" -> proc() { call => import call._
         // beyond-reference maintenance procedure: rewrite a
         // partitioned parquet store's accumulated small files into
         // ~targetBytes-sized ones (see graft.procedures.Compact — the
@@ -4065,7 +4073,8 @@ final class GraftEngine(val spark: SparkSession) {
           s""""partitionsCompacted": ${rep.partitionsCompacted}, """ +
           s""""filesBefore": ${rep.filesBefore}, """ +
           s""""filesAfter": ${rep.filesAfter}}"""
-      case "list.files" =>
+      },
+      "list.files" -> proc() { call => import call._
         // pro-plugin `list.files`: a directory listing as a dataset
         // (path, size, modified) — driver-side walk, listing-sized.
         import scala.jdk.CollectionConverters._
@@ -4079,15 +4088,17 @@ final class GraftEngine(val spark: SparkSession) {
               java.nio.file.Files.getLastModifiedTime(p).toMillis)))
           .toSeq
         registerOut(rows.toDF("path", "size_bytes", "modified"))
+      },
       // LLM-pipeline operators as first-class procedures (same typed
       // dispatch as the reference's procedure entities): each reads a
       // registered dataset, runs the batch operator, and registers the
       // result under outputDataset.
-      case "dedup.exact" =>
+      "dedup.exact" -> proc() { call => import call._
         registerOut(graft.operators.Dedup.exact(dataset(req("inputDataset")),
           param("column").getOrElse("text"),
           param("idColumn").getOrElse("doc_id")))
-      case "pipeline.curate" =>
+      },
+      "pipeline.curate" -> proc() { call => import call._
         // the whole curation chain behind one call (the q105 shape):
         // optional stages run in the canonical order — corpus line
         // dedup → C4 cleanup → Gopher quality gate → repetition gate →
@@ -4143,19 +4154,22 @@ final class GraftEngine(val spark: SparkSession) {
             .select("doc_id"), Seq("doc_id"))
         }
         registerOut(cur)
-      case "dedup.winnow" =>
+      },
+      "dedup.winnow" -> proc() { call => import call._
         registerOut(graft.operators.Dedup.winnowDedup(
           dataset(req("inputDataset")),
           param("column").getOrElse("text"),
           param("idColumn").getOrElse("doc_id"),
           k = param("k").map(_.toInt).getOrElse(3),
           w = param("w").map(_.toInt).getOrElse(4)))
-      case "dedup.minhash" =>
+      },
+      "dedup.minhash" -> proc() { call => import call._
         registerOut(graft.operators.Dedup.minHashDedup(
           dataset(req("inputDataset")),
           param("column").getOrElse("text"),
           param("idColumn").getOrElse("doc_id")))
-      case "dedup.semantic" =>
+      },
+      "dedup.semantic" -> proc() { call => import call._
         // SemDeDup over an embedding column; k-means centroids trained
         // in place (semanticDedupAuto) unless a centroidsDataset of
         // (id, vector) rows is supplied.
@@ -4179,21 +4193,24 @@ final class GraftEngine(val spark: SparkSession) {
             graft.operators.Dedup.semanticDedupAuto(in, vecCol, idCol,
               k = param("k").map(_.toInt).getOrElse(64), minCos)
         })
-      case "sample.dsir" =>
+      },
+      "sample.dsir" -> proc() { call => import call._
         registerOut(graft.operators.TextAnalysis.dsirSelect(
           dataset(req("inputDataset")), dataset(req("targetDataset")),
           param("idColumn").getOrElse("doc_id"),
           param("column").getOrElse("text"),
           k = param("k").map(_.toInt).getOrElse(1000),
           nBuckets = param("nBuckets").map(_.toInt).getOrElse(256)))
-      case "sample.temperature" =>
+      },
+      "sample.temperature" -> proc() { call => import call._
         registerOut(graft.procedures.Procedures.temperatureSample(
           dataset(req("inputDataset")),
           param("sourceColumn").getOrElse("source"),
           param("idColumn").getOrElse("doc_id"),
           budgetFraction = req("budgetFraction").toDouble,
           alpha = param("alpha").map(_.toDouble).getOrElse(0.5)))
-      case "quality.gopher" =>
+      },
+      "quality.gopher" -> proc() { call => import call._
         registerOut(graft.operators.TextAnalysis.gopherQuality(
           dataset(req("inputDataset")),
           param("idColumn").getOrElse("doc_id"),
@@ -4203,19 +4220,22 @@ final class GraftEngine(val spark: SparkSession) {
             .getOrElse(Seq("the", "be", "to", "of", "and", "that",
               "have", "with")),
           minStop = param("minStop").map(_.toLong).getOrElse(2L)))
-      case "quality.c4" =>
+      },
+      "quality.c4" -> proc() { call => import call._
         registerOut(graft.operators.TextAnalysis.c4Clean(
           dataset(req("inputDataset")),
           param("idColumn").getOrElse("doc_id"),
           param("column").getOrElse("text"),
           minWordsPerLine = param("minWordsPerLine").map(_.toInt).getOrElse(5),
           minSentences = param("minSentences").map(_.toInt).getOrElse(3)))
-      case "quality.repetition" =>
+      },
+      "quality.repetition" -> proc() { call => import call._
         registerOut(graft.operators.TextAnalysis.gopherRepetition(
           dataset(req("inputDataset")),
           param("idColumn").getOrElse("doc_id"),
           param("column").getOrElse("text")))
-      case "pack.sequence" =>
+      },
+      "pack.sequence" -> proc() { call => import call._
         import org.apache.spark.sql.functions.{col => c}
         val in = dataset(req("inputDataset"))
         val idCol = param("idColumn").getOrElse("doc_id")
@@ -4237,7 +4257,8 @@ final class GraftEngine(val spark: SparkSession) {
           case None => graft.procedures.Procedures
             .sequencePack(counted, idCol, "n_tokens", budget)
         })
-      case "bpe.train" =>
+      },
+      "bpe.train" -> proc() { call => import call._
         // procedure → appliable function lifecycle, like
         // classifier.train: the trained merges become a registered
         // function that tokenizes any dataset's text column.
@@ -4252,14 +4273,16 @@ final class GraftEngine(val spark: SparkSession) {
             graft.functions.TextFunctions.tokens(
               org.apache.spark.sql.functions.col(textCol)), model)))
         s"""{"functionName": "$fname", "merges": ${model.merges.size}}"""
-      case "ann.quantized" =>
+      },
+      "ann.quantized" -> proc() { call => import call._
         registerOut(graft.operators.Similarity.quantizedTopK(
           dataset(req("inputDataset")), dataset(req("queriesDataset")),
           param("vectorColumn").getOrElse("embedding"),
           param("idColumn").getOrElse("vec_id"),
           k = param("k").map(_.toInt).getOrElse(10),
           rerankFactor = param("rerankFactor").map(_.toInt).getOrElse(4)))
-      case "script.run" =>
+      },
+      "script.run" -> proc() { call => import call._
         // language: scala (host-language snippet) | javascript (the
         // reference's script_procedure language, on JsInterp/JsHost) |
         // python (out-of-process python3, PyBridge — the reference's
@@ -4313,13 +4336,12 @@ final class GraftEngine(val spark: SparkSession) {
         } else {
           val result = Scripting.run(spark, req("source"))
           (result, param("outputDataset")) match {
-            case (df: DataFrame, Some(name)) =>
-              createDataset(name, df)
-              s"""{"outputDataset": "$name", "rowCount": ${df.count()}}"""
+            case (df: DataFrame, Some(_)) => registerOut(df)
             case _ => s"""{"result": ${JsonRow.scalarJson(result)}}"""
           }
         }
-      case "experimental.external.procedure" =>
+      },
+      "experimental.external.procedure" -> proc() { call => import call._
         // `experimental.external.procedure`
         // (`builtin/external_python_procedure.cc`; MLDB-694): run an
         // external python script, piping `stdInData` to its stdin; the
@@ -4332,7 +4354,8 @@ final class GraftEngine(val spark: SparkSession) {
         if (r.returnCode != 0) throw new IllegalArgumentException(
           s"external procedure failed: ${r.stderr}")
         s"""{"status": ${PyBridge.resultJson(r)}}"""
-      case "ranking" =>
+      },
+      "ranking" -> proc(needsFrom = true) { call => import call._
         // `ranking` (`builtin/ranking_procedure.cc:199`;
         // testing/ranking_test.py): rank the inputData's rows by its
         // ORDER BY clause; the output dataset maps each rowName to a
@@ -4358,9 +4381,7 @@ final class GraftEngine(val spark: SparkSession) {
         val stmt2 = stmt.copy(items =
           SelectItem(FnCall("rowname", Seq.empty), Some("rowName")) +:
             SelectItem(Ident(Seq("ts")), Some("__ts")) +: ordItems)
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset, stmt2,
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt2)
         val ordCols = stmt.orderBy.zipWithIndex.map { case (o, i) =>
           if (o.asc) col(s"__ord$i").asc else col(s"__ord$i").desc }
         val ranked = graft.core.DfOps.globalRowNumber(df0, ordCols, "__idx")
@@ -4372,8 +4393,9 @@ final class GraftEngine(val spark: SparkSession) {
           case Some(t) => base.withColumn("ts", lit(t))
           case None => base
         })
+      },
 
-      case "summary.statistics" =>
+      "summary.statistics" -> proc() { call => import call._
         // `summary.statistics` (`builtin/summary_statistics_proc.cc:516`;
         // testing/summary_stats_proc_test.py): one output row per
         // selected column with the reference's value.* cells. The
@@ -4391,9 +4413,7 @@ final class GraftEngine(val spark: SparkSession) {
             s"'${e}' is not a supported SELECT value expression for " +
               "summary.statistics")
         }
-        val df0 = graft.sql.GraftSql.queryStmtTables(spark, dataset, stmt,
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val df0 = queryStmt(stmt)
         // flatten struct (row-valued) columns to dotted leaves, like
         // the reference's path-flattened column set; drop the carried
         // rowName / ts bookkeeping columns
@@ -4441,8 +4461,27 @@ final class GraftEngine(val spark: SparkSession) {
         }
         registerOut(spark.createDataFrame(
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema))
+      },
 
-      case "serial" =>
+      "serial" -> proc(check = { call => import call._
+          // the reference rejects self-containment at CONSTRUCTION
+          // (basic_procedures.cc:113; MLDB-621's deadlock PUT) — a step
+          // whose id names the procedure being created is a 400
+          import graft.js.JsInterp.{JsArrV, JsStr}
+          for {
+            body <- param("__body")
+            selfId <- param("__id")
+            steps <- scala.util.Try(ProcJson.field(ProcJson.parse(body),
+              "params").flatMap(ProcJson.field(_, "steps"))).toOption.flatten
+          } steps match {
+            case a: JsArrV => a.elems.foreach { s =>
+              if (ProcJson.field(s, "id").contains(JsStr(selfId)))
+                throw new IllegalArgumentException(
+                  "Procedure contains itself as a child")
+            }
+            case _ => ()
+          }
+        }) { call => import call._
         // `serial` (`builtin/basic_procedures.cc:64-180`;
         // testing/serial_procedure_test.py): run child procedure
         // CONFIGS in order through this same dispatch; a step that
@@ -4473,8 +4512,9 @@ final class GraftEngine(val spark: SparkSession) {
             stepType, ProcJson.field(s, "params"), stepId))
         }
         s"""{"steps": ${results.mkString("[", ",", "]")}}"""
+      },
 
-      case "permuter.run" =>
+      "permuter.run" -> proc() { call => import call._
         // `permuter.run` (`builtin/permuter_procedure.cc:143-230`;
         // testing/MLDB-991_permuter_procedure.py): cartesian sweep of
         // the `permutations` grid over the child `procedure` config —
@@ -4545,8 +4585,9 @@ final class GraftEngine(val spark: SparkSession) {
           else axes(axis)._2.foreach(v => recur(axis + 1, acc :+ v))
         if (axes.isEmpty) runOne(Seq.empty) else recur(0, Seq.empty)
         out.mkString("[", ",", "]")
+      },
 
-      case "import.word2vec" =>
+      "import.word2vec" -> proc() { call => import call._
         // `import.word2vec` (`plugins/nlp/word2vec.cc:248`;
         // testing/MLDB-1019-word2vec.js): load the word2vec binary
         // into an embedding dataset — rowName from the `named`
@@ -4561,11 +4602,10 @@ final class GraftEngine(val spark: SparkSession) {
         val limit = param("limit").map(_.toLong).getOrElse(-1L)
         val raw = graft.sources.Word2Vec.read(spark, path, offset, limit)
         val namedExpr = param("named").getOrElse("word")
-        val named = graft.sql.GraftSql.queryTables(spark,
-          n => if (n == "__w2v_src") raw else dataset(n),
-          s"select ($namedExpr) as rowName, embedding from __w2v_src",
-          macros = sqlMacros.toMap, lookups = paramLookups.toMap,
-          rowPivots = rowPivotFns.toMap, columnFns = columnFnRegistry.toMap)
+        val named = graft.sql.Lowering.run(
+          dialect(n => if (n == "__w2v_src") raw else dataset(n)),
+          graft.sql.Parser.parse(
+            s"select ($namedExpr) as rowName, embedding from __w2v_src"))
         val dim = named.select(col("embedding")).limit(1).collect()
           .headOption.map(_.getAs[scala.collection.Seq[Float]](0).size)
           .getOrElse(0)
@@ -4574,10 +4614,8 @@ final class GraftEngine(val spark: SparkSession) {
             element_at(col("embedding"), i + 1).cast("double")
               .as(i.toString)): _*)
         registerOut(wide)
-
-      case other =>
-        throw new IllegalArgumentException(s"unknown procedure type '$other'")
-    }
+      })
+    table ++ table.values.flatMap(p => p.aliases.map(_ -> p))
   }
 }
 

@@ -681,12 +681,14 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     server.createContext("/v1/types", (ex: HttpExchange) => handle(ex) {
       val path = ex.getRequestURI.getPath.stripPrefix("/v1/types")
         .stripPrefix("/")
+      // procedure types are the engine's procedure table's keys
+      val catalog = RestServer.typeCatalog +
+        ("procedures" -> engine.procedureTypes.keys.toSeq.sorted)
       (ex.getRequestMethod, path) match {
         case ("GET", "") =>
-          RestServer.typeCatalog.keys.toSeq.sorted
-            .map(jsonStr).mkString("[", ",", "]")
+          catalog.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")
         case ("GET", kind) if !kind.contains("/") =>
-          val types = RestServer.typeCatalog.getOrElse(kind,
+          val types = catalog.getOrElse(kind,
             throw new NoSuchElementException(s"unknown kind '$kind'"))
           types.map(jsonStr).mkString("[", ",", "]")
         case ("GET", kindType) if kindType.endsWith("/info") =>
@@ -694,11 +696,14 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           if (parts.length != 2) throw new IllegalArgumentException(
             s"bad type info path '$kindType'")
           val (kind, tpe) = (parts(0), parts(1))
-          if (!RestServer.typeCatalog.get(kind).exists(_.contains(tpe)))
+          if (!catalog.get(kind).exists(_.contains(tpe)))
             throw new NoSuchElementException(
               s"unknown $kind type '$tpe'")
-          s"""{"configType": {"typeName": ${jsonStr(
-            RestServer.configTypeName(tpe))}, "kind": "STRUCTURE"}}"""
+          val pinned =
+            if (kind == "procedures") engine.procedureTypes(tpe).configType
+            else None
+          s"""{"configType": {"typeName": ${jsonStr(pinned.getOrElse(
+            RestServer.configTypeName(tpe)))}, "kind": "STRUCTURE"}}"""
         case ("POST", "plugins/javascript/routes/run") =>
           val body = new String(ex.getRequestBody.readAllBytes,
             StandardCharsets.UTF_8)
@@ -711,6 +716,11 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           s"unsupported $m /v1/types/$p")
       }
     })
+    // a config body's param lookup; `__body` carries the raw config
+    // JSON to procedures with NESTED child configs (serial,
+    // permuter.run) that a flat key lookup can't express
+    def bodyParams(body: String): String => Option[String] = k =>
+      if (k == "__body") Some(body) else extractFieldOpt(body, k)
     // generic named/typed procedure handling, shared by the
     // /v1/procedures context and the /v1/procedures/transform
     // context's fallthrough (the JDK HttpServer matches contexts by
@@ -728,23 +738,20 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
       else {
       val path = raw.stripPrefix("/")
       (ex.getRequestMethod, path) match {
+        // the legacy routes run the `transform` procedure type with
+        // the body's inputQuery / outputDataset
         case ("POST", "") =>
           val body = new String(ex.getRequestBody.readAllBytes, StandardCharsets.UTF_8)
-          // tiny fixed-shape body parse (no JSON lib): "inputQuery" and
-          // "outputDataset" string fields
-          val input = extractField(body, "inputQuery")
-          val outName = extractField(body, "outputDataset")
-          val out = engine.runTransform(input, outName)
-          s"""{"outputDataset": ${jsonStr(outName)}, "rowCount": ${out.count()}}"""
+          engine.runProcedure("transform", bodyParams(body))
         case ("POST", "runs") =>
           // a NAMED procedure registered as literally 'transform'
           // (MLDB-409 does exactly this) owns …/transform/runs; the
           // legacy async-run body carries inputQuery and disambiguates
           val body = new String(ex.getRequestBody.readAllBytes, StandardCharsets.UTF_8)
           extractFieldOpt(body, "inputQuery") match {
-            case Some(input) =>
-              val outName = extractField(body, "outputDataset")
-              val id = engine.startTransformRun(input, outName)
+            case Some(_) =>
+              val id = engine.startProcedureRunAsync("transform",
+                bodyParams(body))
               s"""{"runId": ${jsonStr(id)}, "state": "executing"}"""
             case None if procedures.contains("transform") =>
               proceduresDispatch(ex, "transform/runs")
@@ -813,12 +820,8 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // anonymous creation also answers 201 like the reference's
           // PolyCollection POST (MLDBFB-332 asserts it on /v1/procedures)
           val body = readBody()
-          val tpe = extractField(body, "type")
-          // `__body`/`__id` carry the raw config JSON and entity id to
-          // procedures with NESTED child configs (serial, permuter.run)
-          // that a flat key lookup can't express
-          Created(engine.runProcedure(tpe, k =>
-            if (k == "__body") Some(body) else extractFieldOpt(body, k)))
+          Created(engine.runProcedure(extractField(body, "type"),
+            bodyParams(body)))
         case ("PUT", name) if !name.contains("/") =>
           val body = readBody()
           val tpe = extractField(body, "type")
@@ -1735,30 +1738,14 @@ object RestServer {
   private[api] def ensureNoDelay(): Unit = ensured
 
   /** The per-kind type registry behind `/v1/types/<kind>`
-    * (`server/mldb_server.cc` type collections). Names mirror the
-    * engine's dispatch cases — the listing is what a reference client
-    * enumerates before PUTting a config of that type. */
+    * (`server/mldb_server.cc` type collections) — the listing is what a
+    * reference client enumerates before PUTting a config of that type.
+    * Procedure types come from `GraftEngine.procedureTypes`. */
   private[api] val typeCatalog: Map[String, Seq[String]] = Map(
     "datasets" -> Seq("tabular", "sparse.mutable", "beh", "beh.mutable",
       "beh.binary", "beh.binary.mutable", "merged", "transposed",
       "sampled", "union", "embedding", "continuous", "continuous.window",
       "sqliteSparse", "text.csv.tabular", "text.line"),
-    "procedures" -> Seq("transform", "import.text", "import.json",
-      "import.git", "import.sqlite", "import.xlsx",
-      "experimental.import.xlsx", "import.sentiwordnet",
-      "import.word2vec", "export.csv", "melt", "split", "bucketize",
-      "ranking", "summary.statistics", "serial", "permuter.run",
-      "createEntity", "null", "mock", "classifier.train",
-      "classifier.test", "classifier.experiment", "probabilizer.train",
-      "kmeans.train", "gaussianclustering.train", "svm.train",
-      "svd.train", "tsne.train", "tfidf.train", "bpe.train",
-      "statsTable.train", "statsTable.bagOfWords.train",
-      "experimental.statsTable.derivedColumnsGenerator",
-      "experimental.distTable.train", "randomforest.binary.train",
-      "script.run", "experimental.external.procedure",
-      "dataset.stats", "list.files",
-      "mongodb.import", "mongodb.export", "postgresql.import",
-      "postgresql.export"),
     "functions" -> Seq("sql.expression", "sql.query", "classifier",
       "classifier.explain", "probabilizer", "svm", "kmeans",
       "gaussianclustering", "svd.embedRow", "tfidf", "tokensplit",
@@ -1768,21 +1755,12 @@ object RestServer {
       "http.useragent", "melt", "import.word2vec.embed"),
     "plugins" -> Seq("javascript", "python", "scala"))
 
-  /** Reference config struct name for `/v1/types/<kind>/<t>/info`
-    * (e.g. `plugins/embedding/svd.cc` SvdConfig). Pinned names for
-    * the types the reference's tests introspect; the rest derive
-    * mechanically. */
-  private[api] def configTypeName(tpe: String): String = tpe match {
-    case "svd.train" => "MLDB::SvdConfig"
-    case "kmeans.train" => "MLDB::KmeansConfig"
-    case "tsne.train" => "MLDB::TsneConfig"
-    case "classifier.train" => "MLDB::ClassifierConfig"
-    case "classifier.test" => "MLDB::AccuracyConfig"
-    case "transform" => "MLDB::TransformDatasetConfig"
-    case "import.text" => "MLDB::ImportTextConfig"
-    case other =>
-      "MLDB::" + other.split("[._]").map(_.capitalize).mkString + "Config"
-  }
+  /** Reference config struct name for `/v1/types/<kind>/<t>/info`,
+    * derived from the type name (`svd.train` → `MLDB::SvdTrainConfig`).
+    * A procedure type may pin the reference's own name instead
+    * (`plugins/embedding/svd.cc` SvdConfig). */
+  private[api] def configTypeName(tpe: String): String =
+    "MLDB::" + tpe.split("[._]").map(_.capitalize).mkString + "Config"
 
   /** `/v1/typeInfo` kinds for the value descriptions the reference's
     * tests ask about (MLDB-497). */

@@ -191,18 +191,24 @@ object Sources {
     } finally zf.close()
   }
 
+  /** The one existence check of every file import: a missing local
+    * input is the reference's open error, verbatim shape
+    * (testing/MLDB-1395-error-message-file-doesnt-exist.js). Globs are
+    * left to the reader. Returns the path without its `file://`. */
+  def requireFile(url: String): String = {
+    val raw = url.stripPrefix("file://")
+    if (!raw.contains("*") && !new java.io.File(raw).exists())
+      throw new IllegalArgumentException(
+        s"Opening file $raw: No such file or directory")
+    raw
+  }
+
   /** `import.text` — CSV/TSV import. */
   def importText(spark: SparkSession, path00: String,
       cfg: TextImportConfig = TextImportConfig()): DataFrame = {
     val path0 =
       if (isArchiveUrl(path00)) resolveArchiveMember(path00) else path00
-    // the reference's open error, verbatim shape
-    // (testing/MLDB-1395-error-message-file-doesnt-exist.js)
-    val raw0 = path0.stripPrefix("file://")
-    if (!raw0.contains("*") &&
-        !new java.io.File(raw0).exists())
-      throw new IllegalArgumentException(
-        s"Opening file $raw0: No such file or directory")
+    requireFile(path0)
     val path = maybeDecompress(path0)
     val hasHeaderRow0 =
       cfg.headers && !cfg.autoGenerateHeaders && cfg.headerNames.isEmpty
@@ -510,6 +516,7 @@ object Sources {
       named: Option[String] = None, ignoreBadLines: Boolean = false,
       arrays: String = "encode"): DataFrame = {
     import org.apache.spark.sql.types._
+    requireFile(path0)
     val path = maybeDecompress(path0)
     val numbered0 = spark.read.text(path).rdd.zipWithIndex.map {
       case (row, i) => org.apache.spark.sql.Row(row.getString(0), i + 1L)
@@ -675,6 +682,7 @@ object Sources {
     * result is broadcastable downstream. */
   def importSentiWordNet(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
+    requireFile(path)
     val lines = spark.read.text(path)
       .filter(!col("value").startsWith("#") && length(trim(col("value"))) > 0)
     val f = split(col("value"), "\t")

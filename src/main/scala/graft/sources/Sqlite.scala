@@ -268,7 +268,7 @@ object Sqlite {
 
   def importSqlite(spark: SparkSession, path: String,
       table: String): DataFrame = {
-    val db = new Db(Files.readAllBytes(Paths.get(path)))
+    val db = new Db(Files.readAllBytes(Paths.get(Sources.requireFile(path))))
     val info = master(db).getOrElse(table,
       throw new IllegalArgumentException(
         s"table $table not found in $path (have: ${master(db).keys.mkString(", ")})"))

@@ -23,7 +23,8 @@ object Word2Vec {
     * transparently like the reference's filter_istream. */
   def read(spark: SparkSession, path: String, offset: Long = 0L,
       limit: Long = -1L): DataFrame = {
-    val base: java.io.InputStream = new FileInputStream(path)
+    val base: java.io.InputStream =
+      new FileInputStream(Sources.requireFile(path))
     val stream = if (path.endsWith(".gz"))
       new java.util.zip.GZIPInputStream(base) else base
     val in = new DataInputStream(new java.io.BufferedInputStream(stream))

@@ -59,7 +59,7 @@ object Xlsx {
 
   def importXlsx(spark: SparkSession, path: String,
       sheets: Option[Seq[String]] = None): DataFrame = {
-    val zf = new ZipFile(path)
+    val zf = new ZipFile(Sources.requireFile(path))
     try {
       def open(name: String) = Option(zf.getEntry(name)).map(zf.getInputStream)
 

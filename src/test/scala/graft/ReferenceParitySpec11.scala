@@ -62,12 +62,13 @@ class ReferenceParitySpec11 extends AnyFunSuite {
   test("MLDB-1258: FROM-less procedure inputs are 400 at PUT (tests 1-10)") {
     val engine = new api.GraftEngine(spark)
     engine.recordRows("ds1258", """[{"rowName":"a","label":1}]""")
-    withServer(engine) { (_, put, _) =>
+    withServer(engine) { (_, put, post) =>
+      def config(tpe: String, key: String): String =
+        s"""{"type": "$tpe", "params": {
+           |"$key": "select {* EXCLUDING(quality)} as features, 1 as label",
+           |"runOnCreation": true}}""".stripMargin
       def tryPut(tpe: String, key: String): (Int, String) =
-        put("/v1/procedures/trainer1258",
-          s"""{"type": "$tpe", "params": {
-             |"$key": "select {* EXCLUDING(quality)} as features, 1 as label",
-             |"runOnCreation": true}}""".stripMargin)
+        put("/v1/procedures/trainer1258", config(tpe, key))
       for ((tpe, key) <- Seq(
           "classifier.train" -> "trainingData",
           "kmeans.train" -> "trainingData",
@@ -80,6 +81,10 @@ class ReferenceParitySpec11 extends AnyFunSuite {
         val (c, b) = tryPut(tpe, key)
         assert(c === 400, s"$tpe: $b")
         assert(b.contains("must contain a FROM clause"), s"$tpe: $b")
+        // an anonymous POST validates the same config the same way
+        val (pc, pb) = post("/v1/procedures", config(tpe, key))
+        assert(pc === 400, s"POST $tpe: $pb")
+        assert(pb.contains("must contain a FROM clause"), s"POST $tpe: $pb")
       }
     }
   }

@@ -744,4 +744,62 @@ class RestSpec extends AnyFunSuite {
       assert(engine.query("SELECT a FROM patate").select("a").head().getString(0) === "b")
     } finally srv.stop()
   }
+
+  private def post(port: Int, path: String, body: String): (Int, String) = {
+    val r = client.send(HttpRequest
+      .newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  test("/v1/types/procedures lists exactly the procedure types that run") {
+    val engine = new GraftEngine(spark)
+    val srv = new RestServer(engine)
+    val port = srv.start()
+    try {
+      val (c, b) = get(port, "/v1/types/procedures")
+      assert(c === 200, b)
+      val listed = "\"([^\"]+)\"".r.findAllMatchIn(b).map(_.group(1)).toSeq
+      assert(listed.size > 50, b)
+      // every listed type dispatches: with no params it fails on a
+      // missing param, never as an unknown type
+      for (t <- listed) {
+        val err = scala.util.Try(engine.runProcedure(t, _ => None))
+          .failed.toOption.map(e => String.valueOf(e.getMessage))
+        assert(!err.exists(_.contains("unknown procedure type")), s"$t: $err")
+      }
+      for (t <- Seq("dedup.minhash", "pipeline.curate", "sample.dsir"))
+        assert(listed.contains(t), b)
+      assert(get(port, "/v1/types/procedures/dedup.minhash/info")._1 === 200)
+      assert(get(port,
+        "/v1/types/procedures/randomforest.binary.train/info")._1 === 404)
+      assert(!listed.contains("randomforest.binary.train"), b)
+    } finally srv.stop()
+  }
+
+  test("a missing input file is one 400 for every file import type") {
+    val engine = new GraftEngine(spark)
+    val srv = new RestServer(engine)
+    val port = srv.start()
+    val missing = java.nio.file.Files.createTempDirectory("missing")
+      .resolve("absent")
+    try {
+      for ((tpe, ext) <- Seq("import.text" -> "csv", "import.json" -> "json",
+          "import.sentiwordnet" -> "txt", "import.sqlite" -> "db",
+          "import.xlsx" -> "xlsx", "import.word2vec" -> "bin")) {
+        val path = s"$missing.$ext"
+        val msg = s"Opening file $path: No such file or directory"
+        val params = Map("dataFileUrl" -> s"file://$path",
+          "outputDataset" -> "missing_out")
+        val ex = intercept[IllegalArgumentException](
+          engine.runProcedure(tpe, params.get _))
+        assert(ex.getMessage === msg, tpe)
+        val (c, b) = post(port, "/v1/procedures",
+          s"""{"type": "$tpe", "params": {"dataFileUrl": "file://$path", """ +
+            """"outputDataset": "missing_out"}}""")
+        assert(c === 400 && b.contains(msg), s"$tpe: $c $b")
+      }
+    } finally srv.stop()
+  }
 }
