@@ -2403,6 +2403,12 @@ final class GraftEngine(val spark: SparkSession) {
     def inputQuery(key: String, what: String): String =
       param(key).orElse(structuredInput(param)).getOrElse(undefined(what))
     def inputQuery(key: String): String = inputQuery(key, key)
+    /** `bucketize`'s `percentileBuckets` ranges, parsed once: its
+      * creation-time check parses them, its run body reuses them. */
+    lazy val percentileBuckets: Seq[(String, Double, Double)] =
+      parsePercentileBuckets(param("percentileBuckets").getOrElse(
+        throw new IllegalArgumentException(
+          "bucketize needs percentileBuckets")))
     def pgConfig: graft.sources.Postgres.PgConfig =
       graft.sources.Postgres.PgConfig(
         req("host"), param("port").map(_.toInt).getOrElse(5432),
@@ -2531,9 +2537,7 @@ final class GraftEngine(val spark: SparkSession) {
           check = { call => import call._
             require(param("inputData").orElse(param("inputQuery")).nonEmpty,
               "You need to define inputData")
-            parsePercentileBuckets(param("percentileBuckets").getOrElse(
-              throw new IllegalArgumentException(
-                "bucketize needs percentileBuckets")))
+            percentileBuckets
             ()
           }) { call => import call._
         // `bucketize` with the reference's NAMED percentile ranges
@@ -2543,9 +2547,9 @@ final class GraftEngine(val spark: SparkSession) {
         // with the input's latest timestamp. The input query is
         // augmented with `rowName() AS rowName` when absent so output
         // rows keep their names.
-        val input = param("inputData").orElse(param("inputQuery"))
-          .getOrElse(undefined("inputData"))
-        val buckets = parsePercentileBuckets(req("percentileBuckets"))
+        // the check, run first, required one of the two
+        val input = param("inputData").orElse(param("inputQuery")).get
+        val buckets = percentileBuckets
         import graft.sql.Ast._
         val stmt = graft.sql.Parser.parse(input)
         val hasRn = stmt.items.exists {

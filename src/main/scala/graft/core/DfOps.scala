@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Distributed frame utilities shared across the engine.
@@ -333,32 +335,23 @@ object DfOps {
     joined.select(keep ++ outCols: _*)
   }
 
-  /** Top-k rows per `group` under `order`, adding a 1-based `rkCol`,
-    * WITHOUT a group-keyed window over the full data. A plain
-    * `Window.partitionBy(group)` funnels every row of a group through
-    * ONE task — for a group with ~|table| rows (a high-cardinality
-    * value melted under one column name) that task IS the table.
-    * Instead the classic two-stage top-k: rows are salted into
-    * `saltBuckets` deterministic sub-groups (hash of the whole row),
-    * a per-(group, salt) window keeps each bucket's top-k (partitions
-    * are ~|group|/saltBuckets), and a second window over the ≤
-    * k·saltBuckets survivors per group picks the final top-k. `order`
-    * must be a total order within a group (e.g. carry a unique
-    * tiebreak column) or bucket boundaries make the result
-    * nondeterministic. */
-  def topKPerGroup(df: DataFrame, group: Column, order: Seq[Column],
-      k: Int, rkCol: String = "rk", saltBuckets: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k > 0 && saltBuckets > 0)
-    val salt = pmod(hash(df.columns.map(c => col(s"`$c`")): _*),
-      lit(saltBuckets))
-    val w1 = Window.partitionBy(group, col("__tk_salt")).orderBy(order: _*)
-    val w2 = Window.partitionBy(group).orderBy(order: _*)
-    df.withColumn("__tk_salt", salt)
-      .withColumn("__tk_rk1", row_number().over(w1))
-      .filter(col("__tk_rk1") <= k)
-      .withColumn(rkCol, row_number().over(w2))
-      .filter(col(s"`$rkCol`") <= k)
-      .drop("__tk_salt", "__tk_rk1")
+  /** Starts `body`, which runs Spark actions, on a pool thread that
+    * carries the caller's local properties (job group, description,
+    * scheduler pool) and active session, so its jobs are grouped,
+    * cancelled and counted with the caller's own. A plain `Future` on a
+    * shared pool would run on a thread that keeps whatever properties
+    * it inherited when it was created. The returned join rethrows the
+    * body's own exception. */
+  def inBackground[T](spark: SparkSession)(body: => T): () => T = {
+    val f = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], backgroundPool)(body)
+    () => try f.get() catch { case e: ExecutionException => throw e.getCause }
   }
+
+  private lazy val backgroundPool: ExecutorService =
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-background")
+      t.setDaemon(true)
+      t
+    }
 }

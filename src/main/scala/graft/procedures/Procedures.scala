@@ -516,21 +516,26 @@ object Procedures {
   /** `summary.statistics` with the reference's exact output shape.
     *
     * The reference runs 2 queries per column; here ALL columns share
-    * three distributed passes regardless of width: (1) one aggregate
-    * row with every column's count/min/max/avg/stddev/distinct, (2)
-    * one melt → groupBy(column, value) count for the numeric columns'
-    * quartiles + most-frequent, (3) the same for categorical columns.
-    * Scale shape: a window partitioned by column NAME would put a
-    * continuous column's ENTIRE distinct-value set (≈ row count)
-    * through one task and one driver collect, so instead quartiles
-    * ride the range-partitioned prefix sum
-    * ([[graft.core.DfOps.groupedRunningSums]]) folded into a
-    * per-column `min(v) WHERE cum > nn·t` aggregate
-    * ([[numericQuartileFrame]] — one output row per column), and
-    * most-frequent rides the salted two-stage top-k
-    * ([[graft.core.DfOps.topKPerGroup]], [[topFrequentFrame]] —
-    * rk ≤ 10 BEFORE the collect). Driver collects are #columns-sized
-    * by construction (3 quartiles + ≤10 frequent items per column).
+    * three passes regardless of width: (1) one aggregate row with
+    * every column's count/min/max/avg/stddev/distinct, (2) one melt →
+    * `(c, v, cnt)` count table for the numeric columns' quartiles,
+    * most-frequent items and distinct counts, (3) the same for the
+    * categorical columns' most-frequent items.
+    *
+    * Pass 2's table is pinned range-partitioned by (c, v) and sorted
+    * within each partition ([[SummaryCounts.pinSorted]]); then two jobs
+    * read it ([[SummaryCounts.numeric]]): one digest of every
+    * (partition, column) — count total, row count, local top-10 — and
+    * one walk over only the partitions where a quartile crosses. Pass
+    * 3 takes its top-10 from the same digest over its grouped table. No
+    * window is keyed by the column name, so no task ever holds a
+    * continuous column's whole value set, and every driver collect is
+    * partitions × columns rows of at most 10 items.
+    *
+    * Pass 1 overlaps the statically-numeric count table's pin, on a
+    * thread that carries the caller's local properties
+    * ([[graft.core.DfOps.inBackground]]), so its jobs stay in the
+    * caller's job group.
     *
     * Numeric/categorical per the reference's probe: a column is
     * numeric when it has ≥1 non-null value and every non-null value
@@ -608,32 +613,24 @@ object Procedures {
            Seq(countDistinct(col(s"`$c`")).as(s"${c}__nUnique"))
          else Seq(countDistinct(strExpr(c)).as(s"${c}__nUnique")))
     }
-    def meltedOver(ncols: Seq[String]) = df.select(explode(array(
-      ncols.map(c =>
-        struct(lit(c).as("c"), numExpr(c).as("v"))): _*)).as("cv"))
-      .select(col("cv.c").as("c"), col("cv.v").as("v"))
-      .filter(col("v").isNotNull)
+    def melted(ncols: Seq[String], value: String => Column) =
+      df.select(explode(array(ncols.map(c =>
+        struct(lit(c).as("c"), value(c).as("v"))): _*)).as("cv"))
+        .select(col("cv.c").as("c"), col("cv.v").as("v"))
+        .filter(col("v").isNotNull)
     // Overlap the two big scans (guide §2.6 — concurrent independent
-    // jobs back-fill each other's stragglers): pass 1 runs in a future
-    // while the statically-numeric count table materializes. The
-    // static table is correct regardless of pass 1's outcome — an
+    // jobs back-fill each other's stragglers): pass 1 runs in the
+    // background while the statically-numeric count table is pinned.
+    // The static table is correct regardless of pass 1's outcome — an
     // all-null static column just contributes zero rows.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // blocking{}: these futures hold Spark actions for seconds on the
-    // process-wide ForkJoin pool — mark them so the pool compensates
-    // and concurrent summaryStatistics calls cannot starve it
-    val rowF = Future(blocking { df.agg(aggs.head, aggs.tail: _*).head() })
-    // materialized ALREADY range-partitioned by (c, v): the quartile
-    // pass reads it in place — one pin instead of r14's two (hash
-    // count table + groupedRunningSums' internal range pin)
-    val staticGrouped: Option[DataFrame] =
-      if (cols.exists(staticNumeric)) Some(rangedCountTable(
-        meltedOver(cols.filter(staticNumeric))
-          .groupBy(col("c"), col("v")).agg(count(lit(1)).as("cnt"))))
+    val rowF = graft.core.DfOps.inBackground(df.sparkSession) {
+      df.agg(aggs.head, aggs.tail: _*).head()
+    }
+    val staticSorted: Option[DataFrame] =
+      if (cols.exists(staticNumeric))
+        Some(SummaryCounts.pinSorted(melted(cols.filter(staticNumeric), numExpr)))
       else None
-    val row = Await.result(rowF, Duration.Inf)
+    val row = rowF()
     val total = row.getAs[Long]("__total")
     def g[T](c: String, st: String): T =
       row.getAs[T](s"${c}__$st")
@@ -642,83 +639,36 @@ object Procedures {
       nn > 0 && g[Long](c, "nNum") == nn
     }
     val catCols = cols.filterNot(numericCols.contains)
-    // distinct-value counts derived from the grouped tables for
-    // statically-numeric columns (one #columns-sized collect each)
-    val derivedUnique = scala.collection.mutable.Map.empty[String, Long]
-    // pass 2: numeric grouped counts → quartiles + most frequent.
-    // BOTH driver collects here are #columns-bounded BY CONSTRUCTION:
-    // the quartile frame is one groupBy(c) row per column and the
-    // top-10 frame is rk<=10-filtered BEFORE the collect. Neither uses
-    // a Window partitioned by column NAME over the full distinct-value
-    // table (cardinality = #columns — a continuous column's whole
-    // value set through one task, and a driver-sized collect at 100 TB).
-    val numStats: Map[String, (Array[Double], Seq[(String, Long)])] =
+    // pass 2: numeric count table → quartiles, most frequent, and the
+    // distinct counts of derive-eligible columns
+    val numStats: Map[String, SummaryCounts.NumericCounts] =
       if (numericCols.isEmpty) Map.empty
       else {
         // the pre-built static table covers every numeric column unless
         // a STRING column turned out numeric-in-content — only then pay
         // a second (sequential) melt over the full numeric set
-        val grouped =
-          if (numericCols.forall(staticNumeric) && staticGrouped.nonEmpty)
-            staticGrouped.get
-          else rangedCountTable(meltedOver(numericCols)
-            .groupBy(col("c"), col("v")).agg(count(lit(1)).as("cnt")))
-        // the unique-count and top-10 consumers don't read the pid
-        val flat = grouped.drop("__q_pid")
-        val nn = numericCols.map(c => c -> g[Long](c, "nNotNull")).toMap
-        // the pinned count table feeds three INDEPENDENT #columns-sized
-        // outputs (unique counts, quartiles, top-10) — submit the jobs
-        // concurrently so their stages interleave on the executors
-        // instead of running back to back
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val uniqF =
-          if (numericCols.exists(deriveUnique))
-            Future(blocking { flat.groupBy(col("c"))
-              .agg(count(lit(1)).as("u")).collect() })
-          else // nothing reads it: every numeric column here has a
-               // pass-1 countDistinct
-            Future.successful(Array.empty[org.apache.spark.sql.Row])
-        val qF = Future(blocking { numericQuartileFrame(grouped, nn).collect() })
-        val topF = Future(blocking { topFrequentFrame(flat).collect() })
-        Await.result(uniqF, Duration.Inf)
-          .foreach(r => derivedUnique(r.getString(0)) = r.getLong(1))
-        val qRows = Await.result(qF, Duration.Inf)
-        val qs = qRows.map { r =>
-          def q(i: Int): Double =
-            if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-          r.getString(0) -> Array(q(1), q(2), q(3))
-        }.toMap
-        val topRows = Await.result(topF, Duration.Inf)
-        numericCols.map { c =>
-          val top = topRows.filter(_.getString(0) == c)
-            .sortBy(_.getAs[Int]("rk"))
-            .map(r => numItemName(r.getDouble(1)) -> r.getAs[Long]("cnt"))
-            .toSeq
-          c -> (qs.getOrElse(c, Array(Double.NaN, Double.NaN, Double.NaN)),
-            top)
-        }.toMap
+        val sorted =
+          if (numericCols.forall(staticNumeric) && staticSorted.nonEmpty)
+            staticSorted.get
+          else SummaryCounts.pinSorted(melted(numericCols, numExpr))
+        SummaryCounts.numeric(sorted,
+          numericCols.map(c => c -> g[Long](c, "nNotNull")).toMap)
       }
-    // pass 3: categorical grouped counts → most frequent (same
-    // two-stage top-k; the collect is rk<=10-filtered first)
+    // pass 3: categorical count table → most frequent; each (c, v)
+    // lies whole in one of the groupBy's partitions, which is all the
+    // digest's top-10 needs
     val catTops: Map[String, Seq[(String, Long)]] =
       if (catCols.isEmpty) Map.empty
       else {
-        val melted = df.select(explode(array(catCols.map(c =>
-          struct(lit(c).as("c"), strExpr(c).as("v"))): _*)).as("cv"))
-          .select(col("cv.c").as("c"), col("cv.v").as("v"))
-          .filter(col("v").isNotNull)
-        val grouped = melted.groupBy(col("c"), col("v"))
+        val grouped = melted(catCols, strExpr).groupBy(col("c"), col("v"))
           .agg(count(lit(1)).as("cnt"))
-        val collected = topFrequentFrame(grouped).collect()
-        catCols.map { c =>
-          c -> collected.filter(_.getString(0) == c)
-            .sortBy(_.getAs[Int]("rk"))
-            .map(r => r.getString(1) -> r.getAs[Long]("cnt")).toSeq
-        }.toMap
+        SummaryCounts.topOf(
+          SummaryCounts.digest(grouped, SummaryCounts.Strings),
+          SummaryCounts.Strings).map { case (c, top) =>
+            c -> top.map { case (v, n) => v.toString -> n }
+          }
       }
-    // derive-eligible types: from the grouped table (an all-null
+    // derive-eligible types: the count table's row count (an all-null
     // column melts to zero rows → 0, matching countDistinct), plus one
     // for a float column holding BOTH zero signs (the groupBy
     // normalized them into one row; the string rendering — and the
@@ -728,11 +678,13 @@ object Procedures {
       if (deriveUnique(c)) {
         val negZeroPair = fpCols(c) && numericCols.contains(c) &&
           g[Long](c, "negZero") == 1L && g[Long](c, "posZero") == 1L
-        derivedUnique.getOrElse(c, 0L) + (if (negZeroPair) 1L else 0L)
+        numStats.get(c).map(_.unique).getOrElse(0L) +
+          (if (negZeroPair) 1L else 0L)
       } else g[Long](c, "nUnique")
     cols.map { c =>
       if (numericCols.contains(c)) {
-        val (qs, top) = numStats(c)
+        val st = numStats(c)
+        val qs = st.quartiles
         val nn = g[Long](c, "nNotNull")
         val std = Option(g[java.lang.Double](c, "std"))
           .map(_.doubleValue).getOrElse(Double.NaN)
@@ -745,7 +697,8 @@ object Procedures {
           "avg" -> g[java.lang.Double](c, "avg").doubleValue,
           "stddev" -> (if (nn <= 1) Double.NaN else std),
           "1st_quartile" -> qs(0), "median" -> qs(1),
-          "3rd_quartile" -> qs(2)), top)
+          "3rd_quartile" -> qs(2)),
+          st.top.map { case (v, n) => numItemName(v) -> n })
       } else {
         val nn = g[Long](c, "nNotNull")
         ColSummary(c, Map(
@@ -756,105 +709,6 @@ object Procedures {
       }
     }
   }
-
-  /** The per-(column, value) count table `(c, v, cnt)` range-partitioned
-    * by (c, v) with the physical partition id attached, PINNED
-    * (DfOps.cut — the totals pass and the selection pass must see the
-    * same row→partition assignment, the globalRowNumber discipline).
-    * This is the ONE materialization the quartile path needs; r14 paid
-    * two (the hash-partitioned count table + groupedRunningSums' own
-    * internal range pin). */
-  private[graft] def rangedCountTable(counts: DataFrame): DataFrame = {
-    val p = counts.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt
-    graft.core.DfOps.cut(counts
-      .repartitionByRange(math.max(p, 1), col("c"), col("v"))
-      .withColumn("__q_pid", spark_partition_id()))
-  }
-
-  /** One row per column: (c, q1, q2, q3) where each quartile is the
-    * reference's "first value (ascending) whose cumulative count
-    * strictly exceeds nn·t" (summary_statistics_proc.cc:516). Input is
-    * the per-(column, value) count table `(c, v: double, cnt)` —
-    * pre-ranged by [[rangedCountTable]] or raw; `nn` maps each column
-    * to its non-null count (known from pass 1).
-    *
-    * Fused range-partitioned selection (r15): per-(partition, column)
-    * count totals are ONE aggregation, collected (#partitions ×
-    * #columns rows — the globalRowNumber discipline); the driver
-    * prefix-sums them to locate each threshold's CROSSING partition
-    * (the first partition whose inclusive cumulative exceeds nn·t);
-    * then one pass over just the crossing partitions (≤ 3 per column,
-    * ~1/#partitions of the table) computes the inclusive cumulative
-    * count with a (partition, column)-local window + the collected
-    * offset and folds the quartile selection into one `min(when(...))`
-    * aggregate per threshold. Equivalence with the r14
-    * groupedRunningSums shape: `cum` here is the same long
-    * (partition offset + local inclusive prefix), the comparison
-    * `cum > nn·t` is textually identical, and the global first-crossing
-    * value for each threshold lives in that threshold's crossing
-    * partition (cum is monotone in v within a column and partitions are
-    * v-ordered), so `min(when(...))` over the crossing partitions picks
-    * exactly the row the full-table formulation picked. No
-    * column-name-keyed window anywhere; the output — and any collect of
-    * it — stays exactly #columns rows. */
-  private[graft] def numericQuartileFrame(grouped: DataFrame,
-      nn: Map[String, Long]): DataFrame = {
-    val ranged =
-      if (grouped.columns.contains("__q_pid")) grouped
-      else rangedCountTable(grouped)
-    val totals = ranged.groupBy(col("__q_pid"), col("c"))
-      .agg(sum(col("cnt")).as("t")).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    // driver prefix over pids within each column → (pid, offset, cumIncl)
-    val byCol = totals.groupBy(_._2).map { case (c0, rows) =>
-      var acc = 0L
-      c0 -> rows.sortBy(_._1).map { case (pid, _, t) =>
-        val off = acc; acc += t; (pid, off, acc) }
-    }
-    // crossing partition per (column, threshold), with its offset
-    val crossing = scala.collection.mutable.LinkedHashMap.empty[(Int, String), Long]
-    byCol.foreach { case (c0, rows) =>
-      nn.get(c0).foreach { n =>
-        Seq(0.25, 0.5, 0.75).foreach { t =>
-          rows.find { case (_, _, cumIncl) => cumIncl > n * t }
-            .foreach { case (pid, off, _) => crossing((pid, c0)) = off }
-        }
-      }
-    }
-    if (crossing.isEmpty) // no rows for any nn column: empty, same schema
-      return ranged.select(col("c"), col("v").as("q1"),
-        col("v").as("q2"), col("v").as("q3")).limit(0)
-    val candPred = crossing.keys.map { case (p, c0) =>
-      col("__q_pid") === p && col("c") === c0 }.reduce(_ || _)
-    val offExpr = crossing.foldLeft(lit(null).cast("long")) {
-      case (acc, ((p, c0), off)) =>
-        when(col("__q_pid") === p && col("c") === c0, off).otherwise(acc)
-    }
-    val wLoc = Window.partitionBy(col("__q_pid"), col("c"))
-      .orderBy(col("v")).rowsBetween(Window.unboundedPreceding, 0)
-    val nnExpr = element_at(
-      map(nn.toSeq.flatMap { case (c0, n0) =>
-        Seq(lit(c0), lit(n0.toDouble)) }: _*), col("c"))
-    val cum = sum(col("cnt")).over(wLoc) + offExpr // inclusive cumulative
-    ranged.filter(candPred)
-      .withColumn("__q_cum", cum)
-      .withColumn("__q_nn", nnExpr)
-      .groupBy(col("c")).agg(
-        min(when(col("__q_cum") > col("__q_nn") * 0.25, col("v"))).as("q1"),
-        min(when(col("__q_cum") > col("__q_nn") * 0.5, col("v"))).as("q2"),
-        min(when(col("__q_cum") > col("__q_nn") * 0.75, col("v"))).as("q3"))
-  }
-
-  /** Top-`k` most-frequent values per column over the `(c, v, cnt)`
-    * count table, ordered like the reference's `MostFrequents` heap
-    * (count first, larger value on ties), with the `rk <= k` filter
-    * applied BEFORE any collect. Rides the salted two-stage top-k so
-    * no task ever holds a whole column's distinct-value set. */
-  private[graft] def topFrequentFrame(grouped: DataFrame,
-      k: Int = 10): DataFrame =
-    graft.core.DfOps.topKPerGroup(grouped, col("c"),
-      Seq(col("cnt").desc, col("v").desc), k)
 
   /** The reference renders numeric most-frequent item names through
     * `CellValue::toString` — integers without a decimal point

@@ -290,6 +290,25 @@ class ProceduresSpec extends AnyFunSuite {
     assert(si.head.stats("num_unique") === 3L)
   }
 
+  test("summary statistics jobs carry the calling thread's job group") {
+    // pass 1 runs on another thread while the count table is pinned;
+    // every job of each call must carry that call's group, not the
+    // group of whichever call first started the helper thread
+    val df = Tables.lineitem(spark, sf).select("l_extendedprice", "l_quantity")
+    val sc = spark.sparkContext
+    Seq("graft-spec-a", "graft-spec-b").foreach { group =>
+      sc.setJobGroup(group, "summary statistics")
+      try {
+        val (_, groups) = JobLog.record(spark) {
+          Procedures.summaryStatisticsReference(df, df.columns.toSeq)
+        }
+        assert(groups.nonEmpty)
+        assert(groups.forall(_.contains(group)),
+          s"$group: ${groups.mkString(", ")}")
+      } finally sc.clearJobGroup()
+    }
+  }
+
   test("bucketize approx matches exact within one bucket at the edges") {
     val exact = Procedures.bucketize(Tables.orders(spark, sf),
       "o_totalprice", "o_orderkey", 10)

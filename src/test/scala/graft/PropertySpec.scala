@@ -393,35 +393,108 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("topKPerGroup equals the window top-k on arbitrary count " +
-      "distributions, across salt-bucket settings") {
-    import org.apache.spark.sql.expressions.Window
-    val poolGen: Gen[Int] = Gen.oneOf(1, 4, 64)
-    forSamples(poolGen, 3) { salts =>
-      val rnd = new scala.util.Random(salts * 31 + 7)
-      val rows = (0 until 1500).map { i =>
-        ("c" + rnd.nextInt(5), rnd.nextInt(400).toDouble,
+  test("summary count-table pass equals brute force: quartiles, top-10 " +
+      "and num_unique, with NaN, ±0.0, nulls, ties and placed partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.sql.types._
+    import graft.procedures.{Procedures, SummaryCounts}
+    // the generator the salted top-k property used: five columns,
+    // values from a small pool (ties on both count and value), counts
+    // 1–50 — now with NaN and both zero signs in the pool, plus a
+    // single-value column
+    def countTable(seed: Int): Seq[(String, Double, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val pool = Seq(Double.NaN, -0.0, 0.0) ++ (1 to 40).map(_.toDouble)
+      val rows = (0 until 300).map { _ =>
+        ("c" + rnd.nextInt(5), pool(rnd.nextInt(pool.size)),
           (1 + rnd.nextInt(50)).toLong)
-      }
-      val s2 = spark
-      import s2.implicits._
-      // dedup (c, v) so the (cnt desc, v desc) order is total within a
-      // group — the helper's documented contract
-      val df = rows.toDF("c", "v", "cnt")
-        .groupBy("c", "v").agg(max("cnt").as("cnt")).repartition(5)
-      val got = core.DfOps.topKPerGroup(df, col("c"),
-        Seq(col("cnt").desc, col("v").desc), 10, saltBuckets = salts)
-        .select("c", "v", "cnt", "rk").collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
-          r.getInt(3))).toSet
-      val w = Window.partitionBy(col("c"))
-        .orderBy(col("cnt").desc, col("v").desc)
-      val want = df.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 10)
-        .select("c", "v", "cnt", "rk").collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
-          r.getInt(3))).toSet
-      assert(got === want, s"salts=$salts")
+      } :+ (("one", 7.0, (1 + rnd.nextInt(50)).toLong))
+      // one row per (c, v), as a groupBy leaves it (-0.0 → 0.0)
+      rows.map { case (c, v, n) => (c, if (v == 0.0) 0.0 else v, n) }
+        .groupBy(r => (r._1, java.lang.Double.doubleToLongBits(r._2)))
+        .values.map(_.head).toSeq
     }
+    val spark0 = spark
+    def brute(vs: Seq[(Double, Long)]): (Seq[Double], Seq[(Double, Long)]) = {
+      val asc = vs.sortWith((a, b) => compareDoubles(a._1, b._1) < 0)
+      val nn = asc.map(_._2).sum
+      val cum = asc.map(_._2).scanLeft(0L)(_ + _).tail
+      val qs = Seq(0.25, 0.5, 0.75).map(t => asc(cum.indexWhere(_ > nn * t))._1)
+      val top = vs.sortWith((a, b) => a._2 > b._2 ||
+        (a._2 == b._2 && compareDoubles(a._1, b._1) > 0)).take(10)
+      (qs, top)
+    }
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
+    val schema = StructType(Seq(StructField("c", StringType),
+      StructField("v", DoubleType), StructField("cnt", LongType)))
+    var crossingAtFirstRow = 0
+    var wholeColumnParts = 0
+    forSamples(Gen.choose(0, 1 << 20), 6) { seed =>
+      val table = countTable(seed)
+      val byCol = table.groupBy(_._1)
+      // 1. the pass itself, over a sorted table cut into partitions at
+      //    chosen rows: random cuts, none inside c1 (which then lies in
+      //    one partition), and a cut AT c0's median crossing row
+      val sorted = table.sortWith((a, b) => a._1 < b._1 ||
+        (a._1 == b._1 && compareDoubles(a._2, b._2) < 0))
+      val rnd = new scala.util.Random(seed)
+      val c0 = sorted.indices.filter(sorted(_)._1 == "c0")
+      val c0Cum = c0.map(sorted(_)._3).scanLeft(0L)(_ + _).tail
+      val median = c0(c0Cum.indexWhere(_ > c0Cum.last * 0.5))
+      val c1 = sorted.indices.filter(sorted(_)._1 == "c1")
+      val cuts = ((Seq.fill(5)(1 + rnd.nextInt(sorted.size - 1)) :+ median)
+        .filterNot(i => i > c1.head && i <= c1.last) :+ 0 :+ sorted.size)
+        .distinct.sorted
+      val parts = cuts.sliding(2).map { case Seq(a, b) =>
+        sorted.slice(a, b).map { case (c, v, n) => Row(c, v, n) } }.toSeq
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(parts, parts.size).flatMap(identity),
+        schema)
+      val nn = byCol.map { case (c, rs) => c -> rs.map(_._3).sum }
+      val ds = SummaryCounts.digest(df, SummaryCounts.Doubles)
+      val cross = SummaryCounts.crossings(ds, nn)
+      if (cross.exists { case (pid, m) =>
+          cuts(pid) == median && m.get("c0").exists(_._2.exists(_._1 == 1)) })
+        crossingAtFirstRow += 1
+      if (ds.count(_.column == "c1") == 1) wholeColumnParts += 1
+      val got = SummaryCounts.numeric(df, nn)
+      byCol.foreach { case (c, rs) =>
+        val (qs, top) = brute(rs.map(r => (r._2, r._3)))
+        assert(bits(got(c).quartiles) === bits(qs), s"seed=$seed $c quartiles")
+        assert(got(c).top.map(_._2) === top.map(_._2), s"seed=$seed $c top")
+        assert(bits(got(c).top.map(_._1)) === bits(top.map(_._1)),
+          s"seed=$seed $c top items")
+        assert(got(c).unique === rs.size.toLong, s"seed=$seed $c unique")
+      }
+      // 2. end to end: the same counts as raw column values, padded with
+      //    nulls, zeros half -0.0 — pass 1 and the count table agree
+      val cols = byCol.keys.toSeq.sorted
+      val raw = cols.map { c =>
+        rnd.shuffle(byCol(c).flatMap { case (_, v, n) =>
+          (0L until n).map(i => if (v == 0.0 && i % 2 == 1) -0.0 else v) })
+      }
+      val height = raw.map(_.size).max
+      val wide = spark0.createDataFrame(
+        spark0.sparkContext.parallelize((0 until height).map(i =>
+          Row(raw.map(vs => if (i < vs.size) vs(i) else null): _*)), 3),
+        StructType(cols.map(StructField(_, DoubleType))))
+      val sums = Procedures.summaryStatisticsReference(wide, cols)
+      cols.zip(raw).foreach { case (c, vs) =>
+        val (qs, top) = brute(byCol(c).map(r => (r._2, r._3)))
+        val s = sums.find(_.column == c).get
+        assert(s.stats("num_null") === (height - vs.size).toLong, c)
+        assert(bits(Seq("1st_quartile", "median", "3rd_quartile")
+          .map(s.stats(_).asInstanceOf[Double])) === bits(qs), s"seed=$seed $c")
+        assert(s.mostFrequent === top.map { case (v, n) =>
+          (if (v.isWhole && math.abs(v) < 1e15) v.toLong.toString
+           else v.toString) -> n }, s"seed=$seed $c")
+        val zeros = vs.filter(_ == 0.0).map(1 / _ > 0).distinct.size
+        assert(s.stats("num_unique") ===
+          byCol(c).size.toLong + math.max(zeros - 1, 0), s"seed=$seed $c")
+      }
+    }
+    assert(crossingAtFirstRow > 0 && wholeColumnParts > 0,
+      s"placements not exercised: $crossingAtFirstRow, $wholeColumnParts")
   }
 }

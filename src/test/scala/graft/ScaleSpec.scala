@@ -590,7 +590,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("summary.statistics quartiles/top-10 are #columns-bounded on a " +
       "continuous column: frame cardinality, plan shape, brute-force equality") {
-    import graft.procedures.Procedures
+    import graft.procedures.{Procedures, SummaryCounts}
     // a CONTINUOUS column (every value distinct — the shape whose
     // distinct-value table ≈ the corpus, where a driver collect or a
     // column-name-keyed window is the 100 TB killer), plus a
@@ -635,29 +635,44 @@ class ScaleSpec extends AnyFunSuite {
       .sortWith { case ((v1, c1), (v2, c2)) =>
         c1 > c2 || (c1 == c2 && v1 > v2) }.take(10)
     assert(sums.find(_.column == "cat").get.mostFrequent === catTop)
-    // 2. CARDINALITY: the frames feeding the driver collects are
-    //    #columns-bounded BY CONSTRUCTION — count them at 150k distinct
-    val grouped = df.select(explode(array(Seq("cont", "lowcard").map(c =>
+    // 2. CARDINALITY: the summary collect is partitions × columns rows
+    //    of ≤ 10 items each, and the crossing job reads ≤ 3 partitions
+    //    per column — counted at 150k distinct values
+    val melted = df.select(explode(array(Seq("cont", "lowcard").map(c =>
       struct(lit(c).as("c"), col(c).as("v"))): _*)).as("cv"))
       .select(col("cv.c").as("c"), col("cv.v").as("v"))
       .filter(col("v").isNotNull)
-      .groupBy(col("c"), col("v")).agg(count(lit(1)).as("cnt"))
-    val nnMap = Map("cont" -> n, "lowcard" -> n)
-    val qFrame = Procedures.numericQuartileFrame(grouped, nnMap)
-    assert(qFrame.count() === 2L, "quartile frame must be one row per column")
-    val tFrame = Procedures.topFrequentFrame(grouped)
-    assert(tFrame.count() <= 20L, "top-10 frame must be rk<=10 per column")
-    // 3. PLAN SHAPE: the cumulative side rides the (pid, group)-keyed
-    //    prefix sum — no window keyed by the column NAME over the full
-    //    value table (the windowed top-k stage is salted: its first
-    //    window is (c, salt)-keyed, and the c-only window sees ≤
-    //    k·saltBuckets rows per column)
-    val qPlan = qFrame.queryExecution.executedPlan.toString.toLowerCase
-    assert(qPlan.contains("windowspecdefinition(__q_pid"), qPlan.take(2000))
-    assert(!qPlan.contains("windowspecdefinition(c#"),
-      "column-name-keyed window in the quartile path:\n" + qPlan.take(2000))
-    val tPlan = tFrame.queryExecution.executedPlan.toString.toLowerCase
-    assert(tPlan.contains("__tk_salt"), tPlan.take(2000))
+    val sorted = SummaryCounts.pinSorted(melted)
+    val parts = sorted.queryExecution.toRdd.getNumPartitions
+    val digests = SummaryCounts.digest(sorted, SummaryCounts.Doubles)
+    assert(digests.size <= parts * 2,
+      "summary collect must be at most partitions × columns rows")
+    assert(digests.forall(_.top.size <= 10), "top lists must be ≤ 10 items")
+    val cross = SummaryCounts.crossings(digests,
+      Map("cont" -> n, "lowcard" -> n))
+    Seq("cont", "lowcard").foreach { c =>
+      assert(cross.count(_._2.contains(c)) <= 3,
+        s"$c: crossing job must read ≤ 3 partitions")
+    }
+    // 3. PLAN SHAPE: the count table is range-partitioned by (c, v)
+    //    and sorted within partitions — no window keyed by the column
+    //    NAME (none at all) over the full value table
+    val plan = SummaryCounts.sortedCountPlan(melted)
+      .queryExecution.executedPlan.toString.toLowerCase
+    assert(plan.contains("rangepartitioning(c#"), plan.take(2000))
+    assert(!plan.contains("windowspecdefinition"),
+      "window in the summary count table:\n" + plan.take(2000))
+  }
+
+  test("summary.statistics over q126's input launches at most 8 jobs") {
+    import graft.procedures.Procedures
+    val df = core.Tables.lineitem(spark, "/root/testdata/sf0.01")
+      .select("l_extendedprice", "l_quantity")
+    val (sums, jobs) = JobLog.record(spark) {
+      Procedures.summaryStatisticsReference(df, df.columns.toSeq)
+    }
+    assert(sums.map(_.mostFrequent.size) === Seq(10, 10))
+    assert(jobs.size <= 8, s"${jobs.size} jobs")
   }
 
   test("graft.checkpointDir switches every DfOps.cut to reliable " +
