@@ -666,7 +666,8 @@ class ScaleSpec extends AnyFunSuite {
 
   test("summary.statistics over q126's input launches at most 8 jobs") {
     import graft.procedures.Procedures
-    val df = core.Tables.lineitem(spark, "/root/testdata/sf0.01")
+    val df = core.Tables.lineitem(spark,
+      sys.props("user.home") + "/testdata/sf0.01")
       .select("l_extendedprice", "l_quantity")
     val (sums, jobs) = JobLog.record(spark) {
       Procedures.summaryStatisticsReference(df, df.columns.toSeq)
