@@ -4040,10 +4040,11 @@ final class GraftEngine(val spark: SparkSession) {
         s"""{"trained": "$url", "corpusSize": $n}"""
       },
       "dataset.stats" -> proc() { call => import call._
-        // pro-plugin utility (`plugins/pro/*.cc:124-201`): per-column
-        // type/null/distinct profile of a registered dataset. One
-        // aggregate pass (exact null counts, approx distinct — the
-        // sketch keeps it single-pass at any width).
+        // pro-plugin utility (the `.cc` sources under `plugins/pro`,
+        // lines 124-201): per-column type/null/distinct profile of a
+        // registered dataset. One aggregate pass (exact null counts,
+        // approx distinct — the sketch keeps it single-pass at any
+        // width).
         val df = dataset(req("inputDataset"))
         import org.apache.spark.sql.functions._
         val aggs = df.schema.fields.flatMap(f => Seq(

@@ -3,6 +3,7 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import scala.util.control.NonFatal
 
 /** Minimal REST façade over GraftEngine, mirroring the reference's
   * `/v1` surface (`/root/reference/server/mldb_server.cc:209-228`):
@@ -37,9 +38,11 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
   // completed runs per named procedure: (runId, started) in run order
   private val procRuns = scala.collection.concurrent.TrieMap
     .empty[String, Vector[(String, java.time.Instant)]]
-  // async plugin construction (MLDB-305/881): state per plugin and a
-  // latch a DELETE can wait on
+  // async plugin construction (MLDB-305/881): state per plugin, the
+  // reason a failed construction gave, and a latch a DELETE can wait on
   private val pluginStates =
+    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val pluginErrors =
     scala.collection.concurrent.TrieMap.empty[String, String]
   private val pluginBuilds = scala.collection.concurrent.TrieMap
     .empty[String, java.util.concurrent.CountDownLatch]
@@ -564,10 +567,16 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             // construction completes on a background thread
             val latch = new java.util.concurrent.CountDownLatch(1)
             pluginBuilds(name) = latch
+            pluginErrors.remove(name)
             pluginStates(name) = "initializing"
             val t = new Thread(() => {
               try { create(); pluginStates(name) = "ok" }
-              catch { case _: Throwable => pluginStates(name) = "error" }
+              catch {
+                // the reason first: a GET that sees "error" reads it too
+                case NonFatal(e) =>
+                  pluginErrors(name) = String.valueOf(e.getMessage)
+                  pluginStates(name) = "error"
+              }
               finally latch.countDown()
             }, s"graft-plugin-$name")
             t.setDaemon(true)
@@ -575,6 +584,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             s"""{"created": ${jsonStr(name)}, "state": "initializing"}"""
           } else {
             create()
+            pluginErrors.remove(name)
             pluginStates(name) = "ok"
             s"""{"created": ${jsonStr(name)}, "state": "ok"}"""
           }
@@ -584,6 +594,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // (rest_collection_impl.h:1705)
           pluginBuilds.get(name).foreach(_.await())
           pluginBuilds.remove(name)
+          pluginErrors.remove(name)
           val prevState = pluginStates.remove(name)
           // an async construction that FAILED left tracked state but
           // no engine entity — its DELETE is still the entity 204,
@@ -601,8 +612,10 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             .map(j => s""", "status": $j""").getOrElse("")
           pluginStates.get(name) match {
             case Some(st) =>
+              val error = pluginErrors.get(name)
+                .map(e => s""", "error": ${jsonStr(e)}""").getOrElse("")
               s"""{"name": ${jsonStr(name)}, "state": ${jsonStr(st)}""" +
-                s"""$status}"""
+                s"""$error$status}"""
             case None =>
               if (!engine.listPlugins.contains(name))
                 throw new NoSuchElementException(s"plugin '$name' not found")

@@ -626,16 +626,18 @@ object TextAnalysis {
     *     lengths; an n-gram's char length excludes the n−1 joiners.
     *   - dup_line_frac = (line occurrences − distinct lines) / lines;
     *     char fraction counts every occurrence AFTER the first.
-    *   - top_ngram_frac = max over grams seen ≥2 times of
+    *   - top_ngram_frac = max over all grams of
     *     count × gramChars / total_chars (the max-product form needs
     *     no tie-break, unlike "chars of THE most frequent gram").
     *   - dup_ngram_frac = Σ over grams seen ≥2 times of
     *     count × gramChars / total_chars, capped at 1 (overlaps are
     *     not position-deduped — the standard reimplementation).
     *
-    * Scale shape: pure per-row math — one native [[graft.plans.NGrams]]
-    * gram build and one [[graft.plans.TokenCounts]] map build per
-    * (row, n), zero shuffles, zero windows; composes with any scan. */
+    * Scale shape: pure per-row math — three native
+    * [[graft.plans.WindowCounts]] evals per row (words at widths 1..10,
+    * lines and paragraphs at width 1), zero gram strings, zero
+    * interpreted folds, zero shuffles, zero windows; composes with any
+    * scan. */
   def gopherRepetition(docs: DataFrame, idCol: String, textCol: String,
       keep: Seq[String] = Nil): DataFrame = {
     val topNs = Seq(2, 3, 4)
@@ -646,54 +648,36 @@ object TextAnalysis {
     val kept = keep.map(col)
     def nonEmptyTrimmed(parts: Column) =
       filter(transform(parts, l => trim(l)), l => length(l) > 0)
+    def counts(units: Column, widths: Seq[Int]) =
+      graft.plans.WindowCounts.column(units, widths)
+    // one staged column per kernel call: every metric below reads
+    // fields of these, so each kernel runs once per row
     val staged = docs.select(Seq(col(idCol).as("doc_id"),
-      T.tokens(col(textCol), "\\s+").as("__w"),
-      nonEmptyTrimmed(split(col(textCol), "\n")).as("__ln"),
-      nonEmptyTrimmed(split(col(textCol), "\\n\\s*\\n")).as("__pg")) ++
-      kept: _*)
-      .withColumn("__tc",
-        aggregate(col("__w"), lit(0L), (a, w) => a + length(w)))
-    // duplicate-unit (line / paragraph) fraction + char fraction from
-    // one TokenCounts map over the unit strings
-    def unitMetrics(units: Column, prefix: String): Seq[Column] = {
-      val ents = map_entries(graft.plans.TokenCounts.column(units))
-      val dupch = aggregate(ents, lit(0L), (a, e) =>
-        a + (e.getField("value") - 1).cast("long") *
-          length(e.getField("key")))
-      val allch = aggregate(ents, lit(0L), (a, e) =>
-        a + e.getField("value").cast("long") * length(e.getField("key")))
-      Seq(
-        coalesce(round((size(units) - size(ents)).cast("double") /
-          nullif(size(units), lit(0)), 4), lit(0.0))
-          .as(s"dup_${prefix}_frac"),
-        coalesce(round(dupch.cast("double") / nullif(allch, lit(0L)), 4),
-          lit(0.0)).as(s"dup_${prefix}_char_frac"))
-    }
-    // n-gram stats: grams joined with ' ', counted in one native map
-    // build; char length excludes the n-1 joiners
-    def gramEntries(n: Int): Column =
-      map_entries(graft.plans.TokenCounts.column(T.ngrams(col("__w"), n, " ")))
-    def gramChars(n: Int, e: Column): Column =
-      e.getField("value").cast("long") *
-        (length(e.getField("key")) - (n - 1))
+      counts(T.tokens(col(textCol), "\\s+"), 1 to 10).as("__w"),
+      counts(nonEmptyTrimmed(split(col(textCol), "\n")), Seq(1))(0).as("__ln"),
+      counts(nonEmptyTrimmed(split(col(textCol), "\\n\\s*\\n")), Seq(1))(0)
+        .as("__pg")) ++ kept: _*)
+    def frac(num: Column, den: Column): Column =
+      coalesce(round(num.cast("double") / nullif(den, lit(0L)), 4), lit(0.0))
+    // duplicate-unit (line / paragraph) fraction + char fraction; the
+    // duplicate chars count every occurrence AFTER the first
+    def unitMetrics(units: Column, prefix: String): Seq[Column] = Seq(
+      frac(units("windows") - units("distinct"), units("windows"))
+        .as(s"dup_${prefix}_frac"),
+      frac(units("chars") - units("distinct_chars"), units("chars"))
+        .as(s"dup_${prefix}_char_frac"))
+    def words(n: Int): Column = col("__w")(n - 1)
+    val totalChars = words(1)("chars")
     // top-gram frac counts the MOST FREQUENT n-gram even when it
     // occurs once (Rae 2021's definition, as reimplemented by e.g.
     // DataTrove's find_top_duplicate) — short documents with one long
     // unique 4-gram are MEANT to trip the 0.16 threshold. Ties resolve
     // by max count·chars (deterministic, unlike insertion-order picks).
-    val topCols = topNs.map { n =>
-      val top = aggregate(gramEntries(n), lit(0L), (a, e) =>
-        greatest(a, gramChars(n, e)))
-      coalesce(round(top.cast("double") / nullif(col("__tc"), lit(0L)), 4),
-        lit(0.0)).as(s"top_${n}gram_frac")
-    }
-    val dupCols = dupNs.map { n =>
-      val dup = aggregate(gramEntries(n), lit(0L), (a, e) =>
-        a + when(e.getField("value") >= 2, gramChars(n, e)).otherwise(lit(0L)))
-      least(lit(1.0), coalesce(round(dup.cast("double") /
-        nullif(col("__tc"), lit(0L)), 4), lit(0.0)))
-        .as(s"dup_${n}gram_frac")
-    }
+    val topCols = topNs.map(n =>
+      frac(words(n)("top_chars"), totalChars).as(s"top_${n}gram_frac"))
+    val dupCols = dupNs.map(n =>
+      least(lit(1.0), frac(words(n)("dup_chars"), totalChars))
+        .as(s"dup_${n}gram_frac"))
     val metrics = unitMetrics(col("__ln"), "line") ++
       unitMetrics(col("__pg"), "para") ++ topCols ++ dupCols
     val withM = staged.select(Seq(col("doc_id")) ++ kept ++ metrics: _*)

@@ -3,11 +3,12 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot hashing loops.
@@ -269,6 +270,158 @@ case class NGrams(child: Expression, n: Int, sep: String)
 object NGrams {
   def column(tokens: Column, n: Int, sep: String): Column =
     GraftColumnBridge.column(NGrams(GraftColumnBridge.expression(tokens), n, sep))
+}
+
+/** Repetition counts over n-unit windows in ONE eval per row: an
+  * array<string> of units and window widths → one struct of counts per
+  * width, in the order given. A window is n consecutive units; each
+  * unit is interned once to a dense id, and the window at position s
+  * is keyed by (id of the (n−1)-window at s, id of unit s+n−1), so no
+  * window string is ever built. A window's chars are the sum of its
+  * units' `numChars`. Per width:
+  *   - `windows`, `distinct`: window count and distinct-window count;
+  *   - `chars`, `distinct_chars`: summed chars over all windows, and
+  *     over each distinct window once;
+  *   - `top_chars`: the max of count × chars over distinct windows;
+  *   - `dup_chars`: the sum of count × chars over windows seen ≥ 2
+  *     times.
+  * A width above the unit count gives all zeros; a null array, null.
+  *
+  * Word units from a `\s+` split hold no ' ', so two word windows are
+  * equal exactly when their ' '-joined gram strings are, and a
+  * window's chars are the joined length minus the n−1 joiners: the
+  * numbers that counting [[NGrams]] output with [[TokenCounts]] gives
+  * (NGramsSpec keeps that formulation as the differential twin). A
+  * null unit has neither an id nor chars, so an input type that admits
+  * one (`containsNull = true`) fails analysis. */
+case class WindowCounts(child: Expression, widths: Seq[Int])
+    extends UnaryExpression with CodegenFallback {
+  require(widths.nonEmpty && widths.forall(_ >= 1),
+    s"window widths must be at least 1, got ${widths.mkString("[", ", ", "]")}")
+
+  override def dataType: DataType =
+    ArrayType(WindowCounts.statsType, containsNull = false)
+  override def prettyName: String = "graft_window_counts"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs units that cannot be null, got array<string> with containsNull = true")
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<string>, got ${other.catalogString}")
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val units = input.asInstanceOf[ArrayData]
+    val m = units.numElements()
+    // prefix(s) = chars of units 0 until s, so the window (s, n) has
+    // prefix(s + n) - prefix(s) chars
+    val prefix = new Array[Long](m + 1)
+    val unitIds = new Array[Int](m)
+    val intern = new java.util.HashMap[UTF8String, Integer](m * 4 / 3 + 1)
+    var i = 0
+    while (i < m) {
+      // the key points into the input row, which outlives this eval
+      val u = units.getUTF8String(i)
+      prefix(i + 1) = prefix(i) + u.numChars
+      val id = intern.get(u)
+      if (id == null) { unitIds(i) = intern.size; intern.put(u, unitIds(i)) }
+      else unitIds(i) = id
+      i += 1
+    }
+    val maxWidth = widths.max
+    val byWidth = new Array[InternalRow](maxWidth + 1)
+    val ids = unitIds.clone()
+    val counts = new Array[Int](m)
+    val firstAt = new Array[Int](m)
+    val pairs = new WindowCounts.PairIds(m)
+    var distinct = intern.size
+    var n = 1
+    while (n <= maxWidth) {
+      val w = math.max(m - n + 1, 0)
+      if (n > 1) {
+        // every (n−1)-window distinct ⇒ every n-window distinct, as
+        // each n-window extends a distinct (n−1)-window
+        if (distinct == w + 1) distinct = w
+        else {
+          pairs.clear()
+          var s = 0
+          while (s < w) {
+            ids(s) = pairs.idOf((ids(s).toLong << 32) | unitIds(s + n - 1))
+            s += 1
+          }
+          distinct = pairs.size
+        }
+      }
+      var chars, distinctChars, top, dup = 0L
+      if (distinct == w) {
+        var s = 0
+        while (s < w) {
+          val c = prefix(s + n) - prefix(s)
+          chars += c
+          if (c > top) top = c
+          s += 1
+        }
+        distinctChars = chars
+      } else {
+        java.util.Arrays.fill(counts, 0, distinct, 0)
+        var s = 0
+        while (s < w) {
+          val id = ids(s)
+          if (counts(id) == 0) firstAt(id) = s
+          counts(id) += 1
+          chars += prefix(s + n) - prefix(s)
+          s += 1
+        }
+        var id = 0
+        while (id < distinct) {
+          val c = prefix(firstAt(id) + n) - prefix(firstAt(id))
+          val all = counts(id) * c
+          distinctChars += c
+          if (all > top) top = all
+          if (counts(id) >= 2) dup += all
+          id += 1
+        }
+      }
+      byWidth(n) = new GenericInternalRow(Array[Any](
+        w.toLong, distinct.toLong, chars, distinctChars, top, dup))
+      n += 1
+    }
+    new GenericArrayData(widths.map(byWidth(_)).toArray[Any])
+  }
+
+  override protected def withNewChildInternal(c: Expression): WindowCounts =
+    copy(child = c)
+}
+
+object WindowCounts {
+  /** One width's counts; every field is a non-null long. */
+  val statsType: StructType = StructType(
+    Seq("windows", "distinct", "chars", "distinct_chars", "top_chars", "dup_chars")
+      .map(StructField(_, LongType, nullable = false)))
+
+  def column(units: Column, widths: Seq[Int]): Column =
+    GraftColumnBridge.column(WindowCounts(GraftColumnBridge.expression(units), widths))
+
+  /** Dense ids for (window id, unit id) pairs packed into a long: an
+    * open-addressing table with linear probing, sized for `maxPairs`
+    * keys at load ≤ 1/2 and cleared between widths. */
+  private final class PairIds(maxPairs: Int) {
+    private val bits = math.max(4, 33 - Integer.numberOfLeadingZeros(math.max(maxPairs, 1)))
+    private val mask = (1 << bits) - 1
+    private val keys = new Array[Long](1 << bits)
+    private val vals = new Array[Int](1 << bits)
+    var size = 0
+
+    def clear(): Unit = { java.util.Arrays.fill(vals, -1); size = 0 }
+
+    def idOf(key: Long): Int = {
+      var slot = ((key * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (vals(slot) >= 0 && keys(slot) != key) slot = (slot + 1) & mask
+      if (vals(slot) < 0) { keys(slot) = key; vals(slot) = size; size += 1 }
+      vals(slot)
+    }
+  }
 }
 
 /** 64-bit SimHash: array<long> token-hashes → long via per-bit

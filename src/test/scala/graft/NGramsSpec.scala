@@ -1,19 +1,24 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Slice, StringSplit}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, LambdaFunction, MapEntries, Slice, StringSplit}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 import graft.functions.{TextFunctions => T}
 import graft.operators.TextAnalysis
-import graft.plans.{NGrams, TokenCounts}
+import graft.plans.{NGrams, TokenCounts, WindowCounts}
 
 /** Word n-grams come from the native `NGrams` kernel. It must equal the
   * interpreted per-position lambda it replaced on every input shape,
   * every producer routed through it must keep its old output, and no
-  * producer's optimized plan may build grams inside a lambda again. */
+  * producer's optimized plan may build grams inside a lambda again.
+  * The repetition counts come from the native `WindowCounts` kernel,
+  * which must equal counting `NGrams` output with `TokenCounts` and
+  * folding the entries; the Gopher battery must keep its output and
+  * build no grams or folds at all. */
 class NGramsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -84,13 +89,43 @@ class NGramsSpec extends AnyFunSuite {
     }.reduce((x, y) => concat(x, y)))
   }
 
-  /** `df` with every NGrams node in its plan replaced by the lambda
+  /** `WindowCounts`'s formulation before the kernel, as the
+    * differential twin: per width, the joined grams counted in a
+    * `TokenCounts` map, whose entries interpreted folds sum. A gram's
+    * chars are its length less the n−1 joiners. */
+  private def windowCountsTwin(units: Column, widths: Seq[Int]): Column = {
+    def stats(n: Int): Column = {
+      val grams = T.ngrams(units, n, " ")
+      val ents = map_entries(TokenCounts.column(grams))
+      def count(e: Column) = e.getField("value").cast("long")
+      def chars(e: Column) = length(e.getField("key")) - lit(n - 1)
+      def fold(name: String)(f: (Column, Column) => Column) =
+        coalesce(aggregate(ents, lit(0L), f), lit(0L)).as(name)
+      struct(
+        coalesce(size(grams).cast("long"), lit(0L)).as("windows"),
+        coalesce(size(ents).cast("long"), lit(0L)).as("distinct"),
+        fold("chars")((a, e) => a + count(e) * chars(e)),
+        fold("distinct_chars")((a, e) => a + chars(e)),
+        fold("top_chars")((a, e) => greatest(a, count(e) * chars(e))),
+        fold("dup_chars")((a, e) =>
+          a + when(count(e) >= 2, count(e) * chars(e)).otherwise(lit(0L))))
+    }
+    when(units.isNotNull, array(widths.map(stats): _*))
+  }
+
+  /** `arrays`' rows without null elements, typed as unable to hold
+    * one (Parquet reads every array as `containsNull = true`). */
+  private def nullFree(df: DataFrame): DataFrame =
+    df.filter(col("t").isNull || !exists(col("t"), _.isNull))
+      .withColumn("t", transform(col("t"), x => coalesce(x, lit(""))))
+
+  /** `df` with every WindowCounts node in its plan replaced by the twin
     * formulation it stands for. */
-  private def withLambdaGrams(df: DataFrame): DataFrame = {
+  private def withTwinCounts(df: DataFrame): DataFrame = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     GraftColumnBridge.ofRows(spark, GraftColumnBridge.logicalPlan(df).transformAllExpressions {
-      case NGrams(toks, n, sep) =>
-        session.expression(lambdaGrams(GraftColumnBridge.column(toks), n, sep))
+      case WindowCounts(units, widths) =>
+        session.expression(windowCountsTwin(GraftColumnBridge.column(units), widths))
     })
   }
 
@@ -183,13 +218,71 @@ class NGramsSpec extends AnyFunSuite {
     assert(nul.getMap[String, Int](1).isEmpty && nul.getMap[String, Int](2).isEmpty)
   }
 
-  test("gopherRepetition matches the lambda formulation on documents") {
+  test("WindowCounts equals the NGrams/TokenCounts twin for n = 1..10") {
+    import spark.implicits._
+    // the spec's null-free arrays, plus small-alphabet arrays whose
+    // windows repeat at every width
+    val rnd = new scala.util.Random(7)
+    val generated = (1 to 200).map { i =>
+      val alphabet = Seq("a", "bb", "é", "日本", "")
+        .take(1 + rnd.nextInt(5))
+      (100 + i, (1 to rnd.nextInt(40)).map(_ => alphabet(rnd.nextInt(alphabet.size))))
+    }.toDF("id", "t")
+    val units = nullFree(arrays).unionByName(nullFree(generated))
+    assert(units.schema("t").dataType === ArrayType(StringType, containsNull = false))
+    for (widths <- (1 to 10).map(Seq(_)) ++ Seq(1 to 10, Seq(4, 1, 4))) {
+      val bad = units.select(col("id"),
+        WindowCounts.column(col("t"), widths).as("fast"),
+        windowCountsTwin(col("t"), widths).as("twin"))
+        .filter(!(col("fast") <=> col("twin"))).collect()
+      assert(bad.isEmpty, s"widths ${widths.mkString(",")}: ${bad.mkString("; ")}")
+    }
+    // the null array stays null; a width above the unit count is zeros
+    val edge = units.filter(col("id").isin(1, 3))
+      .select(col("id"), WindowCounts.column(col("t"), Seq(2)).as("c"))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    assert(edge(1).isNullAt(1))
+    assert(edge(3).getSeq[Row](1).head.toSeq === Seq.fill(6)(0L))
+  }
+
+  test("WindowCounts equals the twin on documents' words") {
+    val words = docs.select(T.tokens(col("text"), "\\s+").as("w"))
+    val bad = words.filter(!(WindowCounts.column(col("w"), 1 to 10) <=>
+      windowCountsTwin(col("w"), 1 to 10))).count()
+    assert(bad === 0)
+  }
+
+  test("WindowCounts rejects units that may hold null, and widths below 1") {
+    val e = intercept[AnalysisException] {
+      arrays.select(WindowCounts.column(col("t"), Seq(1)))
+    }
+    assert(e.getMessage.contains("containsNull = true"), e.getMessage)
+    intercept[IllegalArgumentException](WindowCounts.column(col("t"), Nil))
+    intercept[IllegalArgumentException](WindowCounts.column(col("t"), Seq(2, 0)))
+  }
+
+  test("gopherRepetition matches its NGrams/TokenCounts formulation on documents") {
     val fast = TextAnalysis.gopherRepetition(docs, "doc_id", "text")
-    val ref = withLambdaGrams(fast)
-    assert(lambdasBuildingGrams(ref).nonEmpty, "the rewrite put the lambdas back")
-    assert(fast.schema === ref.schema)
+    val twin = withTwinCounts(fast)
+    assert(twin.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case _: ArrayAggregate => true
+      case _ => false
+    })), "the rewrite put the folds back")
+    assert(fast.schema === twin.schema)
     assert(fast.count() === docs.count())
-    assert(fast.exceptAll(ref).count() === 0 && ref.exceptAll(fast).count() === 0)
+    assert(fast.exceptAll(twin).count() === 0 && twin.exceptAll(fast).count() === 0)
+  }
+
+  test("gopherRepetition's plan builds no grams, maps or folds") {
+    val battery = TextAnalysis.gopherRepetition(docs, "doc_id", "text")
+    val offenders = battery.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: ArrayAggregate | _: MapEntries | _: NGrams | _: TokenCounts) => e.prettyName
+    }))
+    assert(offenders.isEmpty, offenders.distinct.mkString("in the battery's plan: ", ", ", ""))
+    val kernels = battery.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case w: WindowCounts => w
+    }))
+    assert(kernels.size === 3, kernels.mkString("\n"))
   }
 
   test("no word-n-gram producer builds grams inside a lambda (no Slice/StringSplit)") {

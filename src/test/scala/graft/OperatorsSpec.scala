@@ -726,9 +726,10 @@ class OperatorsSpec extends AnyFunSuite {
       assert(plan.contains("graft_opaque"),
         "verdict must be fenced by plans.Opaque")
       // the blowup signature: the battery's expressions duplicated into
-      // the filter condition. One fenced battery keeps ≤ 15 TokenCounts
-      // sites (gram ns + line/para units); a re-inlined one doubles+.
-      val tc = "graft_token_counts".r.findAllIn(plan).size
+      // the filter condition. One fenced battery keeps ≤ 15 counting
+      // kernel sites (gopherRepetition: 3 WindowCounts); a re-inlined
+      // one repeats them per metric.
+      val tc = "graft_token_counts|graft_window_counts".r.findAllIn(plan).size
       assert(tc <= 15, s"battery re-inlined into the filter: $tc sites")
     }
   }

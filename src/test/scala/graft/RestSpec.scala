@@ -371,6 +371,38 @@ class RestSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("plugins: an async creation that fails keeps its reason") {
+    val engine = new GraftEngine(spark)
+    val srv = new RestServer(engine)
+    val port = srv.start()
+    try {
+      def put(path: String, body: String, headers: (String, String)*): (Int, String) = {
+        val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        headers.foreach { case (k, v) => b.header(k, v) }
+        val r = client.send(b.PUT(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        (r.statusCode(), r.body())
+      }
+      val config = """{"source": "not scala ]["}"""
+      // the synchronous PUT's 400 names the reason ...
+      val (c1, b1) = put("/v1/plugins/broken", config)
+      assert(c1 === 400, b1)
+      val reason = b1.stripPrefix("{\"error\": ").split(", \"httpCode\"")(0)
+      assert(reason.startsWith("\"plugin did not compile"), b1)
+      // ... and the asynchronous one, polled to completion, keeps it
+      val (c2, b2) = put("/v1/plugins/broken", config, "async" -> "true")
+      assert(c2 === 200 && b2.contains("initializing"), b2)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      var status = get(port, "/v1/plugins/broken")
+      while (status._2.contains("\"initializing\"") && System.nanoTime() < deadline) {
+        Thread.sleep(10)
+        status = get(port, "/v1/plugins/broken")
+      }
+      assert(status._1 === 200 && status._2.contains("\"state\": \"error\""), status)
+      assert(status._2.contains(s"\"error\": $reason"), status)
+    } finally srv.stop()
+  }
+
   test("javascript plugins: the reference's native plugin language") {
     val engine = new GraftEngine(spark)
     engine.createDatasetFromParquet("nation", s"$sf/nation.parquet")
