@@ -1,7 +1,7 @@
 package graft.api
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The engine façade: MLDB's entity model (datasets, procedures,
   * functions — `/root/reference/core/mldb_entity.h`, REST surface
@@ -200,10 +200,7 @@ final class GraftEngine(val spark: SparkSession) {
                   case _ => "auto_" + java.util.UUID.randomUUID().toString
                     .replace("-", "").take(12)
                 }
-                createDatasetTyped(nm, t, k =>
-                  ProcJson.field(cfg, "params")
-                    .flatMap(ProcJson.field(_, k))
-                    .map(ProcJson.paramString))
+                createDatasetTyped(nm, t, ProcJson.params(cfg))
                 nm
               case (None, Some(JsStr(id))) => id
               case _ => throw new IllegalArgumentException(
@@ -1205,7 +1202,11 @@ final class GraftEngine(val spark: SparkSession) {
           Some(compiled)
         case _ => None
       }
-    } catch { case _: Throwable => None }
+    } catch {
+      // a plan the projection path cannot bind or compile applies
+      // through the Dataset path instead (the caller's None branch)
+      case scala.util.control.NonFatal(_) => None
+    }
   }
 
   def listFunctions: Seq[String] = functions.keys.toSeq.sorted
@@ -1218,18 +1219,6 @@ final class GraftEngine(val spark: SparkSession) {
       rowPivotFns.contains(name)
 
   // ---- procedures (/v1/procedures + /runs) --------------------------------
-
-  /** `transform` procedure: dialect query → new registered dataset
-    * (optionally persisted) — `TransformDataset::run`
-    * (`builtin/sql_functions.cc:662`). */
-  def runTransform(inputQuery: String, outputDataset: String,
-      persistPath: Option[String] = None): DataFrame = {
-    val result = query(inputQuery)
-    persistPath.foreach(p => result.write.mode(SaveMode.Overwrite).parquet(p))
-    val out = persistPath.map(spark.read.parquet).getOrElse(result)
-    createDataset(outputDataset, out)
-    out
-  }
 
   /** Async procedure runs (`POST /v1/procedures/<id>/runs` +
     * run-status polling — the reference's run model,
@@ -1278,7 +1267,8 @@ final class GraftEngine(val spark: SparkSession) {
     * GETtable at /v1/procedures/<n>/runs/<id> with state +
     * monotonically increasing progress. */
   def startProcedureRunAsync(tpe: String,
-      param: String => Option[String]): String = {
+      json: String => Option[graft.js.JsInterp.JsVal],
+      id: Option[String]): String = {
     val run = new Run(java.util.UUID.randomUUID().toString.take(8))
     // the type's progress step names (MLDB-1570 pins bucketize's
     // iterating/bucketizing, both type 'percentile'; MLDB-2110 polls
@@ -1321,20 +1311,27 @@ final class GraftEngine(val spark: SparkSession) {
         spark.sparkContext.addSparkListener(listener)
         spark.sparkContext.setJobGroup(s"graft-run-${run.id}",
           s"procedure run ${run.id}", interruptOnCancel = true)
-        val res = runProcedure(tpe, param)
+        val res = runProcedure(tpe, json, id)
         run.progress = run.progress.map { case (n, tt, _) => (n, tt, 100.0) }
         run.rowCount = "\"rowCount\": (\\d+)".r.findFirstMatchIn(res)
           .map(_.group(1).toLong).getOrElse(-1L)
         run.result = Some(res)
         run.finished = Some(java.time.Instant.now())
         if (!run.cancelled) run.state = "finished"
-      } catch { case e: Throwable =>
-        run.finished = Some(java.time.Instant.now())
-        if (run.cancelled) run.state = "cancelled"
-        else {
-          run.error = Some(String.valueOf(e.getMessage))
-          run.state = "error"
-        }
+      } catch {
+        // an interrupt is the cancellation itself (cancelRun interrupts
+        // this thread); a cancelled run's Spark jobs fail with an
+        // ordinary exception
+        case _: InterruptedException =>
+          run.finished = Some(java.time.Instant.now())
+          run.state = "cancelled"
+        case scala.util.control.NonFatal(e) =>
+          run.finished = Some(java.time.Instant.now())
+          if (run.cancelled) run.state = "cancelled"
+          else {
+            run.error = Some(String.valueOf(e.getMessage))
+            run.state = "error"
+          }
       } finally {
         spark.sparkContext.clearJobGroup()
         spark.sparkContext.removeSparkListener(listener)
@@ -1357,11 +1354,21 @@ final class GraftEngine(val spark: SparkSession) {
     * non-inverted, mutually non-overlapping — the reference 400s a bad
     * config at procedure CREATION, before any run: MLDB-1043 tests
     * 2/6/7/8). */
-  private def parsePercentileBuckets(raw: String): Seq[(String, Double, Double)] = {
-    val re = ("\"([^\"]+)\"\\s*:\\s*\\[\\s*(-?[0-9.eE+]+)\\s*," +
-      "\\s*(-?[0-9.eE+]+)\\s*\\]").r
-    val buckets = re.findAllMatchIn(raw)
-      .map(m => (m.group(1), m.group(2).toDouble, m.group(3).toDouble)).toSeq
+  private def parsePercentileBuckets(
+      v: graft.js.JsInterp.JsVal): Seq[(String, Double, Double)] = {
+    import graft.js.JsInterp.{JsArrV, JsNum, JsObjV}
+    val buckets = v match {
+      case o: JsObjV => o.fields.toSeq.map {
+        case (n, a: JsArrV) if a.elems.size == 2 => a.elems.toSeq match {
+          case Seq(JsNum(lo), JsNum(hi)) => (n, lo, hi)
+          case _ => throw new IllegalArgumentException(
+            s"percentile range of bucket '$n' must be [lower, upper]")
+        }
+        case (n, _) => throw new IllegalArgumentException(
+          s"percentile range of bucket '$n' must be [lower, upper]")
+      }
+      case _ => Seq.empty
+    }
     require(buckets.nonEmpty,
       "percentileBuckets must define at least one bucket")
     buckets.foreach { case (n, lo, hi) =>
@@ -1669,11 +1676,15 @@ final class GraftEngine(val spark: SparkSession) {
 
   /** `[["name", "expr"], …]` outcome pairs (the statsTable procedures'
     * config shape). */
-  private def parseOutcomePairs(raw: String): Seq[(String, String)] = {
-    val pairRe = ("\\[\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-      "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*\\]").r
-    pairRe.findAllMatchIn(raw).map(m =>
-      m.group(1) -> m.group(2).replace("\\\"", "\"")).toSeq
+  private def parseOutcomePairs(
+      v: graft.js.JsInterp.JsVal): Seq[(String, String)] = v match {
+    case a: graft.js.JsInterp.JsArrV => a.elems.toSeq.map {
+      case p: graft.js.JsInterp.JsArrV if p.elems.size == 2 =>
+        ProcJson.paramString(p.elems(0)) -> ProcJson.paramString(p.elems(1))
+      case other => throw new IllegalArgumentException(
+        s"outcome ${ProcJson.stringify(other)} is not a [name, expression] pair")
+    }
+    case _ => Seq.empty
   }
 
   /** `statsTable.getCounts` as a function entity (MLDB-873's `mySt`;
@@ -2280,7 +2291,7 @@ final class GraftEngine(val spark: SparkSession) {
 
   /** The structured inputData form ({select, named, from: {id}, when,
     * where, groupBy, having, orderBy, limit, offset} —
-    * MLDB-1104/788/1127/409, MLDBFB-332) assembled from flat params
+    * MLDB-1104/788/1127/409, MLDBFB-332) assembled from its parts
     * into dialect text; shared by transform / svd.train /
     * kmeans.train. A FROM-less form (`select` with no `from`) is legal
     * for constant transforms (MLDB-409's no-FROM battery). */
@@ -2389,24 +2400,45 @@ final class GraftEngine(val spark: SparkSession) {
   // ---- procedure types (/v1/procedures, /v1/types/procedures) -------------
 
   /** One call of a procedure type: the name it was called by, its
-    * params, and the param reads the run bodies share. */
+    * config's params as parsed values (`ProcJson.lookup`), the id of
+    * the procedure entity that runs it, and the param reads the run
+    * bodies share. */
   private[api] final class ProcCall(val tpe: String,
-      val param: String => Option[String]) {
+      val json: String => Option[graft.js.JsInterp.JsVal],
+      val entityId: Option[String]) {
+    def param(k: String): Option[String] = json(k).map(ProcJson.paramString)
     def req(k: String): String = param(k).getOrElse(
       throw new IllegalArgumentException(s"procedure '$tpe' needs param '$k'"))
     /** The reference's error for a run without its input query
       * (MLDB-2119). */
     def undefined(what: String): Nothing =
       throw new IllegalArgumentException(s"You need to define $what")
-    /** The input query: `key`'s text, else the structured {select, from,
-      * …} form (`structuredInput`). */
+    /** The input query under `key`: its text, or the structured
+      * {select, from, …} form read from its own object. */
+    def input(key: String): Option[String] = json(key).map {
+      case o: graft.js.JsInterp.JsObjV =>
+        structuredInput(ProcJson.params(o))
+          .getOrElse(ProcJson.paramString(o))
+      case v => ProcJson.paramString(v)
+    }
+    /** `input(key)`, else the structured form from the config's own
+      * flat keys (the engine API's `select`/`from` params). */
     def inputQuery(key: String, what: String): String =
-      param(key).orElse(structuredInput(param)).getOrElse(undefined(what))
+      input(key).orElse(structuredInput(param)).getOrElse(undefined(what))
     def inputQuery(key: String): String = inputQuery(key, key)
+    /** Param `k` as a JSON value; an engine-API string param holding
+      * JSON text is parsed, other text stays a string. */
+    def jsonValue(k: String): Option[graft.js.JsInterp.JsVal] = json(k).map {
+      case graft.js.JsInterp.JsStr(t) => scala.util.Try(ProcJson.parse(t))
+        .getOrElse(graft.js.JsInterp.JsStr(t))
+      case v => v
+    }
+    def scriptSource: String =
+      ProcJson.scriptSource(json).getOrElse(req("source"))
     /** `bucketize`'s `percentileBuckets` ranges, parsed once: its
       * creation-time check parses them, its run body reuses them. */
     lazy val percentileBuckets: Seq[(String, Double, Double)] =
-      parsePercentileBuckets(param("percentileBuckets").getOrElse(
+      parsePercentileBuckets(jsonValue("percentileBuckets").getOrElse(
         throw new IllegalArgumentException(
           "bucketize needs percentileBuckets")))
     def pgConfig: graft.sources.Postgres.PgConfig =
@@ -2422,44 +2454,24 @@ final class GraftEngine(val spark: SparkSession) {
       * type's own output key (xlsx's `output`). */
     def registerOut(df: DataFrame,
         fallbackName: Option[String] = None): String = {
-      // outputDataset may be a plain id, an {id} object (both land as
-      // the id string), or an id-LESS typed object ({type:
-      // "beh.mutable", params: {dataFileUrl}} — MLDB-1254's anonymous
-      // output): parse the raw config for the type/params then
-      val fromBody: Option[(String, Option[String], Option[String])] =
-        param("__body").flatMap { b =>
-          import graft.js.JsInterp._
-          val cfg = ProcJson.parse(b)
-          val od = ProcJson.field(cfg, "params")
-            .flatMap(ProcJson.field(_, "outputDataset"))
-            .orElse(ProcJson.field(cfg, "outputDataset"))
-          od.collect { case o: JsObjV =>
-            val id = o.fields.get("id") match {
-              case Some(JsStr(s)) => s
-              case _ => "auto_" + java.util.UUID.randomUUID().toString
-                .replace("-", "").take(12)
-            }
-            val tpe2 = o.fields.get("type") match {
-              case Some(JsStr(s)) => Some(s); case _ => None
-            }
-            val url = o.fields.get("params") match {
-              case Some(p: JsObjV) => p.fields.get("dataFileUrl") match {
-                case Some(JsStr(u)) => Some(u); case _ => None
-              }
-              case _ => None
-            }
-            (id, tpe2, url)
-          }
-        }
-      val name = param("outputDataset")
-        .filterNot(s => s.startsWith("{") || s.startsWith("["))
-        .orElse(fromBody.map(_._1)).orElse(fallbackName)
-        .getOrElse(throw new IllegalArgumentException(
-          s"procedure '$tpe' needs param 'outputDataset'"))
+      // outputDataset may be a plain id, an {id} object, or an id-LESS
+      // typed object ({type: "beh.mutable", params: {dataFileUrl}} —
+      // MLDB-1254's anonymous output)
+      val typed = json("outputDataset")
+        .collect { case o: graft.js.JsInterp.JsObjV => o }
+      val name = typed match {
+        case Some(o) => ProcJson.str(o, "id").getOrElse("auto_" +
+          java.util.UUID.randomUUID().toString.replace("-", "").take(12))
+        case None => param("outputDataset").orElse(fallbackName)
+          .getOrElse(throw new IllegalArgumentException(
+            s"procedure '$tpe' needs param 'outputDataset'"))
+      }
       createDataset(name, df)
       // a beh.mutable output with a dataFileUrl persists at once —
       // the reference's procedure commit (MLDB-1254's save → reload)
-      fromBody.foreach { case (_, t, u) =>
+      typed.foreach { o =>
+        val t = ProcJson.str(o, "type")
+        val u = ProcJson.field(o, "params").flatMap(ProcJson.str(_, "dataFileUrl"))
         if (t.exists(_.startsWith("beh")) && u.isDefined) {
           val url = u.get
           if (!url.contains("://")) throw new IllegalArgumentException(
@@ -2494,17 +2506,17 @@ final class GraftEngine(val spark: SparkSession) {
   /** Creation-time config validation (PUT /v1/procedures/<name>): the
     * reference validates the config object itself before any run. An
     * unknown type is left to the run. */
-  def validateProcedure(tpe: String, param: String => Option[String]): Unit =
-    procedureTypes.get(tpe).foreach(validate(_, new ProcCall(tpe, param)))
+  def validateProcedure(tpe: String,
+      json: String => Option[graft.js.JsInterp.JsVal],
+      id: Option[String]): Unit =
+    procedureTypes.get(tpe).foreach(validate(_, new ProcCall(tpe, json, id)))
 
   private def validate(p: ProcedureType, call: ProcCall): Unit = {
-    import call.param
     // the reference 400s a FROM-less input query at config-validation
     // time (MLDB-1258's battery of 11)
     if (p.needsFrom) {
-      val q = param("trainingData").orElse(param("inputData"))
-        .orElse(param("testingData")).orElse(param("exportData"))
-        .orElse(param("inputQuery"))
+      val q = Seq("trainingData", "inputData", "testingData", "exportData",
+        "inputQuery").iterator.flatMap(call.input).nextOption()
       q.foreach { text =>
         val parsed = scala.util.Try(graft.sql.Parser.parse(text)).toOption
         if (parsed.exists(_.from.isEmpty)) throw new IllegalArgumentException(
@@ -2519,10 +2531,16 @@ final class GraftEngine(val spark: SparkSession) {
     * config, then runs the type's body. Returns a small JSON summary;
     * dataset-producing types register their result under
     * `outputDataset`. */
-  def runProcedure(tpe: String, param: String => Option[String]): String = {
+  def runProcedure(tpe: String, param: String => Option[String]): String =
+    runProcedure(tpe, k => param(k).map(graft.js.JsInterp.JsStr), None)
+
+  /** `runProcedure` over a parsed config (`ProcJson.lookup`), run by
+    * the procedure entity `id` when it has one. */
+  def runProcedure(tpe: String, json: String => Option[graft.js.JsInterp.JsVal],
+      id: Option[String]): String = {
     val p = procedureTypes.getOrElse(tpe,
       throw new IllegalArgumentException(s"unknown procedure type '$tpe'"))
-    val call = new ProcCall(tpe, param)
+    val call = new ProcCall(tpe, json, id)
     validate(p, call)
     p.run(call)
   }
@@ -2580,8 +2598,8 @@ final class GraftEngine(val spark: SparkSession) {
             // the config's query must PARSE at creation — a broken
             // inputData 400s the PUT (MLDB-2112's 'SELECT x:BUG:1'),
             // though the entity itself still registers
-            param("inputQuery").orElse(structuredInput(param))
-              .orElse(param("inputData").filterNot(_.trim.startsWith("{")))
+            input("inputQuery").orElse(input("inputData"))
+              .orElse(structuredInput(param))
               .foreach(q => graft.sql.Parser.parse(q))
           }) { call => import call._
         // the reference's config key is inputData; inputQuery stays as
@@ -2589,8 +2607,8 @@ final class GraftEngine(val spark: SparkSession) {
         // ({select, from: {id}, where, orderBy, limit, offset} —
         // MLDB-1104/788) assembles the dialect text from its parts.
         // Missing input uses the reference's message (MLDB-2119).
-        val input = param("inputQuery").orElse(structuredInput(param))
-          .orElse(param("inputData")).getOrElse(undefined("inputData"))
+        val input = call.input("inputQuery")
+          .getOrElse(inputQuery("inputData"))
         val out1 = query(input)
         // a no-FROM transform names its constant row 'result' unless
         // NAMED overrode it (MLDB-409's no-FROM battery)
@@ -2871,15 +2889,8 @@ final class GraftEngine(val spark: SparkSession) {
         // columns).
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.Column
-        val structured = structuredInput(param)
-        // the structured {select, from} form wins when its parts are
-        // present — a flat trainingData lookup on that shape yields
-        // just the from-id, which is not a query (procedure_409_test)
-        val input = structured
-          .orElse(param("trainingData").filter(
-            _.trim.toLowerCase.startsWith("select")))
-          .orElse(param("trainingData")).orElse(param("inputData"))
-          .getOrElse(undefined("inputData"))
+        val input = call.input("trainingData")
+          .getOrElse(inputQuery("inputData"))
         val df0raw = query(input)
         import org.apache.spark.sql.types._
         // string columns train as one-hot indicators named
@@ -3172,17 +3183,8 @@ final class GraftEngine(val spark: SparkSession) {
           else if (cfg.contains("boost")) "boosting"
           else "glz"
         }
-        val algo = param("__body").flatMap { b =>
-          import graft.js.JsInterp._
-          val root = ProcJson.parse(b)
-          ProcJson.field(root, "params").orElse(Some(root))
-            .flatMap(ProcJson.field(_, "configuration"))
-            .flatMap(ProcJson.field(_, algo0))
-            .flatMap(ProcJson.field(_, "type")) match {
-            case Some(JsStr(t)) => Some(t)
-            case _ => None
-          }
-        }.getOrElse(algo0)
+        val algo = json("configuration").flatMap(ProcJson.field(_, algo0))
+          .flatMap(ProcJson.str(_, "type")).getOrElse(algo0)
         // the optional example-weight column (`weight` sub-select —
         // MLDB-198 varies it and pins the score ordering)
         val weightCol = df0.schema.fields
@@ -3256,8 +3258,7 @@ final class GraftEngine(val spark: SparkSession) {
         // r2, labelStatistics.
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
-        val input = param("testingData")
-          .filterNot(_.trim.startsWith("{"))
+        val input = call.input("testingData")
           .orElse(structuredInput(param))
           .getOrElse(
             throw new IllegalArgumentException("classifier.test expects a " +
@@ -3442,7 +3443,7 @@ final class GraftEngine(val spark: SparkSession) {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
         val input = inputQuery("trainingData")
-        val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
+        val outcomes = parseOutcomePairs(jsonValue("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "statsTable.train needs outcomes")))
         require(outcomes.nonEmpty, "statsTable.train needs outcomes")
@@ -3531,7 +3532,7 @@ final class GraftEngine(val spark: SparkSession) {
         // (already-capped) dynamic schema.
         import org.apache.spark.sql.functions._
         val input = inputQuery("trainingData")
-        val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
+        val outcomes = parseOutcomePairs(jsonValue("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "statsTable.bagOfWords.train needs outcomes")))
         require(outcomes.nonEmpty, "statsTable.bagOfWords.train needs outcomes")
@@ -3595,7 +3596,7 @@ final class GraftEngine(val spark: SparkSession) {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
         val input = inputQuery("trainingData")
-        val outcomes = parseOutcomePairs(param("outcomes").getOrElse(
+        val outcomes = parseOutcomePairs(jsonValue("outcomes").getOrElse(
           throw new IllegalArgumentException(
             "distTable.train needs outcomes")))
         require(outcomes.nonEmpty, "distTable.train needs outcomes")
@@ -4292,42 +4293,31 @@ final class GraftEngine(val spark: SparkSession) {
         // reference's script_procedure language, on JsInterp/JsHost) |
         // python (out-of-process python3, PyBridge — the reference's
         // external-python path with the same mldb.query/args surface)
+        import graft.js.JsInterp.JsObjV
+        val args = jsonValue("args")
         if (param("language").contains("javascript")) {
           // logs + status mirror the reference's ScriptOutput
           // (MLDB-642: run body `status` = the script's return value,
           // details `logs[i].c` = mldb.log/plugin.log lines); the
           // `result` key stays for this engine's earlier surface
           val sink = scala.collection.mutable.ArrayBuffer.empty[String]
-          val jsArgs = param("args").map { a =>
-            scala.util.Try(graft.js.JsInterp.jsonParse(a))
-              .getOrElse(graft.js.JsInterp.JsStr(a): graft.js.JsInterp.JsVal)
-          }
           val result = JsHost.run(spark, dataset,
-            req("source"), Map.empty, engine = this, logSink = sink,
-            pluginArgs = jsArgs)
+            scriptSource, Map.empty, engine = this, logSink = sink,
+            pluginArgs = args)
           val logs = sink.map(l =>
             s"""{"c": ${PyBridge.jstr(l)}}""").mkString("[", ",", "]")
           s"""{"result": ${JsHost.resultJson(result)}, """ +
             s""""status": ${JsHost.resultJson(result)}, "logs": $logs}"""
         } else if (param("language").contains("python")) {
-          val scriptArgs = param("args") match {
-            case Some(json) if json.trim.startsWith("{") =>
-              val (schema, row) = JsonRow.parseFlat(json)
-              schema.fieldNames.zipWithIndex
-                .map { case (n, i) => n -> String.valueOf(row.get(i)) }.toMap
+          val scriptArgs = args match {
+            case Some(o: JsObjV) =>
+              o.fields.map { case (k, v) => k -> ProcJson.paramString(v) }.toMap
             case _ => Map.empty[String, String]
           }
           // `args` lands as mldb.script.args verbatim (MLDB-642 logs
           // a bare string arg)
-          val argsJson = param("args").map { a =>
-            val t = a.trim
-            if (t.startsWith("{") || t.startsWith("[") || t == "null" ||
-                t == "true" || t == "false" ||
-                t.matches("-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?")) t
-            else PyBridge.jstr(a)
-          }
-          val r = PyBridge.run(spark, dataset, req("source"), scriptArgs,
-            scriptArgsJson = argsJson, httpPort = restPort)
+          val r = PyBridge.run(spark, dataset, scriptSource, scriptArgs,
+            scriptArgsJson = args.map(ProcJson.stringify), httpPort = restPort)
           // logs = stdout prints then mldb.log entries (the entries
           // also echo on stderr; the log-file channel keeps multi-line
           // pretty-printed values whole — python_mldb_log)
@@ -4339,7 +4329,7 @@ final class GraftEngine(val spark: SparkSession) {
           s"""{"status": ${r.returnJson.getOrElse("null")}, """ +
             s""""logs": $logs, """ + core.trim.drop(1)
         } else {
-          val result = Scripting.run(spark, req("source"))
+          val result = Scripting.run(spark, scriptSource)
           (result, param("outputDataset")) match {
             case (df: DataFrame, Some(_)) => registerOut(df)
             case _ => s"""{"result": ${JsonRow.scalarJson(result)}}"""
@@ -4351,10 +4341,7 @@ final class GraftEngine(val spark: SparkSession) {
         // (`builtin/external_python_procedure.cc`; MLDB-694): run an
         // external python script, piping `stdInData` to its stdin; the
         // run's status carries the script's last-line JSON as `return`
-        val src = param("source").orElse(param("scriptConfig")).getOrElse(
-          throw new IllegalArgumentException(
-            "external procedure needs scriptConfig.source"))
-        val r = PyBridge.run(spark, dataset, src,
+        val r = PyBridge.run(spark, dataset, scriptSource,
           stdinData = param("stdInData"), httpPort = restPort)
         if (r.returnCode != 0) throw new IllegalArgumentException(
           s"external procedure failed: ${r.stderr}")
@@ -4472,15 +4459,9 @@ final class GraftEngine(val spark: SparkSession) {
           // the reference rejects self-containment at CONSTRUCTION
           // (basic_procedures.cc:113; MLDB-621's deadlock PUT) — a step
           // whose id names the procedure being created is a 400
-          import graft.js.JsInterp.{JsArrV, JsStr}
-          for {
-            body <- param("__body")
-            selfId <- param("__id")
-            steps <- scala.util.Try(ProcJson.field(ProcJson.parse(body),
-              "params").flatMap(ProcJson.field(_, "steps"))).toOption.flatten
-          } steps match {
-            case a: JsArrV => a.elems.foreach { s =>
-              if (ProcJson.field(s, "id").contains(JsStr(selfId)))
+          json("steps").foreach {
+            case a: graft.js.JsInterp.JsArrV => a.elems.foreach { s =>
+              if (entityId.isDefined && ProcJson.str(s, "id") == entityId)
                 throw new IllegalArgumentException(
                   "Procedure contains itself as a child")
             }
@@ -4492,29 +4473,18 @@ final class GraftEngine(val spark: SparkSession) {
         // CONFIGS in order through this same dispatch; a step that
         // names this procedure's own id is the reference's
         // "Procedure contains itself as a child" 400 (MLDB-621).
-        import graft.js.JsInterp.{JsArrV, JsStr}
-        val root = ProcJson.parse(param("__body").getOrElse(
-          throw new IllegalArgumentException("serial needs steps")))
-        val steps = ProcJson.field(root, "params")
-          .flatMap(ProcJson.field(_, "steps"))
-          .orElse(ProcJson.field(root, "steps")) match {
-          case Some(a: JsArrV) => a.elems.toSeq
+        val steps = json("steps") match {
+          case Some(a: graft.js.JsInterp.JsArrV) => a.elems.toSeq
           case _ => throw new IllegalArgumentException("serial needs steps")
         }
-        val selfId = param("__id")
         val results = steps.map { s =>
-          val stepType = ProcJson.field(s, "type") match {
-            case Some(JsStr(t)) => t
-            case _ => throw new IllegalArgumentException(
-              "serial step needs a type")
-          }
-          val stepId = ProcJson.field(s, "id")
-            .collect { case JsStr(i) => i }
-          if (stepId.isDefined && stepId == selfId)
+          val stepType = ProcJson.str(s, "type").getOrElse(
+            throw new IllegalArgumentException("serial step needs a type"))
+          val stepId = ProcJson.str(s, "id")
+          if (stepId.isDefined && stepId == entityId)
             throw new IllegalArgumentException(
               "Procedure contains itself as a child")
-          runProcedure(stepType, ProcJson.childParamFn(
-            stepType, ProcJson.field(s, "params"), stepId))
+          runProcedure(stepType, ProcJson.lookup(s), stepId)
         }
         s"""{"steps": ${results.mkString("[", ",", "]")}}"""
       },
@@ -4528,20 +4498,14 @@ final class GraftEngine(val spark: SparkSession) {
         // {configuration, results} entry per combination, like the
         // reference's RunOutput array.
         import graft.js.JsInterp.{JsArrV, JsObjV, JsStr, JsVal}
-        val root = ProcJson.parse(param("__body").getOrElse(
-          throw new IllegalArgumentException(
-            "permuter.run needs procedure and permutations")))
-        val p = ProcJson.field(root, "params").getOrElse(root)
-        val procCfg = ProcJson.field(p, "procedure").getOrElse(
+        val procCfg = json("procedure").getOrElse(
           throw new IllegalArgumentException("permuter.run needs procedure"))
-        val perms = ProcJson.field(p, "permutations").getOrElse(
+        val perms = json("permutations").getOrElse(
           throw new IllegalArgumentException(
             "permuter.run needs permutations"))
-        val childType = ProcJson.field(procCfg, "type") match {
-          case Some(JsStr(t)) => t
-          case _ => throw new IllegalArgumentException(
-            "permuter.run child procedure needs a type")
-        }
+        val childType = ProcJson.str(procCfg, "type").getOrElse(
+          throw new IllegalArgumentException(
+            "permuter.run child procedure needs a type"))
         val baseJson = ProcJson.field(procCfg, "params")
           .map(ProcJson.stringify).getOrElse("{}")
         // flatten the grid to (path, values) axes, reference order
@@ -4580,9 +4544,8 @@ final class GraftEngine(val spark: SparkSession) {
             setPath(conf, path, v) }
           val confJson = ProcJson.stringify(conf)
             .replace("$permutation", s"permutation_$permNum")
-          val permuted = ProcJson.parse(confJson)
-          val res = runProcedure(childType, ProcJson.childParamFn(
-            childType, Some(permuted), None))
+          val res = runProcedure(childType,
+            ProcJson.lookup(ProcJson.parse(confJson)), None)
           out += s"""{"configuration": $confJson, "results": $res}"""
         }
         def recur(axis: Int, acc: Seq[JsVal]): Unit =
@@ -4624,53 +4587,77 @@ final class GraftEngine(val spark: SparkSession) {
   }
 }
 
-/** Nested-procedure-config navigation for the composite procedure
-  * types (`serial`, `permuter.run` — `builtin/basic_procedures.cc:64`,
-  * `builtin/permuter_procedure.cc:143`): the REST layer's flat key
-  * extraction can't express a child {type, params} config, so these
-  * procedures receive the raw config JSON (the `__body` param) and
-  * walk it with the engine's own JSON parser. */
-private[api] object ProcJson {
+/** The one reading of a typed `{type, params}` config
+  * (`core/procedure.h`; SURVEY §2.7). A REST body, a `serial` or
+  * `permuter.run` child, a nested dataset config and a JS plugin's
+  * config object are each parsed once with the engine's JSON parser;
+  * every param is then found by `lookup` and rendered by
+  * `paramString`, so a config reads the same on every path. */
+private[graft] object ProcJson {
   import graft.js.JsInterp
   import graft.js.JsInterp._
 
   def parse(s: String): JsVal = JsInterp.jsonParse(s)
+
+  /** A request body: empty is `JsNull`, text that is not JSON is the
+    * client's 400. */
+  def body(s: String): JsVal =
+    if (s.trim.isEmpty) JsNull
+    else try parse(s)
+    catch { case scala.util.control.NonFatal(e) =>
+      throw new IllegalArgumentException(
+        s"request body is not valid JSON: ${e.getMessage}")
+    }
+
   def field(v: JsVal, k: String): Option[JsVal] = v match {
     case o: JsObjV => o.fields.get(k)
     case _ => None
   }
+  def str(v: JsVal, k: String): Option[String] =
+    field(v, k).collect { case JsStr(s) => s }
   def stringify(v: JsVal): String =
     JsInterp.jsonStringify(v).getOrElse("null")
 
-  /** Render a config value the way `RestServer.extractFieldOpt` would
-    * deliver it to a procedure: scalars plain, `{"id": …}` objects as
-    * their id, other objects and arrays as raw JSON text for the
-    * receiving procedure to parse itself. */
+  /** Param `k` of the first config that sets it, reading `params.k`,
+    * else the top-level `k`. Earlier configs win (a run body's over
+    * its stored config's); a JSON null is unset. */
+  def lookup(configs: JsVal*): String => Option[JsVal] = k =>
+    configs.iterator.flatMap(c =>
+      field(c, "params").flatMap(field(_, k)).orElse(field(c, k)))
+      .find(v => v != JsNull && v != JsUndef)
+
+  /** A script's text: `source`, else `scriptConfig.source` (the
+    * reference's script resource config). */
+  def scriptSource(find: String => Option[JsVal]): Option[String] =
+    find("source").map(paramString)
+      .orElse(find("scriptConfig").flatMap(str(_, "source")))
+
+  /** `lookup`, rendered by `paramString`. */
+  def params(configs: JsVal*): String => Option[String] = {
+    val find = lookup(configs: _*)
+    k => find(k).map(paramString)
+  }
+
+  private def isScalarOrId(v: JsVal): Boolean = v match {
+    case JsStr(_) | JsNum(_) | JsBool(_) => true
+    case o: JsObjV => str(o, "id").isDefined
+    case _ => false
+  }
+
+  /** A config value as param text: strings as they are, whole numbers
+    * below 2^53 as integers, booleans as true/false, an object with an
+    * id as that id, a flat array of scalars or {id} objects as a comma
+    * list, anything else as JSON text. */
   def paramString(v: JsVal): String = v match {
     case JsStr(s) => s
     case JsNum(d) =>
-      if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
+      if (d.isWhole && math.abs(d) < 9007199254740992.0) d.toLong.toString
+      else d.toString
     case JsBool(b) => b.toString
-    case JsNull => "null"
-    case o: JsObjV => o.fields.get("id") match {
-      case Some(JsStr(id)) => id
-      case _ => stringify(o)
-    }
+    case o: JsObjV => str(o, "id").getOrElse(stringify(o))
+    case a: JsArrV if a.elems.forall(isScalarOrId) =>
+      a.elems.map(paramString).mkString(",")
     case other => stringify(other)
-  }
-
-  /** A param lookup over a parsed child config's `params` object,
-    * with `__body` reconstituting a {type, params} body so composite
-    * children (a serial inside a serial) keep working. */
-  def childParamFn(tpe: String, params: Option[JsVal],
-      id: Option[String]): String => Option[String] = {
-    val bodyJson = s"""{"type": ${JsInterp.jsonStringify(JsStr(tpe))
-      .getOrElse("\"\"")}, "params": ${params.map(stringify)
-      .getOrElse("{}")}}"""
-    k =>
-      if (k == "__body") Some(bodyJson)
-      else if (k == "__id") id
-      else params.flatMap(field(_, k)).map(paramString)
   }
 }
 

@@ -108,24 +108,10 @@ object JsHost {
             .replace("-", "").take(12)
         }
         // typed creation routes through the dataset-type registry
-        // (sqliteSparse / continuous / merged …); params look up in
-        // the config's params object
-        val tpe = cfgObj.fields.get("type") match {
-          case Some(JsStr(t)) => t
-          case _ => ""
-        }
-        val params = cfgObj.fields.get("params")
-        engine.createDatasetTyped(id, tpe, k => params.flatMap {
-          case p: JsObjV => p.fields.get(k).map {
-            case JsStr(s) => s
-            case ob: JsObjV => ob.fields.get("id") match {
-              case Some(JsStr(s2)) => s2
-              case _ => jsonStringify(ob).getOrElse("null")
-            }
-            case other2 => jsonStringify(other2).getOrElse("null")
-          }
-          case _ => None
-        })
+        // (sqliteSparse / continuous / merged …) with the config's
+        // params read like every other config's
+        engine.createDatasetTyped(id, ProcJson.str(cfgObj, "type")
+          .getOrElse(""), ProcJson.params(cfgObj))
         val buffered =
           mutable.ArrayBuffer.empty[(String, Seq[(String, JsVal)])]
         def cellJson(v: JsVal): String = jsonStringify(v).getOrElse("null")
@@ -245,17 +231,14 @@ object JsHost {
           case _ => "auto_" + java.util.UUID.randomUUID().toString
             .replace("-", "").take(12)
         }
-        val params = cfg.fields.get("params") match {
-          case Some(p: JsObjV) => p.fields
-          case _ => mutable.LinkedHashMap.empty[String, JsVal]
-        }
+        val param = ProcJson.params(cfg)
         cfg.fields.get("type") match {
           case Some(JsStr("sql.expression")) =>
-            val expr = params.get("expression").map(toStr).getOrElse(
+            val expr = param("expression").getOrElse(
               JsInterp.error("sql.expression needs params.expression"))
             engine.createSqlExpressionFunction(id, expr,
-              raw = params.get("raw").exists(toBool),
-              autoInput = params.get("autoInput").exists(toBool))
+              raw = param("raw").contains("true"),
+              autoInput = param("autoInput").contains("true"))
           case Some(JsStr(other)) => JsInterp.error(
             s"createFunction: unsupported in-script type '$other'")
           case _ => JsInterp.error("createFunction needs a type")
@@ -308,25 +291,12 @@ object JsHost {
           case Some(JsStr(t)) => t
           case _ => JsInterp.error("createProcedure needs a type")
         }
-        val bodyJson = jsonStringify(cfg).getOrElse("{}")
         val h = mutable.LinkedHashMap.empty[String, JsVal]
         h("type") = new JsNativeV("type", (_, _) => JsStr(tpe))
         h("run") = new JsNativeV("run", (_, ras) => {
-          val runParams = ras.headOption match {
-            case Some(ob: JsObjV) => ob.fields
-            case _ => mutable.LinkedHashMap.empty[String, JsVal]
-          }
-          val cfgParams = cfg.fields.get("params") match {
-            case Some(p: JsObjV) => p.fields
-            case _ => mutable.LinkedHashMap.empty[String, JsVal]
-          }
-          def lookup(k: String): Option[String] =
-            if (k == "__body") Some(bodyJson)
-            else runParams.get(k).orElse(cfgParams.get(k)).map {
-              case JsStr(s) => s
-              case other2 => jsonStringify(other2).getOrElse("null")
-            }
-          val res = engine.runProcedure(tpe, lookup)
+          // the run's own params take precedence over the config's
+          val res = engine.runProcedure(tpe, ProcJson.lookup(
+            ras.headOption.getOrElse(JsNull), cfg), ProcJson.str(cfg, "id"))
           // the run OUTPUT: a bare done-status is the reference's
           // empty run details
           if (res.replaceAll("\\s", "") == """{"status":"done"}""")

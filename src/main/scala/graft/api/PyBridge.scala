@@ -331,36 +331,9 @@ del _GraftMldb
   /** Validate that `s` is a standalone JSON value; return it verbatim. */
   private def parseJsonOpt(s: String): Option[String] = {
     val t = s.trim
-    if (t.isEmpty) None
-    else if (t.startsWith("{") || t.startsWith("[")) {
-      // cheap structural validation via Spark's JSON reader would cost
-      // a job; balance-check braces/brackets + quotes instead
-      if (balancedJson(t)) Some(t) else None
-    } else if (t == "null" || t == "true" || t == "false") Some(t)
-    else if (t.matches("-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?")) Some(t)
-    else if (t.startsWith("\"") && t.endsWith("\"") && t.length >= 2)
+    if (t.nonEmpty && scala.util.Try(graft.js.JsInterp.jsonParse(t)).isSuccess)
       Some(t)
     else None
-  }
-
-  private def balancedJson(t: String): Boolean = {
-    var depth = 0
-    var inStr = false
-    var esc = false
-    t.foreach { c =>
-      if (esc) esc = false
-      else if (inStr) {
-        if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' | '[' => depth += 1
-        case '}' | ']' => depth -= 1
-        case _ => ()
-      }
-      if (depth < 0) return false
-    }
-    depth == 0 && !inStr
   }
 
   /** The REST response shape (`external_python_procedure.cc:125-147`):

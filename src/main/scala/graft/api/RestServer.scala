@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import scala.util.control.NonFatal
+import graft.js.JsInterp.{JsArrV, JsNull, JsObjV, JsVal}
 
 /** Minimal REST façade over GraftEngine, mirroring the reference's
   * `/v1` surface (`/root/reference/server/mldb_server.cc:209-228`):
@@ -16,11 +17,13 @@ import scala.util.control.NonFatal
   *   GET  /v1/functions                        — list
   *   POST /v1/procedures/transform  body: {"inputQuery": …,
   *        "outputDataset": …}                  — INSERT-INTO-SELECT
-  *   POST /v1/procedures  body: {"type": …, <flat params>} — typed
+  *   POST /v1/procedures  body: {"type": …, "params": {…}} — typed
   *        dispatch to every batch procedure (transform, import.text/
   *        json/xlsx/git/sqlite/sentiwordnet, export.csv, tsne.train,
   *        script.run); the reference's {type, params} config model
-  *        with a flat param object
+  *
+  * Every JSON body is parsed once; configs are read through `ProcJson`
+  * (`params.k`, else the top-level `k`).
   *
   * Built on the JDK's HttpServer (zero added dependencies). Row
   * serialization uses Spark's own `toJSON` codec. This is a
@@ -34,7 +37,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // named procedure configs (PUT /v1/procedures/<name> → POST …/runs)
   private val procedures =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+    scala.collection.concurrent.TrieMap.empty[String, (String, JsVal)]
   // completed runs per named procedure: (runId, started) in run order
   private val procRuns = scala.collection.concurrent.TrieMap
     .empty[String, Vector[(String, java.time.Instant)]]
@@ -62,13 +65,15 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     // the query route's work, shared by /v1/query (query string OR
     // JSON body — MLDB-1717 "q may be defined either as a query string
     // parameter or the JSON body") and /v1/redirect/get
-    def runQueryRoute(params: Map[String, String], body: String): String = {
-      def bodyField(k: String): Option[String] =
-        extractFieldOpt(body, k)
+    def runQueryRoute(params: Map[String, String], body: JsVal): String = {
+      val bodyField = ProcJson.params(body)
       // MLDB-1893: parameters come from the query string OR the JSON
       // body, never both in one request
-      if (params.nonEmpty && body.trim.nonEmpty && body.trim != "{}" &&
-          body.trim != "null")
+      val bodyEmpty = body match {
+        case o: JsObjV => o.fields.isEmpty
+        case v => v == JsNull
+      }
+      if (params.nonEmpty && !bodyEmpty)
         throw new IllegalArgumentException(
           "You cannot mix query string and body parameters")
       val q = params.get("q").filter(_.nonEmpty)
@@ -97,29 +102,24 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     // python_mldb_interface_test's mldb.get('/ping'))
     server.createContext("/ping", (ex: HttpExchange) => handle(ex) { "null" })
     server.createContext("/v1/query", (ex: HttpExchange) => handle(ex) {
-      val body = new String(ex.getRequestBody.readAllBytes,
-        StandardCharsets.UTF_8)
-      runQueryRoute(queryParams(ex), body)
+      runQueryRoute(queryParams(ex), bodyJson(ex))
     })
     // POST {target, body} re-dispatched as GET-with-body, for clients
     // that cannot send one (MLDB-1717 test_as_POST_body;
     // `server/mldb_server.cc` /v1/redirect/get)
     server.createContext("/v1/redirect/get", (ex: HttpExchange) => handle(ex) {
-      val body = new String(ex.getRequestBody.readAllBytes,
-        StandardCharsets.UTF_8)
-      val target = extractFieldOpt(body, "target").getOrElse(
+      val req = bodyJson(ex)
+      val target = ProcJson.str(req, "target").getOrElse(
         throw new IllegalArgumentException("missing target"))
-      val inner = ("\"body\"\\s*:\\s*(\\{.*\\})\\s*\\}\\s*$").r
-        .findFirstMatchIn(body).map(_.group(1)).getOrElse("{}")
+      val inner = ProcJson.field(req, "body").getOrElse(JsNull)
       val appRe = "^/v1/functions/([^/]+)/application$".r
       target match {
         case t if t.startsWith("/v1/query") => runQueryRoute(Map.empty, inner)
         case appRe(fn) =>
-          // {"input": {...}} — the input OBJECT verbatim (MLDB-2163)
-          val in = ("\"input\"\\s*:\\s*(\\{.*\\})\\s*\\}\\s*$").r
-            .findFirstMatchIn(inner).map(_.group(1)).getOrElse(
-              throw new IllegalArgumentException("missing input"))
-          applicationJson(fn, in)
+          // {"input": {...}} — the input OBJECT (MLDB-2163)
+          val in = ProcJson.field(inner, "input").getOrElse(
+            throw new IllegalArgumentException("missing input"))
+          applicationJson(fn, ProcJson.stringify(in))
         case other => throw new IllegalArgumentException(
           s"redirect target '$other' not supported")
       }
@@ -171,12 +171,11 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             }
           }
         case ("PUT", name) =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val cfg = bodyJson(ex)
           // a TOP-LEVEL body id that CONTRADICTS the path name is the
           // reference's 400 (MLDB-348) — nested ids (params.dataset.id)
           // are config references, not the entity id
-          topLevelId(body).foreach { id =>
+          ProcJson.str(cfg, "id").foreach { id =>
             if (id != name) throw new IllegalArgumentException(
               s"dataset config id '$id' does not match the PUT path '$name'")
           }
@@ -187,9 +186,8 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
               // typed creation, the reference's config model:
               // body {"type": "merged"|"sampled"|"transposed"|
               // "union"|"sub"|"tabular"|"sparse.mutable", <params>}
-              val tpe = extractFieldOpt(body, "type").getOrElse("")
-              try engine.createDatasetTyped(name, tpe,
-                k => extractFieldOpt(body, k))
+              val tpe = ProcJson.str(cfg, "type").getOrElse("")
+              try engine.createDatasetTyped(name, tpe, ProcJson.params(cfg))
               catch {
                 // MLDB-572: a failed creation still registers the
                 // entity, in error state, with its config readable —
@@ -207,15 +205,14 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // `auto_` prefix (MLDB-983); POST-creating an EXISTING id is
           // the reference's duplicate-entry error (MLDB-312 — PUT
           // keeps overwrite semantics, MLDB-748)
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          val name = extractFieldOpt(body, "id").getOrElse(
+          val cfg = bodyJson(ex)
+          val name = ProcJson.str(cfg, "id").getOrElse(
             "auto_" + java.util.UUID.randomUUID().toString.replace("-", ""))
           if (engine.listDatasets.contains(name))
             throw new IllegalArgumentException(
               s"dataset entry '$name' already exists")
-          val tpe = extractFieldOpt(body, "type").getOrElse("")
-          engine.createDatasetTyped(name, tpe, k => extractFieldOpt(body, k))
+          engine.createDatasetTyped(name, ProcJson.str(cfg, "type")
+            .getOrElse(""), ProcJson.params(cfg))
           Created(s"""{"id": ${jsonStr(name)}}""")
         case ("POST", nameRows) if nameRows.endsWith("/rows") =>
           // record API (`core/dataset.h:417-539`): body = JSON array
@@ -224,11 +221,11 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // in epoch seconds or ISO; wide mode keeps the row's max as
           // its ts column)
           val name = nameRows.stripSuffix("/rows")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val body = bodyText(ex)
+          val rows = ProcJson.body(body)
           val flat =
-            if (body.contains("\"columns\""))
-              columnsFormToFlat(body, engine.timeQuantum(name))
+            if (isColumnsForm(rows))
+              columnsFormToFlat(rows, engine.timeQuantum(name))
             else body
           val n = engine.recordRows(name, flat)
           s"""{"recorded": $n}"""
@@ -237,54 +234,32 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // rows: [[rowName, value, ts], …]} — cells merge onto
           // named rows
           val name = nameCols.stripSuffix("/columns")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          val colName = extractField(body, "columnName")
-          val n = engine.recordColumnsJson(name,
-            columnCellsToFlat(colName, jsonBracketValue(body, "rows")
-              .getOrElse(throw new IllegalArgumentException(
-                "recordColumn needs rows"))))
+          val cfg = bodyJson(ex)
+          val rows = ProcJson.field(cfg, "rows").collect { case a: JsArrV => a }
+            .getOrElse(throw new IllegalArgumentException(
+              "recordColumn needs rows"))
+          val n = engine.recordColumnsJson(name, columnCellsToFlat(
+            need(ProcJson.params(cfg), "columnName"), rows.elems.toSeq))
           s"""{"recorded": $n}"""
         case ("POST", nameCols) if nameCols.endsWith("/multicolumns") =>
           // body [[columnName, [[rowName, value, ts], …]], …]
           val name = nameCols.stripSuffix("/multicolumns")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          var total = 0L
-          val colRe = ("\\[\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*\\[").r
-          val ms = colRe.findAllMatchIn(body).toSeq
-          require(ms.nonEmpty, "recordColumns needs [[columnName, rows]] pairs")
-          ms.foreach { m =>
-            // balanced-scan the rows array that starts at the inner [
-            val open = m.end - 1
-            var depth = 0; var inStr = false; var esc = false
-            var i = open; var close = -1
-            while (close < 0 && i < body.length) {
-              val c = body.charAt(i)
-              if (inStr) {
-                if (esc) esc = false
-                else if (c == '\\') esc = true
-                else if (c == '"') inStr = false
-              } else c match {
-                case '"' => inStr = true
-                case '[' => depth += 1
-                case ']' => depth -= 1; if (depth == 0) close = i
-                case _ =>
-              }
-              i += 1
-            }
-            require(close > 0, "unbalanced rows array")
-            total += engine.recordColumnsJson(name, columnCellsToFlat(
-              m.group(1), body.substring(open + 1, close)))
+          val pairs = elems(Some(bodyJson(ex))).collect {
+            case p: JsArrV if p.elems.size == 2 &&
+                p.elems(1).isInstanceOf[JsArrV] => p.elems.toSeq
           }
+          require(pairs.nonEmpty, "recordColumns needs [[columnName, rows]] pairs")
+          val total = pairs.map { case Seq(col, rows) =>
+            engine.recordColumnsJson(name, columnCellsToFlat(
+              ProcJson.paramString(col), elems(Some(rows))))
+          }.sum
           s"""{"recorded": $total}"""
         case ("POST", nameSaves) if nameSaves.endsWith("/routes/saves") =>
           // continuous dataset rotation (MLDB-825 /routes/saves):
           // snapshot to dataFileUrl + metadata entry
           val name = nameSaves.stripSuffix("/routes/saves")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          engine.saveContinuous(name, extractField(body, "dataFileUrl"))
+          engine.saveContinuous(name,
+            need(ProcJson.params(bodyJson(ex)), "dataFileUrl"))
         case ("POST", nameCommit) if nameCommit.endsWith("/commit") =>
           // persists file-backed mutable datasets (sqliteSparse);
           // a no-op in plain wide mode (recordRows is immediate)
@@ -313,9 +288,10 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // sql.expression → dialect macro; sql.query → $param-ized
           // per-row lookup (MLDB-784) or registration-time row
           // function (MLDB-1320) when parameterless
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          val tpe = extractField(body, "type")
+          val cfg = bodyJson(ex)
+          val p = ProcJson.params(cfg)
+          val tpe = ProcJson.str(cfg, "type").getOrElse(
+            throw new IllegalArgumentException("missing field type"))
           tpe match {
             case "sql.expression" =>
               // `prepared` is accepted as a no-op performance hint —
@@ -323,13 +299,13 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
               // already. raw/autoInput change the application shape
               // (MLDB-2022's /batch route).
               engine.createSqlExpressionFunction(name,
-                extractField(body, "expression"),
-                raw = extractFieldOpt(body, "raw").contains("true"),
-                autoInput = extractFieldOpt(body, "autoInput")
+                need(p, "expression"),
+                raw = p("raw").contains("true"),
+                autoInput = p("autoInput")
                   .contains("true"))
             case "sql.query" =>
-              val q = extractField(body, "query")
-              val out = extractFieldOpt(body, "output").getOrElse("FIRST_ROW")
+              val q = need(p, "query")
+              val out = p("output").getOrElse("FIRST_ROW")
               if (q.contains("$"))
                 engine.createSqlQueryDialectFunction(name, q, out)
               else engine.createSqlQueryRowFunction(name, q, out)
@@ -340,12 +316,12 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             // validated at CREATION time like the reference
             // (`nlp.cc:277` sb_stemmer_new check).
             case "stemmer" =>
-              val lang = extractFieldOpt(body, "language").getOrElse("english")
+              val lang = p("language").getOrElse("english")
               graft.functions.SnowballStemmer.validate(lang)
               engine.createSqlExpressionFunction(name,
                 s"stemmer({words: words, language: '$lang'})[words] AS words")
             case "stemmerdoc" =>
-              val lang = extractFieldOpt(body, "language").getOrElse("english")
+              val lang = p("language").getOrElse("english")
               graft.functions.SnowballStemmer.validate(lang)
               engine.createSqlExpressionFunction(name,
                 s"stemmerdoc({document: document, language: '$lang'})" +
@@ -353,18 +329,18 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             case "filter_stopwords" =>
               // the reference ships an english-only stopword table and
               // rejects anything else at creation (`nlp.cc:73-76`)
-              val lang = extractFieldOpt(body, "language").getOrElse("english")
+              val lang = p("language").getOrElse("english")
               if (lang != "english") throw new IllegalArgumentException(
                 s"Unsupported language: $lang")
               engine.createSqlExpressionFunction(name,
                 "filter_stopwords({words: words})[words] AS words")
             case "pooling" =>
-              val ds = extractField(body, "embeddingDataset")
-              // extractFieldOpt flattens a JSON array to a bare comma
-              // list (avg,max); rebuild a dialect array of SINGLE-quoted
+              val ds = need(p, "embeddingDataset")
+              // a JSON array param reads as a bare comma list
+              // (avg,max); rebuild a dialect array of SINGLE-quoted
               // string literals — double quotes would lex as quoted
               // identifiers and the pooling handler requires StrLits.
-              val aggs = extractFieldOpt(body, "aggregators")
+              val aggs = p("aggregators")
                 .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
                 .getOrElse(Seq("avg"))
               val arr = aggs.map(a => s"'$a'").mkString("[", ",", "]")
@@ -375,88 +351,89 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
               // MLDB-285: nearest-centroid assignment with a model
               // trained by the kmeans.train procedure
               engine.createKmeansFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "classifier" =>
               // MLDB-647/173: apply a model trained by classifier.train
               engine.createClassifierFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "classifier.explain" =>
               // MLDB-573: per-feature contribution explanations
               engine.createClassifierExplainFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "probabilizer" =>
               // MLDB-59: calibrate a raw score into a probability
               engine.createProbabilizerFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "script.apply" =>
               // MLDB-643: a function backed by a script. python runs
               // driver-side per call; the JS flavor is the per-row
               // executor path (createScriptFunction)
-              val lang = extractFieldOpt(body, "language")
+              val lang = p("language")
                 .getOrElse("javascript")
               require(lang == "python",
                 "script.apply REST creation supports language: python " +
                   "(JS script functions register via script expressions)")
               engine.createPythonScriptFunction(name,
-                extractField(body, "source"))
+                ProcJson.scriptSource(ProcJson.lookup(cfg)).getOrElse(
+                  throw new IllegalArgumentException("missing field source")))
             case "svm" =>
               // MLDB-991: one-vs-rest margins argmax over a model
               // trained by svm.train
               engine.createSvmFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "experimental.distTable.getStats" =>
               // MLDB-1750: final dist-table stats per argument key
               engine.createDistTableGetStatsFunction(name,
-                extractField(body, "distTableFileUrl"),
-                extractFieldOpt(body, "statistics").map(
+                need(p, "distTableFileUrl"),
+                p("statistics").map(
                   _.stripPrefix("[").stripSuffix("]").split(",")
                     .map(_.trim.stripPrefix("\"").stripSuffix("\""))
                     .filter(_.nonEmpty).toSeq))
             case "statsTable.getCounts" =>
               // MLDB-873: per-key counts from a trained stats table
               engine.createStatsTableFunction(name,
-                extractField(body, "statsTableFileUrl"))
+                need(p, "statsTableFileUrl"))
             case "statsTable.bagOfWords.posneg" =>
               // MLDB-873/MLDBFB-506: top/bottom word probabilities
               engine.createStatsTablePosNegFunction(name,
-                extractField(body, "statsTableFileUrl"),
-                extractField(body, "outcomeToUse"),
-                extractFieldOpt(body, "numPos").map(_.toInt).getOrElse(50),
-                extractFieldOpt(body, "numNeg").map(_.toInt).getOrElse(50),
-                extractFieldOpt(body, "minTrials").map(_.toInt).getOrElse(50))
+                need(p, "statsTableFileUrl"),
+                need(p, "outcomeToUse"),
+                p("numPos").map(_.toInt).getOrElse(50),
+                p("numNeg").map(_.toInt).getOrElse(50),
+                p("minTrials").map(_.toInt).getOrElse(50))
             case "gaussianclustering" =>
               // MLDB-1353: max-posterior cluster of the argument row
               engine.createGaussianClusteringFunction(name,
-                extractField(body, "modelFileUrl"))
+                need(p, "modelFileUrl"))
             case "tokensplit" =>
               // MLDB-1116: special-token re-tokenizer configured by a
               // tokens query
               engine.createTokensplitFunction(name,
-                extractField(body, "tokens"))
+                need(p, "tokens"))
             case "embedding.neighbors" =>
               // MLDB-283: nearest points of a configured embedding
               // dataset
               engine.createEmbeddingNeighborsFunction(name,
-                extractField(body, "dataset"),
-                extractFieldOpt(body, "defaultNumNeighbors")
+                need(p, "dataset"),
+                p("defaultNumNeighbors")
                   .map(_.toInt).getOrElse(100))
             case "tfidf" =>
               // MLDB-1101: tf·idf scoring with a model trained by
               // tfidf.train
               engine.createTfidfFunction(name,
-                extractField(body, "modelFileUrl"),
-                extractFieldOpt(body, "tfType").getOrElse("raw"),
-                extractFieldOpt(body, "idfType").getOrElse("inverseSmooth"))
+                need(p, "modelFileUrl"),
+                p("tfType").getOrElse("raw"),
+                p("idfType").getOrElse("inverseSmooth"))
             case "svd.embedRow" =>
               // MLDB-805/498: embed one argument row with a model
               // trained by the svd.train procedure
               engine.createSvdEmbedFunction(name,
-                extractField(body, "modelFileUrl"),
-                extractFieldOpt(body, "maxSingularValues").map(_.toInt)
+                need(p, "modelFileUrl"),
+                p("maxSingularValues").map(_.toInt)
                   .getOrElse(Int.MaxValue))
             case "feature_hasher" =>
-              val bits = extractFieldOpt(body, "numBits").getOrElse("8")
-              val mode = extractFieldOpt(body, "mode").getOrElse("columns")
+              val bits = p("numBits").getOrElse("8")
+              val mode = p("mode").getOrElse("columns")
               engine.createSqlExpressionFunction(name,
                 s"feature_hasher({columns: columns, numBits: $bits, " +
                   s"mode: '$mode'})[hash] AS hash")
@@ -469,25 +446,21 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // realtime dist-table update (MLDB-1750 test_real_time):
           // body {keys: [[table, value], …], outcomes: [n, …]}
           val fn = rt.stripSuffix("/routes/increment")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          val pairRe = ("\\[\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-            "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*\\]").r
-          val keys = jsonBracketValue(body, "keys").toSeq.flatMap(inner =>
-            pairRe.findAllMatchIn(inner).map(m =>
-              m.group(1) -> m.group(2)))
-          val outcomes = jsonBracketValue(body, "outcomes").toSeq
-            .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)
-              .map(_.toDouble))
+          val cfg = bodyJson(ex)
+          val keys = elems(ProcJson.field(cfg, "keys")).collect {
+            case k: JsArrV if k.elems.size == 2 =>
+              ProcJson.paramString(k.elems(0)) -> ProcJson.paramString(k.elems(1))
+          }
+          val outcomes = elems(ProcJson.field(cfg, "outcomes"))
+            .map(o => ProcJson.paramString(o).toDouble)
           engine.distTableIncrement(fn, keys, outcomes)
           """{"incremented": true}"""
         case rt if ex.getRequestMethod == "POST" &&
             rt.endsWith("/routes/persist") =>
           // snapshot the updated table under a new modelFileUrl
           val fn = rt.stripSuffix("/routes/persist")
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          engine.distTablePersist(fn, extractField(body, "modelFileUrl"))
+          engine.distTablePersist(fn,
+            need(ProcJson.params(bodyJson(ex)), "modelFileUrl"))
           """{"persisted": true}"""
         case app if app.endsWith("/application") =>
           // single-row function application
@@ -533,33 +506,34 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         case ("GET", "") =>
           engine.listPlugins.map(jsonStr).mkString("[", ",", "]")
         case ("PUT", name) if !name.contains("/") =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val cfg = bodyJson(ex)
           def create(): Unit =
             // the script toolbox signals compile failures as a bare
-            // Throwable (ToolBoxError), not an Exception — surface as 400.
-            // The reference's config carries `type: "javascript"` and a
-            // source OBJECT ({main: "…"}) — both accepted here
-            // (MLDB-2022's myapi plugin).
+            // Throwable (ToolBoxError, non-fatal), not an Exception —
+            // surface as 400. The reference's config carries `type:
+            // "javascript"` and a source OBJECT ({main: "…"}) — both
+            // accepted here (MLDB-2022's myapi plugin).
             try {
-              val lang = extractFieldOpt(body, "language")
-                .orElse(extractFieldOpt(body, "type")
+              val p = ProcJson.params(cfg)
+              val lang = p("language")
+                .orElse(ProcJson.str(cfg, "type")
                   .filter(t => t == "javascript" || t == "python"))
                 .getOrElse("scala")
-              val source =
-                if (lang == "python")
-                  // python plugins carry `params.source.routes` (the
-                  // per-request route script — MLDB-2114/444)
-                  extractFieldOpt(body, "routes")
-                    .orElse(extractFieldOpt(body, "main"))
-                    .getOrElse(extractField(body, "source"))
-                else extractFieldOpt(body, "main")
-                  .getOrElse(extractField(body, "source"))
+              val source = ProcJson.lookup(cfg)("source") match {
+                // python plugins carry `params.source.routes` (the
+                // per-request route script — MLDB-2114/444)
+                case Some(o: JsObjV) =>
+                  (if (lang == "python") ProcJson.str(o, "routes")
+                    .orElse(ProcJson.str(o, "main"))
+                  else ProcJson.str(o, "main")).getOrElse(
+                    throw new IllegalArgumentException("missing field source"))
+                case _ => need(p, "source")
+              }
               engine.createPlugin(name, source, lang)
             }
             catch {
               case e: IllegalArgumentException => throw e
-              case e: Throwable => throw new IllegalArgumentException(
+              case NonFatal(e) => throw new IllegalArgumentException(
                 s"plugin did not compile: ${e.getMessage}")
             }
           if (isAsync(ex)) {
@@ -627,8 +601,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // params stay ORDERED (the reference's [name, value] pairs —
           // MLDB-444 mirrors them back verbatim)
           val Array(name, route) = routed.split("/routes/", 2)
-          val rawBody = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val rawBody = bodyText(ex)
           val payload =
             if (rawBody.trim.isEmpty) "null\n" else rawBody + "\n"
           engine.pluginRouteFull(name, GraftEngine.PluginReq(
@@ -666,13 +639,11 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           credentials.getOrElse(name, throw new NoSuchElementException(
             s"credentials '$name' doesn't exist"))
         case ("PUT", name) =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val body = bodyText(ex)
           credentials(name) = body
           Created(s"""{"id": ${jsonStr(name)}}""")
         case ("POST", "") =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val body = bodyText(ex)
           val name = "auto_" + java.util.UUID.randomUUID().toString
             .replace("-", "").take(12)
           credentials(name) = body
@@ -718,22 +689,13 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           s"""{"configType": {"typeName": ${jsonStr(pinned.getOrElse(
             RestServer.configTypeName(tpe)))}, "kind": "STRUCTURE"}}"""
         case ("POST", "plugins/javascript/routes/run") =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          runScriptRoute("javascript", body)
+          runScriptRoute("javascript", bodyJson(ex))
         case ("POST", "plugins/python/routes/run") =>
-          val body = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
-          runScriptRoute("python", body)
+          runScriptRoute("python", bodyJson(ex))
         case (m, p) => throw new IllegalArgumentException(
           s"unsupported $m /v1/types/$p")
       }
     })
-    // a config body's param lookup; `__body` carries the raw config
-    // JSON to procedures with NESTED child configs (serial,
-    // permuter.run) that a flat key lookup can't express
-    def bodyParams(body: String): String => Option[String] = k =>
-      if (k == "__body") Some(body) else extractFieldOpt(body, k)
     // generic named/typed procedure handling, shared by the
     // /v1/procedures context and the /v1/procedures/transform
     // context's fallthrough (the JDK HttpServer matches contexts by
@@ -742,7 +704,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     def proceduresGeneric(ex: HttpExchange): String = {
       val path = ex.getRequestURI.getPath.stripPrefix("/v1/procedures")
         .stripPrefix("/")
-      proceduresDispatch(ex, path)
+      proceduresDispatch(ex, path, bodyText(ex))
     }
     server.createContext("/v1/procedures/transform", (ex: HttpExchange) => handle(ex) {
       val raw = ex.getRequestURI.getPath
@@ -750,24 +712,25 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
       if (raw.nonEmpty && !raw.startsWith("/")) proceduresGeneric(ex)
       else {
       val path = raw.stripPrefix("/")
+      // read once: a fallthrough to the named-procedure routes gets it too
+      val body = bodyText(ex)
       (ex.getRequestMethod, path) match {
         // the legacy routes run the `transform` procedure type with
         // the body's inputQuery / outputDataset
         case ("POST", "") =>
-          val body = new String(ex.getRequestBody.readAllBytes, StandardCharsets.UTF_8)
-          engine.runProcedure("transform", bodyParams(body))
+          engine.runProcedure("transform", ProcJson.lookup(ProcJson.body(body)),
+            None)
         case ("POST", "runs") =>
           // a NAMED procedure registered as literally 'transform'
           // (MLDB-409 does exactly this) owns …/transform/runs; the
           // legacy async-run body carries inputQuery and disambiguates
-          val body = new String(ex.getRequestBody.readAllBytes, StandardCharsets.UTF_8)
-          extractFieldOpt(body, "inputQuery") match {
+          val cfg = ProcJson.lookup(ProcJson.body(body))
+          cfg("inputQuery") match {
             case Some(_) =>
-              val id = engine.startProcedureRunAsync("transform",
-                bodyParams(body))
+              val id = engine.startProcedureRunAsync("transform", cfg, None)
               s"""{"runId": ${jsonStr(id)}, "state": "executing"}"""
             case None if procedures.contains("transform") =>
-              proceduresDispatch(ex, "transform/runs")
+              proceduresDispatch(ex, "transform/runs", body)
             case None =>
               throw new IllegalArgumentException("missing field inputQuery")
           }
@@ -778,7 +741,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         // PUT /v1/procedures/transform (a named procedure literally
         // called 'transform') registers like any other name
         case _ => proceduresDispatch(ex, "transform" +
-          (if (path.isEmpty) "" else s"/$path"))
+          (if (path.isEmpty) "" else s"/$path"), body)
       }
       }
     })
@@ -789,15 +752,16 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
       // range at PUT time, MLDB-1043) and POST <name>/runs executes it.
       proceduresGeneric(ex)
     })
-    def proceduresDispatch(ex: HttpExchange, path: String): String = {
-      def readBody(): String = {
-        val body = new String(ex.getRequestBody.readAllBytes,
-          StandardCharsets.UTF_8)
+    def proceduresDispatch(ex: HttpExchange, path: String,
+        body: String): String = {
+      def readConfig(): JsVal = {
         // the reference's message for bodyless PUT/POST (MLDB-1010)
         if (body.trim.isEmpty)
           throw new IllegalArgumentException("empty payload")
-        body
+        ProcJson.body(body)
       }
+      def typeOf(cfg: JsVal): String = ProcJson.str(cfg, "type").getOrElse(
+        throw new IllegalArgumentException("missing field type"))
       def recordRun(name: String, id: String): String = {
         procRuns.updateWith(name) {
           case Some(rs) => Some(rs :+ (id, java.time.Instant.now()))
@@ -805,16 +769,14 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         }
         id
       }
-      def runNamed(name: String, runBody: String): String = {
-        val (tpe, body) = procedures.getOrElse(name,
+      def runNamed(name: String, runBody: JsVal): String = {
+        val (tpe, cfg) = procedures.getOrElse(name,
           throw new NoSuchElementException(s"unknown procedure '$name'"))
         // params in the RUN body override the stored config's
         // (MLDB-894: runs can override conf)
         val started = java.time.Instant.now()
-        val res = engine.runProcedure(tpe, k =>
-          if (k == "__body") Some(body)
-          else if (k == "__id") Some(name)
-          else extractFieldOpt(runBody, k).orElse(extractFieldOpt(body, k)))
+        val res = engine.runProcedure(tpe, ProcJson.lookup(runBody, cfg),
+          Some(name))
         val finished = java.time.Instant.now()
         // run responses carry the lifecycle instants (MLDB-525
         // asserts runStarted <= runFinished on the PUT's json)
@@ -832,28 +794,25 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         case ("POST", "") =>
           // anonymous creation also answers 201 like the reference's
           // PolyCollection POST (MLDBFB-332 asserts it on /v1/procedures)
-          val body = readBody()
-          Created(engine.runProcedure(extractField(body, "type"),
-            bodyParams(body)))
+          val cfg = readConfig()
+          Created(engine.runProcedure(typeOf(cfg), ProcJson.lookup(cfg),
+            ProcJson.str(cfg, "id")))
         case ("PUT", name) if !name.contains("/") =>
-          val body = readBody()
-          val tpe = extractField(body, "type")
+          val cfg = readConfig()
+          val tpe = typeOf(cfg)
           // creation-time config validation (the reference rejects the
           // config itself, before any run). A BROKEN config still
           // registers the entity (MLDB-2112: the failed PUT leaves a
           // GETtable procedure with no runs).
-          procedures(name) = (tpe, body)
-          val paramFn: String => Option[String] = k =>
-            if (k == "__body") Some(body)
-            else if (k == "__id") Some(name)
-            else extractFieldOpt(body, k)
-          engine.validateProcedure(tpe, paramFn)
+          procedures(name) = (tpe, cfg)
+          val params = ProcJson.lookup(cfg)
+          engine.validateProcedure(tpe, params, Some(name))
           // MLDB-951: with runOnCreation the response carries the
           // first run under status.firstRun; without it there is NO
           // status field at all
           val out =
-            if (extractFieldOpt(body, "runOnCreation").exists(_.toBoolean)) {
-              val run = engine.runProcedure(tpe, paramFn)
+            if (ProcJson.params(cfg)("runOnCreation").exists(_.toBoolean)) {
+              val run = engine.runProcedure(tpe, params, Some(name))
               recordRun(name, java.util.UUID.randomUUID().toString.take(8))
               s"""{"id": ${jsonStr(name)}, "status": {"firstRun": $run}}"""
             } else s"""{"id": ${jsonStr(name)}}"""
@@ -916,7 +875,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // MLDB-408: {"state": "cancelled"} interrupts the run and
           // cancels its Spark job group; any other target state is 400
           val runId = statePath.split("/runs/", 2)(1).stripSuffix("/state")
-          val target = extractField(readBody(), "state")
+          val target = need(ProcJson.params(readConfig()), "state")
           if (target != "cancelled") throw new IllegalArgumentException(
             s"cannot set run state to '$target'; only 'cancelled' is " +
               "accepted")
@@ -926,10 +885,9 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           // under that id (MLDB-1359 asserts id '000' round-trips);
           // the run body's params override the config's (MLDB-894)
           val Array(name, runId) = runPath.split("/runs/", 2)
-          val runBody = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val runBody = ProcJson.body(body)
           // a body id contradicting the path id is a 400 (MLDB-326)
-          topLevelId(runBody).foreach { id =>
+          ProcJson.str(runBody, "id").foreach { id =>
             if (id != runId) throw new IllegalArgumentException(
               s"run config id '$id' does not match the PUT path '$runId'")
           }
@@ -970,17 +928,13 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           }
         case ("POST", runPath) if runPath.endsWith("/runs") =>
           val name = runPath.stripSuffix("/runs")
-          val runBody = new String(ex.getRequestBody.readAllBytes,
-            StandardCharsets.UTF_8)
+          val runBody = ProcJson.body(body)
           if (isAsync(ex)) {
             // async run (MLDB-1570): 201 + Location of the run status
-            val (tpe, body) = procedures.getOrElse(name,
+            val (tpe, cfg) = procedures.getOrElse(name,
               throw new NoSuchElementException(s"unknown procedure '$name'"))
-            val id = engine.startProcedureRunAsync(tpe, k =>
-              if (k == "__body") Some(body)
-              else if (k == "__id") Some(name)
-              else extractFieldOpt(runBody, k)
-                .orElse(extractFieldOpt(body, k)))
+            val id = engine.startProcedureRunAsync(tpe,
+              ProcJson.lookup(runBody, cfg), Some(name))
             recordRun(name, id)
             CreatedAt(s"""{"id": ${jsonStr(id)}, "state": "initializing"}""",
               s"/v1/procedures/$name/runs/$id")
@@ -1392,9 +1346,10 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     * is the reference's ScriptOutput: `{result}` on success, 400 with
     * `{exception: {message}}` on compile/run errors (MLDB-980 pins
     * the V8 syntax-error message). */
-  private def runScriptRoute(language: String, body: String): String = {
-    val source = extractFieldOpt(body, "source").getOrElse {
-      val addr = extractFieldOpt(body, "address").getOrElse(
+  private def runScriptRoute(language: String, body: JsVal): String = {
+    val param = ProcJson.params(body)
+    val source = param("source").getOrElse {
+      val addr = param("address").getOrElse(
         throw new IllegalArgumentException(
           "script config needs source or address"))
       if (addr.startsWith("http://") || addr.startsWith("https://"))
@@ -1418,7 +1373,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         val program =
           try graft.js.JsInterp.compile(source)
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               val m = String.valueOf(e.getMessage)
               exceptionJson(
                 if (m.contains("unterminated string") ||
@@ -1431,7 +1386,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
             Map.empty, engine = engine, precompiled = Some(program))
           catch {
             case w: WithStatusResponse => throw w
-            case e: Throwable =>
+            case NonFatal(e) =>
               exceptionJson(String.valueOf(e.getMessage))
           }
         s"""{"result": ${JsHost.resultJson(result)}}"""
@@ -1474,8 +1429,8 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
               String.valueOf(e.getMessage))}}}}""")
         case e: IllegalArgumentException => (400, errJson(e, 400))
         case e: NoSuchElementException => (404, errJson(e, 404))
-        // Throwable, not Exception: a handler error that escapes here
-        // (e.g. a scripting ToolBoxError) would otherwise close the
+        // the last resort stays Throwable, not NonFatal: any error that
+        // escapes here, fatal ones included, would otherwise close the
         // connection with no response at all
         case e: Throwable => (500, errJson(e, 500))
       }
@@ -1524,105 +1479,96 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     }
   }
 
-  /** extract "field": "value" (with escaped quotes) from a flat JSON body. */
+  private def bodyText(ex: HttpExchange): String =
+    new String(ex.getRequestBody.readAllBytes, StandardCharsets.UTF_8)
+
+  /** The request body, parsed once (`ProcJson.body`): routes read
+    * their config from this tree, never from the raw text. */
+  private def bodyJson(ex: HttpExchange): JsVal = ProcJson.body(bodyText(ex))
+
+  /** A required param of a parsed config. */
+  private def need(param: String => Option[String], k: String): String =
+    param(k).getOrElse(throw new IllegalArgumentException(s"missing field $k"))
+
+  private def elems(v: Option[JsVal]): Seq[JsVal] = v match {
+    case Some(a: JsArrV) => a.elems.toSeq
+    case _ => Seq.empty
+  }
+
+  /** The rows of a record body: a bare object is one row. */
+  private def rowObjects(body: JsVal): Seq[JsVal] = body match {
+    case o: JsObjV => Seq(o)
+    case a: JsArrV => a.elems.toSeq
+    case _ => Seq.empty
+  }
+
+  /** The reference's columns form, `{rowName, columns: [[col, value,
+    * ts], …]}` or an array of such rows, told apart from flat rows by
+    * its shape: a flat row may have a column named `columns`. */
+  private def isColumnsForm(body: JsVal): Boolean = {
+    val rows = rowObjects(body)
+    rows.nonEmpty && rows.forall(r => ProcJson.field(r, "columns") match {
+      case Some(a: JsArrV) => a.elems.forall(_.isInstanceOf[JsArrV])
+      case _ => false
+    })
+  }
+
+  /** A recorded cell's value as JSON. Typed-object cells (MLDB-986's
+    * {"num": "NaN"} / {"num": "Inf"} / {"ts": …} forms): non-finite
+    * numbers emit as bare NaN/Infinity tokens (the JSON reader accepts
+    * them via allowNonNumericNumbers); other typed wrappers record
+    * their inner value. */
+  private def cellValue(v: JsVal): String = v match {
+    case o: JsObjV =>
+      Seq("num", "ts", "interval").iterator
+        .flatMap(k => ProcJson.field(o, k).map(k -> _)).nextOption() match {
+        case Some(("num", graft.js.JsInterp.JsStr(n))) => n match {
+          case "NaN" => "NaN"
+          case "Inf" | "Infinity" => "Infinity"
+          case "-Inf" | "-Infinity" => "-Infinity"
+          case other => other
+        }
+        case Some((_, inner)) => ProcJson.stringify(inner)
+        case None => "null"
+      }
+    case other => ProcJson.stringify(other)
+  }
+
+  /** `[[rowName, value, ts], …]` cells of ONE column → flat row JSON
+    * (`{"rowName": rn, "<col>": value}` per cell) for
+    * recordColumnsJson. */
+  private def columnCellsToFlat(colName: String, cells: Seq[JsVal]): String = {
+    val rows = cells.collect { case c: JsArrV if c.elems.size >= 2 =>
+      s"""{"rowName":${jsonStr(ProcJson.paramString(c.elems(0)))},""" +
+        s"""${jsonStr(colName)}:${cellValue(c.elems(1))}}"""
+    }
+    require(rows.nonEmpty, "no cells in rows body")
+    rows.mkString("[", ",", "]")
+  }
+
   /** The reference's row-recording body shape → flat row objects:
     * `{"rowName": "r", "columns": [["score", 5, 6], …]}` becomes
     * `{"rowName": "r", "score": 5, "ts": "1970-01-01T00:00:06Z"}`.
     * Numeric cell timestamps are epoch SECONDS (the reference's
     * convention); the row keeps the max of its cells' timestamps as
     * its single wide-mode ts. */
-  /** The TOP-LEVEL `"id"` field of a JSON object, ignoring nested
-    * objects (string-aware depth scan). */
-  private def topLevelId(body: String): Option[String] = {
-    var depth = 0; var inStr = false; var esc = false; var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' =>
-          if (depth == 1 && body.startsWith("\"id\"", i)) {
-            val m = "\"id\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-              .findFirstMatchIn(body.substring(i))
-            if (m.exists(_.start == 0)) return m.map(_.group(1))
-          }
-          inStr = true
-        case '{' | '[' => depth += 1
-        case '}' | ']' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** `[[rowName, value, ts], …]` cells of ONE column → flat row JSON
-    * (`{"rowName": rn, "<col>": value}` per cell) for
-    * recordColumnsJson. */
-  private def columnCellsToFlat(colName: String, cellsBody: String): String = {
-    val cellRe = ("\\[\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-      "(\"(?:[^\"\\\\]|\\\\.)*\"|-?[0-9.eE+]+|true|false|null)" +
-      "(?:\\s*,\\s*(\"[^\"]*\"|-?[0-9.eE+]+))?\\s*\\]").r
-    val rows = cellRe.findAllMatchIn(cellsBody).map { m =>
-      s"""{"rowName":${jsonStr(m.group(1))},${jsonStr(colName)}:${m.group(2)}}"""
-    }.toSeq
-    require(rows.nonEmpty, "no cells in rows body")
-    rows.mkString("[", ",", "]")
-  }
-
-  private def columnsFormToFlat(body: String,
-      quantum: Double = 1.0): String = {
-    // rowName and columns are matched INDEPENDENTLY within each
-    // top-level row object — JSON key order is insignificant, so
-    // {"columns": […], "rowName": "r"} must work too.
-    val nameRe = "\"rowName\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-    val cellRe = ("\\[\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-      "(\\{[^{}]*\\}|\"(?:[^\"\\\\]|\\\\.)*\"|-?[0-9.eE+]+|true|false|null)" +
-      "(?:\\s*,\\s*(\"[^\"]*\"|-?[0-9.eE+]+))?\\s*\\]").r
-    // typed-object cell values (MLDB-986's {"num": "NaN"} /
-    // {"num": "Inf"} / {"ts": …} forms): non-finite numbers emit as
-    // bare NaN/Infinity tokens (the JSON reader accepts them via
-    // allowNonNumericNumbers); other typed wrappers record their
-    // inner value
-    def cellValue(raw: String): String =
-      if (!raw.startsWith("{")) raw
-      else {
-        val inner = "\"(num|ts|interval)\"\\s*:\\s*(\"[^\"]*\"|-?[0-9.eE+]+)"
-          .r.findFirstMatchIn(raw)
-        inner match {
-          case Some(m) =>
-            val v = m.group(2)
-            val s = if (v.startsWith("\"")) v.substring(1, v.length - 1) else v
-            (m.group(1), s) match {
-              case ("num", "NaN") => "NaN"
-              case ("num", "Inf" | "Infinity") => "Infinity"
-              case ("num", "-Inf" | "-Infinity") => "-Infinity"
-              case ("num", n) => n
-              case _ => v
-            }
-          case None => "null"
-        }
-      }
-    def tsInstant(raw: String): Option[java.time.Instant] =
-      if (raw == null) None
-      else if (raw.startsWith("\"")) {
-        GraftEngine.lenientInstant(raw.substring(1, raw.length - 1))
-      } else {
-        val secs = raw.toDouble
+  private def columnsFormToFlat(body: JsVal, quantum: Double): String = {
+    import graft.js.JsInterp.{JsNum, JsStr}
+    def tsInstant(v: Option[JsVal]): Option[java.time.Instant] = v match {
+      case Some(JsStr(t)) => GraftEngine.lenientInstant(t)
+      case Some(JsNum(secs)) =>
         Some(java.time.Instant.ofEpochMilli((secs * 1000).toLong))
-      }
-    val rows = jsonTopLevelObjects(body).flatMap { rt =>
-      for {
-        nm <- nameRe.findFirstMatchIn(rt)
-        colsBody <- jsonBracketValue(rt, "columns")
-      } yield {
-        val cells = cellRe.findAllMatchIn(colsBody).map { c =>
-          // record-time quantization (Date::quantize — MLDB-987)
-          (c.group(1), cellValue(c.group(2)), tsInstant(c.group(3))
-            .map(GraftEngine.quantizeInstant(_, quantum)))
-        }.toSeq
+      case _ => None
+    }
+    val rows = rowObjects(body).flatMap { r =>
+      ProcJson.field(r, "rowName").map { rn =>
+        val cells = elems(ProcJson.field(r, "columns")).collect {
+          case c: JsArrV if c.elems.size >= 2 =>
+            // record-time quantization (Date::quantize — MLDB-987)
+            (ProcJson.paramString(c.elems(0)), cellValue(c.elems(1)),
+              tsInstant(c.elems.lift(2))
+                .map(GraftEngine.quantizeInstant(_, quantum)))
+        }
         val maxTs = cells.flatMap(_._3)
           .reduceOption((a, b) => if (a.isAfter(b)) a else b)
           .map(i => jsonStr(GraftEngine.isoMinimal(i)))
@@ -1630,7 +1576,7 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
         // mode's implicit row-ts column yields rather than duplicate
         // the name (MLDBFB-320's `SELECT ds.ts`)
         val hasUserTs = cells.exists(_._1 == "ts")
-        val fields = Seq(s""""rowName":${jsonStr(nm.group(1))}""") ++
+        val fields = Seq(s""""rowName":${jsonStr(ProcJson.paramString(rn))}""") ++
           cells.map { case (c, v, _) => s"${jsonStr(c)}:$v" } ++
           (if (hasUserTs) None else maxTs.map(t => s""""ts":$t"""))
         fields.mkString("{", ",", "}")
@@ -1638,102 +1584,6 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
     }
     require(rows.nonEmpty, "no rows in body")
     rows.mkString("[", ",", "]")
-  }
-
-  /** Top-level `{…}` objects of a JSON text (string-aware brace scan);
-    * a bare `{…}` body yields itself, an array body its elements. */
-  private def jsonTopLevelObjects(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var start = -1
-    var inStr = false; var esc = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) start = i; depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0 && start >= 0) { out += s.substring(start, i + 1) }
-        case _ =>
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  /** Inner text of the bracket-balanced `"field": [ … ]` value within
-    * a JSON object text, tolerant of nested arrays and strings. */
-  private def jsonBracketValue(s: String, field: String): Option[String] = {
-    ("\"" + field + "\"\\s*:\\s*\\[").r.findFirstMatchIn(s).flatMap { m =>
-      val open = m.end - 1
-      var depth = 0; var inStr = false; var esc = false; var i = open
-      var close = -1
-      while (close < 0 && i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) {
-          if (esc) esc = false
-          else if (c == '\\') esc = true
-          else if (c == '"') inStr = false
-        } else c match {
-          case '"' => inStr = true
-          case '[' => depth += 1
-          case ']' =>
-            depth -= 1
-            if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
-      if (close < 0) None else Some(s.substring(open + 1, close))
-    }
-  }
-
-  private def extractField(body: String, field: String): String =
-    extractFieldOpt(body, field).getOrElse(
-      throw new IllegalArgumentException(s"missing field $field"))
-
-  private def extractFieldOpt(body: String, field: String): Option[String] = {
-    val re = ("\"" + field + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    re.findFirstMatchIn(body).map(_.group(1)
-        .replace("\\n", "\n").replace("\\\"", "\"").replace("\\\\", "\\"))
-      .orElse { // numeric / boolean scalar: "rows": 10
-        val scal = ("\"" + field + "\"\\s*:\\s*(-?[0-9.eE+]+|true|false)").r
-        scal.findFirstMatchIn(body).map(_.group(1))
-      }
-      .orElse { // {"id": "x"} object form: "dataset": {"id": "toy"}
-        val obj = ("\"" + field +
-          "\"\\s*:\\s*\\{[^}]*\"id\"\\s*:\\s*\"([^\"]+)\"").r
-        obj.findFirstMatchIn(body).map(_.group(1))
-      }
-      .orElse { // array form. A NESTED array/object payload (outcomes
-        // [["label", expr], …], datasetFolds [{…}, …]) passes through
-        // as raw balanced JSON for the receiver to parse; a flat array
-        // flattens to the comma list ("aggregators": ["avg","max"] →
-        // avg,max), with {"id": …} elements contributing their ids.
-        jsonBracketValue(body, field).map { inner =>
-          if (inner.contains('[') ||
-              (inner.contains('{') &&
-                !"\"id\"\\s*:".r.findFirstIn(inner).isDefined))
-            s"[$inner]"
-          else {
-            val ids = "\"id\"\\s*:\\s*\"([^\"]+)\"".r
-              .findAllMatchIn(inner).map(_.group(1)).toSeq
-            if (ids.nonEmpty) ids.mkString(",")
-            else "\"([^\"]*)\"".r.findAllMatchIn(inner)
-              .map(_.group(1)).mkString(",")
-          }
-        }
-      }
-      .orElse { // object WITHOUT an id → raw JSON text, for params the
-        // receiver parses itself (bucketize's percentileBuckets
-        // {name: [lo, hi], …} — no nested objects there)
-        val obj = ("\"" + field + "\"\\s*:\\s*(\\{[^{}]*\\})").r
-        obj.findFirstMatchIn(body).map(_.group(1))
-      }
   }
 }
 

@@ -24,10 +24,12 @@ class EngineSpec extends AnyFunSuite {
     e.createDatasetFromParquet("nation", s"$sf/nation.parquet")
     e.createDatasetFromParquet("region", s"$sf/region.parquet")
     assert(e.listDatasets === Seq("nation", "region"))
-    val out = e.runTransform(
-      """SELECT r_name, count(*) AS n
+    e.runProcedure("transform", Map(
+      "inputQuery" -> """SELECT r_name, count(*) AS n
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin, "per_region")
+        |GROUP BY r_name""".stripMargin,
+      "outputDataset" -> "per_region").get _)
+    val out = e.dataset("per_region")
     assert(out.count() === 5)
     assert(e.dataset("per_region").count() === 5)
     // chained query over the transform output
@@ -172,5 +174,25 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("NAMED_COLUMNS result") &&
       ex.getMessage.contains("exceeds"))
+  }
+
+  test("an async run interrupted by cancelRun records cancelled and its finish") {
+    val e = new GraftEngine(spark)
+    val src = "(spark: org.apache.spark.sql.SparkSession, " +
+      "args: Map[String, Any]) => { Thread.sleep(60000L); 1 }"
+    // compiled up front, so the run reaches the sleep at once
+    graft.api.Scripting.compile(src)
+    val cfg = api.ProcJson.parse(
+      s"""{"language": "scala", "source": ${graft.api.PyBridge.jstr(src)}}""")
+    val id = e.startProcedureRunAsync("script.run", api.ProcJson.lookup(cfg),
+      None)
+    Thread.sleep(1000)
+    assert(e.cancelRun(id) === "cancelled")
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (e.runStatus(id).finished.isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val run = e.runStatus(id)
+    assert(run.finished.isDefined, "the interrupted run never recorded its finish")
+    assert(run.state === "cancelled" && run.error.isEmpty)
   }
 }

@@ -124,7 +124,7 @@ class ReferenceParitySpec18 extends AnyFunSuite {
 
   test("MLDB-804: an empty classifier.test config 400s with the reference message") {
     val ex = intercept[IllegalArgumentException](
-      e.validateProcedure("classifier.test", _ => None))
+      e.validateProcedure("classifier.test", _ => None, None))
     assert(ex.getMessage.contains("classifier.test expects a scalar " +
       "named 'score' and a scalar named 'label'"), ex.getMessage)
   }

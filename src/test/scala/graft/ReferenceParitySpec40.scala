@@ -250,9 +250,9 @@ class ReferenceParitySpec40 extends AnyFunSuite {
     assert(e.dataset("step2_out").select("z").collect()
       .map(_.getLong(0)).sorted === Array(3L, 5L))
     // a null step runs fine inside serial (the reference's smoke step)
-    val rez = e.runProcedure("serial", Map(
-      "__body" -> """{"type":"serial","params":{"steps":[
-        |{"type":"null"},{"type":"null"}]}}""".stripMargin).get _)
+    val rez = e.runProcedure("serial", api.ProcJson.lookup(api.ProcJson.parse(
+      """{"type":"serial","params":{"steps":[
+        |{"type":"null"},{"type":"null"}]}}""".stripMargin)), None)
     assert("\"status\": \"done\"".r.findAllIn(rez).size === 2, rez)
   }
 

@@ -276,8 +276,10 @@ class ReferenceParitySpec8 extends AnyFunSuite {
       """[{"rowName":"elem1","title":"patate where when poire when"},
          |{"rowName":"elem2","title":"allo where what he a allo"}]"""
         .stripMargin)
-    e.runTransform("select tokenize(title, {splitChars:' ', " +
-      "quoteChar:'', minTokenLength: 2}) as * from toy1030", "bow1030")
+    e.runProcedure("transform", Map(
+      "inputQuery" -> ("select tokenize(title, {splitChars:' ', " +
+        "quoteChar:'', minTokenLength: 2}) as * from toy1030"),
+      "outputDataset" -> "bow1030").get _)
     val r = q("select filter_stopwords({words: {*}})[words] as w " +
       "from bow1030 order by rowName() ASC")
     val rows = r.collect()
@@ -320,8 +322,9 @@ class ReferenceParitySpec8 extends AnyFunSuite {
 
   test("MLDB-788: rowName() selected into a transform re-reads cleanly") {
     e.recordRows("ds788", """[{"rowName":"row_0","x":0}]""")
-    e.runTransform(
-      "SELECT x, 1 as y, rowName() as rowname FROM ds788", "ds788out")
+    e.runProcedure("transform", Map(
+      "inputQuery" -> "SELECT x, 1 as y, rowName() as rowname FROM ds788",
+      "outputDataset" -> "ds788out").get _)
     val r = q("select x, y, rowname from ds788out").head()
     assert(r.getLong(0) === 0L)
     assert(r.get(1).toString === "1")
@@ -430,7 +433,8 @@ class ReferenceParitySpec8 extends AnyFunSuite {
   test("MLDB-2064: transform over row_dataset with a quoted space name") {
     val query2064 = "SELECT * FROM row_dataset({\"My Value\": 1})"
     val good = q(query2064).collect().map(_.toSeq).toSeq
-    e.runTransform(query2064, "keywords2064")
+    e.runProcedure("transform", Map("inputQuery" -> query2064,
+      "outputDataset" -> "keywords2064").get _)
     val back = q("select * from keywords2064").collect().map(_.toSeq).toSeq
     assert(back === good)
     assert(good.head.contains("My Value"))
