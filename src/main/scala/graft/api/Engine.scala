@@ -4618,6 +4618,18 @@ private[graft] object ProcJson {
   def stringify(v: JsVal): String =
     JsInterp.jsonStringify(v).getOrElse("null")
 
+  /** A recorded cell as JSON text. A number whose literal had a
+    * fraction or an exponent stays a decimal (`5.0`, not `5`), so the
+    * column it lands in reads as a double. */
+  def cell(v: JsVal): String = {
+    val s = stringify(v)
+    v match {
+      case n: JsNum if n.decimal && s.forall(c => c == '-' || c.isDigit) =>
+        s + ".0"
+      case _ => s
+    }
+  }
+
   /** Param `k` of the first config that sets it, reading `params.k`,
     * else the top-level `k`. Earlier configs win (a run body's over
     * its stored config's); a JSON null is unset. */

@@ -114,12 +114,11 @@ object JsHost {
           .getOrElse(""), ProcJson.params(cfgObj))
         val buffered =
           mutable.ArrayBuffer.empty[(String, Seq[(String, JsVal)])]
-        def cellJson(v: JsVal): String = jsonStringify(v).getOrElse("null")
         def flush(): Unit = {
           if (buffered.nonEmpty) {
             val json = buffered.map { case (rn, cells) =>
-              (Seq("\"rowName\": " + cellJson(JsStr(rn))) ++ cells.map {
-                case (c, v) => cellJson(JsStr(c)) + ": " + cellJson(v)
+              (Seq("\"rowName\": " + ProcJson.cell(JsStr(rn))) ++ cells.map {
+                case (c, v) => ProcJson.cell(JsStr(c)) + ": " + ProcJson.cell(v)
               }).mkString("{", ", ", "}")
             }.mkString("[", ",", "]")
             engine.recordRows(id, json)

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** `script.run {language: "python"}` — out-of-process Python, the
@@ -235,8 +236,10 @@ del _GraftMldb
                 s"""{"error": ${jstr(s"mldb.query returned more than $maxQueryRows rows; add a LIMIT or aggregate before collecting into the script")}}"""
               else rows.mkString("{\"rows\": [", ", ", "]}")
             } catch {
-              case e: Throwable =>
-                s"""{"error": ${jstr(String.valueOf(e.getMessage))}}"""
+              // the script sees why its query failed; a message-less
+              // error still names its class
+              case NonFatal(e) =>
+                s"""{"error": ${jstr(Option(e.getMessage).getOrElse(e.toString))}}"""
             }
           out.write(resp)
           out.write("\n")
@@ -244,7 +247,7 @@ del _GraftMldb
           line = in.readLine()
         }
         sock.close()
-      } catch { case _: Throwable => () /* child exited without connecting */ }
+      } catch { case NonFatal(_) => () /* child exited without connecting */ }
     })
     t.setDaemon(true)
     t.start()

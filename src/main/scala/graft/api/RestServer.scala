@@ -1528,10 +1528,10 @@ final class RestServer(engine: GraftEngine, port: Int = 0) {
           case "-Inf" | "-Infinity" => "-Infinity"
           case other => other
         }
-        case Some((_, inner)) => ProcJson.stringify(inner)
+        case Some((_, inner)) => ProcJson.cell(inner)
         case None => "null"
       }
-    case other => ProcJson.stringify(other)
+    case other => ProcJson.cell(other)
   }
 
   /** `[[rowName, value, ts], …]` cells of ONE column → flat row JSON

@@ -14,7 +14,7 @@ package graft.js
 object JsAst {
 
   sealed trait Expr
-  final case class NumE(v: Double) extends Expr
+  final case class NumE(v: Double, decimal: Boolean) extends Expr
   final case class StrE(v: String) extends Expr
   final case class BoolE(v: Boolean) extends Expr
   case object NullE extends Expr
@@ -529,7 +529,7 @@ object JsAst {
         val v = if (t.text.startsWith("0x") || t.text.startsWith("0X"))
           java.lang.Long.parseLong(t.text.substring(2), 16).toDouble
         else t.text.toDouble
-        NumE(v)
+        NumE(v, JsInterp.JsNum.decimal(t.text))
       }
       else if (t.kind == "str") { advance(); StrE(t.text) }
       else if (t.kind == "regex") {

@@ -37,7 +37,25 @@ object JsInterp {
   case object JsUndef extends JsVal
   case object JsNull extends JsVal
   final case class JsBool(b: Boolean) extends JsVal
-  final case class JsNum(v: Double) extends JsVal
+  /** A number. `decimal` records that its literal was written with a
+    * fraction or an exponent (`5.0`, `5e0`), which a recorded cell keeps
+    * ([[graft.api.ProcJson.cell]]); equality ignores it. */
+  final class JsNum(val v: Double, val decimal: Boolean) extends JsVal {
+    override def equals(o: Any): Boolean = o match {
+      case n: JsNum => v == n.v
+      case _ => false
+    }
+    override def hashCode: Int = v.##
+    override def toString: String = s"JsNum($v)"
+  }
+  object JsNum {
+    def apply(v: Double): JsNum = new JsNum(v, false)
+    def unapply(n: JsNum): Some[Double] = Some(n.v)
+    /** Whether a number literal's text has a fraction or an exponent. */
+    def decimal(text: String): Boolean =
+      !text.startsWith("0x") && !text.startsWith("0X") &&
+        text.exists(c => c == '.' || c == 'e' || c == 'E')
+  }
   final case class JsStr(s: String) extends JsVal
   final class JsObjV(val fields: mutable.LinkedHashMap[String, JsVal])
       extends JsVal {
@@ -432,7 +450,7 @@ object JsInterp {
     // ----------------------------------------------------- expressions
 
     def eval(e: Expr, env: Env): JsVal = { tick(); e match {
-      case NumE(v) => JsNum(v)
+      case NumE(v, decimal) => new JsNum(v, decimal)
       case StrE(v) => JsStr(v)
       case BoolE(v) => JsBool(v)
       case NullE => JsNull
@@ -1361,7 +1379,8 @@ object JsInterp {
           val start = i
           if (s.charAt(i) == '-') i += 1
           while (i < s.length && (s.charAt(i).isDigit || "+-.eE".indexOf(s.charAt(i)) >= 0)) i += 1
-          try JsNum(s.substring(start, i).toDouble)
+          val text = s.substring(start, i)
+          try new JsNum(text.toDouble, JsNum.decimal(text))
           catch { case _: NumberFormatException => fail() }
         case _ => fail()
       }

@@ -522,20 +522,21 @@ object Procedures {
     * most-frequent items and distinct counts, (3) the same for the
     * categorical columns' most-frequent items.
     *
-    * Pass 2's table is pinned range-partitioned by (c, v) and sorted
-    * within each partition ([[SummaryCounts.pinSorted]]); then two jobs
-    * read it ([[SummaryCounts.numeric]]): one digest of every
-    * (partition, column) — count total, row count, local top-10 — and
-    * one walk over only the partitions where a quartile crosses. Pass
-    * 3 takes its top-10 from the same digest over its grouped table. No
-    * window is keyed by the column name, so no task ever holds a
-    * continuous column's whole value set, and every driver collect is
-    * partitions × columns rows of at most 10 items.
+    * Pass 2's table is the plain hash `groupBy(c, v)`
+    * ([[SummaryCounts.countTable]]), read twice
+    * ([[SummaryCounts.numeric]]): one digest job — per column the count
+    * total, row count, top-10 and a histogram of at most 4,096 buckets
+    * between pass 1's min and max — and one job that collects the rows
+    * of only the buckets where a quartile crosses. Pass 3 takes its
+    * top-10 from the same digest over its grouped table. No window is
+    * keyed by the column name, so no task ever holds a continuous
+    * column's whole value set, and every driver collect is bounded by
+    * the column count.
     *
-    * Pass 1 overlaps the statically-numeric count table's pin, on a
-    * thread that carries the caller's local properties
-    * ([[graft.core.DfOps.inBackground]]), so its jobs stay in the
-    * caller's job group.
+    * The statically-numeric count table's shuffle map stage starts on
+    * the calling thread while pass 1 runs on a thread that carries the
+    * caller's local properties ([[graft.core.DfOps.inBackground]]), so
+    * its jobs stay in the caller's job group.
     *
     * Numeric/categorical per the reference's probe: a column is
     * numeric when it has ≥1 non-null value and every non-null value
@@ -620,15 +621,16 @@ object Procedures {
         .filter(col("v").isNotNull)
     // Overlap the two big scans (guide §2.6 — concurrent independent
     // jobs back-fill each other's stragglers): pass 1 runs in the
-    // background while the statically-numeric count table is pinned.
+    // background while the statically-numeric count table's shuffle
+    // map stage runs.
     // The static table is correct regardless of pass 1's outcome — an
     // all-null static column just contributes zero rows.
     val rowF = graft.core.DfOps.inBackground(df.sparkSession) {
       df.agg(aggs.head, aggs.tail: _*).head()
     }
-    val staticSorted: Option[DataFrame] =
+    val staticCounts: Option[DataFrame] =
       if (cols.exists(staticNumeric))
-        Some(SummaryCounts.pinSorted(melted(cols.filter(staticNumeric), numExpr)))
+        Some(SummaryCounts.countTable(melted(cols.filter(staticNumeric), numExpr)))
       else None
     val row = rowF()
     val total = row.getAs[Long]("__total")
@@ -647,12 +649,13 @@ object Procedures {
         // the pre-built static table covers every numeric column unless
         // a STRING column turned out numeric-in-content — only then pay
         // a second (sequential) melt over the full numeric set
-        val sorted =
-          if (numericCols.forall(staticNumeric) && staticSorted.nonEmpty)
-            staticSorted.get
-          else SummaryCounts.pinSorted(melted(numericCols, numExpr))
-        SummaryCounts.numeric(sorted,
-          numericCols.map(c => c -> g[Long](c, "nNotNull")).toMap)
+        val counts =
+          if (numericCols.forall(staticNumeric) && staticCounts.nonEmpty)
+            staticCounts.get
+          else SummaryCounts.countTable(melted(numericCols, numExpr))
+        SummaryCounts.numeric(counts, numericCols.map(c =>
+          c -> SummaryCounts.Extent(g[Long](c, "nNotNull"),
+            g[java.lang.Double](c, "min"), g[java.lang.Double](c, "max"))).toMap)
       }
     // pass 3: categorical count table → most frequent; each (c, v)
     // lies whole in one of the groupBy's partitions, which is all the
@@ -660,13 +663,9 @@ object Procedures {
     val catTops: Map[String, Seq[(String, Long)]] =
       if (catCols.isEmpty) Map.empty
       else {
-        val grouped = melted(catCols, strExpr).groupBy(col("c"), col("v"))
-          .agg(count(lit(1)).as("cnt"))
-        SummaryCounts.topOf(
-          SummaryCounts.digest(grouped, SummaryCounts.Strings),
-          SummaryCounts.Strings).map { case (c, top) =>
-            c -> top.map { case (v, n) => v.toString -> n }
-          }
+        SummaryCounts.digest(SummaryCounts.countTable(melted(catCols, strExpr)),
+          SummaryCounts.Strings, Map.empty)
+          .map { case (c, d) => c -> d.top.map { case (v, n) => v.toString -> n } }
       }
     // derive-eligible types: the count table's row count (an all-null
     // column melts to zero rows → 0, matching countDistinct), plus one

@@ -161,10 +161,11 @@ object ProcedureQueries {
     // high-cardinality numeric column (the reference rule: first
     // ascending value whose cumulative count strictly exceeds nn·t;
     // top-10 by count desc, value desc). This pins the scale-safe
-    // shape — range-partitioned prefix sums + salted two-stage top-k,
-    // #columns-bounded collects — against a DuckDB recomputation. No
-    // rounding: every output value is a raw data value or an integer
-    // count, so both engines hash bit-identical doubles. ---
+    // shape — one hash-grouped count table read twice, per-column
+    // histograms, #columns-bounded collects — against a DuckDB
+    // recomputation. No rounding: every output value is a raw data
+    // value or an integer count, so both engines hash bit-identical
+    // doubles. ---
     QueryDef("q126_summary_quartiles",
       """WITH counts AS (
         |  SELECT 'l_extendedprice' AS c, l_extendedprice AS v, count(*) AS cnt

@@ -378,8 +378,10 @@ object Postgres {
     }
 
     def close(): Unit = {
+      // Terminate is a courtesy: a server that already closed the
+      // connection has nothing left to tell
       try { out.writeByte('X'); out.writeInt(4); out.flush() }
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
       sock.close()
     }
   }

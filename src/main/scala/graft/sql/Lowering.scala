@@ -114,14 +114,16 @@ object Lowering {
     scope.frames.iterator.flatMap { case (a, df) =>
       try Some(df.select(c).schema.head.dataType)
       catch {
-        case _: Throwable =>
+        // a column this frame cannot resolve fails analysis: try the
+        // next reading, and report no type if none resolves
+        case scala.util.control.NonFatal(_) =>
           // alias-qualified references (`alias`.`col` from star
           // expansion) need the frame's alias re-attached — a frame
           // that went through filter/projection rebuilds may have
           // dropped its SubqueryAlias (the MLDB-961 agg-context probe)
           a.flatMap { al =>
             try Some(df.as(al).select(c).schema.head.dataType)
-            catch { case _: Throwable => None }
+            catch { case scala.util.control.NonFatal(_) => None }
           }
       }
     }.nextOption()

@@ -394,18 +394,19 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("summary count-table pass equals brute force: quartiles, top-10 " +
-      "and num_unique, with NaN, ±0.0, nulls, ties and placed partitions") {
+      "and num_unique, with NaN, ±0.0, ±Infinity, nulls, ties and " +
+      "narrowing rounds") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     import org.apache.spark.sql.types._
     import graft.procedures.{Procedures, SummaryCounts}
-    // the generator the salted top-k property used: five columns,
-    // values from a small pool (ties on both count and value), counts
-    // 1–50 — now with NaN and both zero signs in the pool, plus a
-    // single-value column
+    // five columns, values from a small pool (ties on both count and
+    // value), counts 1–50, with NaN, both zero signs and both
+    // infinities in the pool, plus a single-value column (min = max)
     def countTable(seed: Int): Seq[(String, Double, Long)] = {
       val rnd = new scala.util.Random(seed)
-      val pool = Seq(Double.NaN, -0.0, 0.0) ++ (1 to 40).map(_.toDouble)
+      val pool = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+        Double.NegativeInfinity) ++ (1 to 40).map(_.toDouble)
       val rows = (0 until 300).map { _ =>
         ("c" + rnd.nextInt(5), pool(rnd.nextInt(pool.size)),
           (1 + rnd.nextInt(50)).toLong)
@@ -428,44 +429,44 @@ class PropertySpec extends AnyFunSuite {
     def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
     val schema = StructType(Seq(StructField("c", StringType),
       StructField("v", DoubleType), StructField("cnt", LongType)))
+    // a cap this small makes every crossing bucket of 3+ rows narrow
+    val smallCap = 2
     var crossingAtFirstRow = 0
-    var wholeColumnParts = 0
+    var narrowed = 0
     forSamples(Gen.choose(0, 1 << 20), 6) { seed =>
       val table = countTable(seed)
       val byCol = table.groupBy(_._1)
-      // 1. the pass itself, over a sorted table cut into partitions at
-      //    chosen rows: random cuts, none inside c1 (which then lies in
-      //    one partition), and a cut AT c0's median crossing row
-      val sorted = table.sortWith((a, b) => a._1 < b._1 ||
-        (a._1 == b._1 && compareDoubles(a._2, b._2) < 0))
+      // 1. the passes themselves, over the table shuffled into four
+      //    partitions, at the default cap and at the small one
       val rnd = new scala.util.Random(seed)
-      val c0 = sorted.indices.filter(sorted(_)._1 == "c0")
-      val c0Cum = c0.map(sorted(_)._3).scanLeft(0L)(_ + _).tail
-      val median = c0(c0Cum.indexWhere(_ > c0Cum.last * 0.5))
-      val c1 = sorted.indices.filter(sorted(_)._1 == "c1")
-      val cuts = ((Seq.fill(5)(1 + rnd.nextInt(sorted.size - 1)) :+ median)
-        .filterNot(i => i > c1.head && i <= c1.last) :+ 0 :+ sorted.size)
-        .distinct.sorted
-      val parts = cuts.sliding(2).map { case Seq(a, b) =>
-        sorted.slice(a, b).map { case (c, v, n) => Row(c, v, n) } }.toSeq
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(parts, parts.size).flatMap(identity),
-        schema)
-      val nn = byCol.map { case (c, rs) => c -> rs.map(_._3).sum }
-      val ds = SummaryCounts.digest(df, SummaryCounts.Doubles)
-      val cross = SummaryCounts.crossings(ds, nn)
-      if (cross.exists { case (pid, m) =>
-          cuts(pid) == median && m.get("c0").exists(_._2.exists(_._1 == 1)) })
-        crossingAtFirstRow += 1
-      if (ds.count(_.column == "c1") == 1) wholeColumnParts += 1
-      val got = SummaryCounts.numeric(df, nn)
-      byCol.foreach { case (c, rs) =>
-        val (qs, top) = brute(rs.map(r => (r._2, r._3)))
-        assert(bits(got(c).quartiles) === bits(qs), s"seed=$seed $c quartiles")
-        assert(got(c).top.map(_._2) === top.map(_._2), s"seed=$seed $c top")
-        assert(bits(got(c).top.map(_._1)) === bits(top.map(_._1)),
-          s"seed=$seed $c top items")
-        assert(got(c).unique === rs.size.toLong, s"seed=$seed $c unique")
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rnd.shuffle(table).map { case (c, v, n) => Row(c, v, n) }, 4), schema)
+      val extents = byCol.map { case (c, rs) =>
+        val asc = rs.map(_._2).sortWith(compareDoubles(_, _) < 0)
+        c -> SummaryCounts.Extent(rs.map(_._3).sum, asc.head, asc.last)
+      }
+      val nn = extents.map { case (c, e) => c -> e.nn }
+      val ds = SummaryCounts.digest(df, SummaryCounts.Doubles,
+        extents.map { case (c, e) => c -> SummaryCounts.Span(
+          SummaryCounts.key(e.min), SummaryCounts.key(e.max)) })
+      val cross = SummaryCounts.firstCrossings(ds, nn)
+      crossingAtFirstRow += cross.count { x =>
+        x.rows > 1 && x.ts.exists { case (i, _) =>
+          val (qs, _) = brute(byCol(x.column).map(r => (r._2, r._3)))
+          SummaryCounts.key(qs(i)) == x.range.lo }
+      }
+      if (cross.exists(_.rows > smallCap)) narrowed += 1
+      Seq(SummaryCounts.RowCap, smallCap).foreach { cap =>
+        val got = SummaryCounts.numeric(df, extents, cap)
+        byCol.foreach { case (c, rs) =>
+          val (qs, top) = brute(rs.map(r => (r._2, r._3)))
+          val at = s"seed=$seed cap=$cap $c"
+          assert(bits(got(c).quartiles) === bits(qs), s"$at quartiles")
+          assert(got(c).top.map(_._2) === top.map(_._2), s"$at top")
+          assert(bits(got(c).top.map(_._1)) === bits(top.map(_._1)),
+            s"$at top items")
+          assert(got(c).unique === rs.size.toLong, s"$at unique")
+        }
       }
       // 2. end to end: the same counts as raw column values, padded with
       //    nulls, zeros half -0.0 — pass 1 and the count table agree
@@ -494,7 +495,7 @@ class PropertySpec extends AnyFunSuite {
           byCol(c).size.toLong + math.max(zeros - 1, 0), s"seed=$seed $c")
       }
     }
-    assert(crossingAtFirstRow > 0 && wholeColumnParts > 0,
-      s"placements not exercised: $crossingAtFirstRow, $wholeColumnParts")
+    assert(crossingAtFirstRow > 0 && narrowed > 0,
+      s"crossings not exercised: $crossingAtFirstRow, $narrowed")
   }
 }

@@ -327,6 +327,43 @@ class RestSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a whole-valued decimal cell stays a double on /rows, /columns " +
+      "and JS recordRows") {
+    import org.apache.spark.sql.types.DoubleType
+    val engine = new GraftEngine(spark)
+    val srv = new RestServer(engine)
+    val port = srv.start()
+    def post(path: String, body: String): (Int, String) = {
+      val r = client.send(HttpRequest
+        .newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .POST(HttpRequest.BodyPublishers.ofString(body))
+        .build(), HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.body())
+    }
+    def x(ds: String) = {
+      val df = engine.dataset(ds)
+      (df.schema("x").dataType, df.select("x").head().get(0))
+    }
+    try {
+      val (c1, b1) = post("/v1/datasets/dec_rows/rows",
+        """{"rowName": "r1", "columns": [["x", 5.0, 0]]}""")
+      assert(c1 === 200, b1)
+      assert(x("dec_rows") === ((DoubleType, 5.0)))
+      engine.createDatasetTyped("dec_cols", "sparse.mutable", _ => None)
+      val (c2, b2) = post("/v1/datasets/dec_cols/columns",
+        """{"columnName": "x", "rows": [["r1", 5e0, 0]]}""")
+      assert(c2 < 400, b2)
+      assert(x("dec_cols") === ((DoubleType, 5.0)))
+      val res = graft.api.JsHost.run(spark, engine.dataset,
+        """var ds = mldb.createDataset({type: 'sparse.mutable', id: 'dec_js'});
+          |ds.recordRows([["r1", [["x", 5.0, 0]]]]);
+          |ds.commit();
+          |"done"""".stripMargin, Map.empty, engine)
+      assert(graft.api.JsHost.resultJson(res) === "\"done\"")
+      assert(x("dec_js") === ((DoubleType, 5.0)))
+    } finally srv.stop()
+  }
+
   test("plugins: fifth entity kind — register, serve a custom route, delete") {
     val engine = new GraftEngine(spark)
     val srv = new RestServer(engine)

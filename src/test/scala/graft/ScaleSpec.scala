@@ -635,36 +635,56 @@ class ScaleSpec extends AnyFunSuite {
       .sortWith { case ((v1, c1), (v2, c2)) =>
         c1 > c2 || (c1 == c2 && v1 > v2) }.take(10)
     assert(sums.find(_.column == "cat").get.mostFrequent === catTop)
-    // 2. CARDINALITY: the summary collect is partitions × columns rows
-    //    of ≤ 10 items each, and the crossing job reads ≤ 3 partitions
-    //    per column — counted at 150k distinct values
+    // 2. CARDINALITY: pass A's collect merges into one histogram of at
+    //    most 4,096 buckets and one top-10 per column, and pass B
+    //    collects at most 3 × cap crossing rows per column — counted at
+    //    150k distinct values, at a cap that also forces narrowing
     val melted = df.select(explode(array(Seq("cont", "lowcard").map(c =>
       struct(lit(c).as("c"), col(c).as("v"))): _*)).as("cv"))
       .select(col("cv.c").as("c"), col("cv.v").as("v"))
       .filter(col("v").isNotNull)
-    val sorted = SummaryCounts.pinSorted(melted)
-    val parts = sorted.queryExecution.toRdd.getNumPartitions
-    val digests = SummaryCounts.digest(sorted, SummaryCounts.Doubles)
-    assert(digests.size <= parts * 2,
-      "summary collect must be at most partitions × columns rows")
-    assert(digests.forall(_.top.size <= 10), "top lists must be ≤ 10 items")
-    val cross = SummaryCounts.crossings(digests,
-      Map("cont" -> n, "lowcard" -> n))
+    val counts = SummaryCounts.countTable(melted)
+    val extents = Seq("cont", "lowcard").map { c =>
+      val vs = local.map(_.getAs[Double](c))
+      c -> SummaryCounts.Extent(n, vs.min, vs.max)
+    }.toMap
+    val digests = SummaryCounts.digest(counts, SummaryCounts.Doubles,
+      extents.map { case (c, e) => c -> SummaryCounts.Span(
+        SummaryCounts.key(e.min), SummaryCounts.key(e.max)) })
+    assert(digests.keySet === extents.keySet)
+    assert(digests.values.forall(d =>
+      d.hist.cnt.length <= 4096 && d.top.size <= 10),
+      "pass A must merge to ≤ 4,096 buckets and ≤ 10 items per column")
+    assert(digests("cont").rows === n)
+    val cap = 16
+    val cross = SummaryCounts.firstCrossings(digests, extents.map {
+      case (c, e) => c -> e.nn })
+    val (collect, narrow) = cross.partition(_.rows <= cap)
+    assert(narrow.nonEmpty, "no crossing bucket exceeds the cap")
+    val (rows, hists) = SummaryCounts.scan(counts, collect, narrow)
     Seq("cont", "lowcard").foreach { c =>
-      assert(cross.count(_._2.contains(c)) <= 3,
-        s"$c: crossing job must read ≤ 3 partitions")
+      assert(cross.count(_.column == c) <= 3, s"$c: ≤ 3 crossing buckets")
+      assert(collect.zip(rows).filter(_._1.column == c).map(_._2.size).sum
+        <= 3 * cap, s"$c: pass B must collect ≤ 3 × cap rows")
     }
-    // 3. PLAN SHAPE: the count table is range-partitioned by (c, v)
-    //    and sorted within partitions — no window keyed by the column
-    //    NAME (none at all) over the full value table
-    val plan = SummaryCounts.sortedCountPlan(melted)
-      .queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("rangepartitioning(c#"), plan.take(2000))
-    assert(!plan.contains("windowspecdefinition"),
-      "window in the summary count table:\n" + plan.take(2000))
+    assert(hists.forall(_.cnt.length <= 4096))
+    val small = SummaryCounts.numeric(counts, extents, cap)
+    Seq("cont", "lowcard").foreach { c =>
+      val want = Seq("1st_quartile", "median", "3rd_quartile")
+        .map(sums.find(_.column == c).get.stats(_))
+      assert(small(c).quartiles === want, s"$c at cap $cap")
+    }
+    // 3. PLAN SHAPE: the count table is a plain hash groupBy — no range
+    //    exchange, no sort, no window keyed by the column NAME
+    val plan = counts.queryExecution.executedPlan.toString.toLowerCase
+    assert(plan.contains("hashpartitioning(c#"), plan.take(2000))
+    Seq("rangepartitioning", "sort", "windowspecdefinition").foreach { op =>
+      assert(!plan.contains(op), s"$op in the summary count table:\n" +
+        plan.take(2000))
+    }
   }
 
-  test("summary.statistics over q126's input launches at most 8 jobs") {
+  test("summary.statistics over q126's input launches at most 5 jobs") {
     import graft.procedures.Procedures
     val df = core.Tables.lineitem(spark,
       sys.props("user.home") + "/testdata/sf0.01")
@@ -673,7 +693,7 @@ class ScaleSpec extends AnyFunSuite {
       Procedures.summaryStatisticsReference(df, df.columns.toSeq)
     }
     assert(sums.map(_.mostFrequent.size) === Seq(10, 10))
-    assert(jobs.size <= 8, s"${jobs.size} jobs")
+    assert(jobs.size <= 5, s"${jobs.size} jobs")
   }
 
   test("graft.checkpointDir switches every DfOps.cut to reliable " +
