@@ -28,13 +28,13 @@ object Bench {
     // first execution alone pays ~5s of JIT otherwise.
     graft.core.Tables.names.foreach { t =>
       try graft.core.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up of table $t failed: $e") }
     }
     val timedQueries = SparkEntry.queries.filterNot(kv =>
       verificationTwins(kv._1)) ++ SparkEntry.benchOnlyQueries
-    timedQueries.foreach { case (_, fn) =>
+    timedQueries.foreach { case (name, fn) =>
       try { fn(spark, "/root/testdata/sf0.001").count() }
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up of $name failed: $e") }
     }
     // Throughput counters matching BASELINE.md's reference claims
     // ("several million rows per second" CSV ingest; "up to 500,000
@@ -55,7 +55,7 @@ object Bench {
     }.take(160) + "\""
     def counter(name: String)(body: => String): String =
       try body catch {
-        case e: Throwable => s""","${name}_error":${jstr(e.toString)}"""
+        case NonFatal(e) => s""","${name}_error":${jstr(e.toString)}"""
       }
     val throughput = {
       val tmp = java.nio.file.Files.createTempDirectory("graft_bench").toString
@@ -162,7 +162,7 @@ object Bench {
     def readFile(p: String): Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p)), "UTF-8"))
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     def envBlock: String = {  // def: loadavg read at EMIT time, after the run
       val load = readFile("/proc/loadavg").map(_.trim.split(" ").take(3))
         .getOrElse(Array("0", "0", "0"))

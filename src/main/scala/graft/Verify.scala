@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -27,7 +28,7 @@ object Verify {
     graft.core.Tables.names.foreach { t =>
       val s = try graft.core.Tables.load(spark, sfDir, t).schema
         .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
-      catch { case e: Throwable => s"UNREADABLE(${e.getMessage})" }
+      catch { case NonFatal(e) => s"UNREADABLE(${e.getMessage})" }
       System.err.println(s"[verify] schema $t = $s")
     }
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
@@ -37,7 +38,7 @@ object Verify {
       // query runs parallel and only the write is single-file.
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.Tokenize
+import graft.plans.Tokenize.Delimiters
 
 /** Text / tokenize / NLP-ish scalar functions.
   *
@@ -18,10 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Lowercased word tokens; drops empty tokens. Default split mirrors
-    * the reference tokenizer's default whitespace splitChars. */
-  def tokens(text: Column, splitRegex: String = "[\\s,;:!?.()\\[\\]{}\"']+"): Column =
-    filter(split(lower(text), splitRegex), t => length(t) > 0)
+  /** Lowercased word tokens with empty tokens dropped, cut on `delims`:
+    * whitespace and punctuation by default, or `Whitespace` alone. One
+    * native pass per row ([[graft.plans.Tokenize]]); the result equals
+    * [[tokensReference]] on every input. */
+  def tokens(text: Column, delims: Delimiters = Tokenize.Punctuation): Column =
+    Tokenize.column(text, delims)
+
+  /** The formulation [[tokens]] replaced, `lower` → regex `split` →
+    * lambda `filter`: the differential-test twin. */
+  def tokensReference(text: Column, delims: Delimiters = Tokenize.Punctuation): Column =
+    filter(split(lower(text), delims.regex), t => length(t) > 0)
 
   /** Bag-of-words: token -> count map. Reference `tokenize` returns a
     * row of token→count (`builtin_functions.cc:1915`); we return
@@ -45,7 +54,7 @@ object TextFunctions {
 
   /** Whitespace token count (cheap, codegen'd). */
   def tokenCount(text: Column): Column =
-    size(tokens(text, "\\s+"))
+    size(tokens(text, Tokenize.Whitespace))
 
   /** Positional word n-grams: every `n`-token window of `toks` joined
     * with `sep`, in document order. Empty below `n` tokens, null for a
@@ -74,8 +83,8 @@ object TextFunctions {
     * token→count map. */
   def tokenBagNgrams(text: Column, nMin: Int, nMax: Int,
       minTokenLength: Int = 1,
-      splitRegex: String = "[\\s,;:!?.()\\[\\]{}\"']+"): Column = {
-    val toks = filter(tokens(text, splitRegex), t => length(t) >= minTokenLength)
+      delims: Delimiters = Tokenize.Punctuation): Column = {
+    val toks = filter(tokens(text, delims), t => length(t) >= minTokenLength)
     graft.plans.TokenCounts.column((nMin to nMax)
       .map(n => coalesce(ngrams(toks, n, " "), emptyStrings))
       .reduce(concat(_, _)))
@@ -85,7 +94,7 @@ object TextFunctions {
     * long-word penalty (a word of n chars ≈ ceil(n/6) subword tokens).
     * Deterministic heuristic, not a trained tokenizer. */
   def approxBpeTokenCount(text: Column): Column = {
-    val words = tokens(text, "\\s+")
+    val words = tokens(text, Tokenize.Whitespace)
     val sub = transform(words, w => ceil(length(w) / lit(6.0)).cast("long"))
     coalesce(aggregate(sub, lit(0L), (a, x) => a + x), lit(0L))
   }
@@ -294,7 +303,7 @@ object TextFunctions {
     * density, stopword ratio, mean word length — the standard
     * pretraining-corpus filters (C4/Gopher-style rules). */
   def qualityScore(text: Column): Column = {
-    val toks = tokens(text, "\\s+")
+    val toks = tokens(text, Tokenize.Whitespace)
     val nTok = size(toks).cast("double")
     val nChar = length(text).cast("double")
     val punct = (nChar - length(regexp_replace(text, "[.,;:!?]", ""))).cast("double")

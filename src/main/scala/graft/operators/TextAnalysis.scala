@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
+import graft.plans.Tokenize
 
 /** Corpus-level text operators (SURVEY §2.7/§2.8 NLP surface):
   * tfidf as plain DataFrame aggregation, bag-of-words stats tables,
@@ -138,7 +139,7 @@ object TextAnalysis {
       topK: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "bm25Search needs at least one term")
     val base = docs.select(col(idCol).as("doc_id"),
-      T.tokens(col(textCol), "\\s+").as("__toks"))
+      T.tokens(col(textCol), Tokenize.Whitespace).as("__toks"))
       .withColumn("__dl", size(col("__toks")).cast("double"))
     val dfAggs = queryTerms.zipWithIndex.map { case (t, i) =>
       sum(when(array_contains(col("__toks"), t), 1L).otherwise(0L))
@@ -218,7 +219,7 @@ object TextAnalysis {
   def lmCountTables(train: DataFrame,
       trainTextCol: String): (DataFrame, DataFrame) = {
     val trainToks =
-      train.select(T.tokens(col(trainTextCol), "\\s+").as("__toks"))
+      train.select(T.tokens(col(trainTextCol), Tokenize.Whitespace).as("__toks"))
     val uc = graft.core.DfOps.cut(
       trainToks.select(explode(col("__toks")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c")))
@@ -326,7 +327,7 @@ object TextAnalysis {
       tables.seen.toDF("__sc2", "__sc1", "__fp_seen"))
     val backDf = broadcast(tables.backoff.toDF("__bc", "__fp_back"))
     val docBg = docs
-      .select(col(idCol).as("doc_id"), T.tokens(col(textCol), "\\s+").as("__toks"))
+      .select(col(idCol).as("doc_id"), T.tokens(col(textCol), Tokenize.Whitespace).as("__toks"))
       .filter(size(col("__toks")) >= 2)
       .select(col("doc_id"), explode(bigramArr(col("__toks"))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
@@ -391,7 +392,7 @@ object TextAnalysis {
       "every backoff score would be log(x/0)")
     def fpOf(x: Column): Column = round(x * lit(1e6), 0).cast("long")
     val docBg = docs
-      .select(col(idCol).as("doc_id"), T.tokens(col(textCol), "\\s+").as("__toks"))
+      .select(col(idCol).as("doc_id"), T.tokens(col(textCol), Tokenize.Whitespace).as("__toks"))
       .filter(size(col("__toks")) >= 2)
       .select(col("doc_id"), explode(bigramArr(col("__toks"))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
@@ -516,7 +517,7 @@ object TextAnalysis {
       (length(s) - length(replace(s, lit(lit0), lit("")))) / lit0.length
     val kept = keep.map(col)
     val staged = docs.select(Seq(col(idCol).as("doc_id"), col(textCol).as("__tx"),
-      T.tokens(col(textCol), "\\s+").as("__w"),
+      T.tokens(col(textCol), Tokenize.Whitespace).as("__w"),
       filter(transform(split(col(textCol), "\n"), l => trim(l)),
         l => length(l) > 0).as("__ln"),
       array_distinct(T.tokens(col(textCol))).as("__t")) ++ kept: _*)
@@ -653,7 +654,7 @@ object TextAnalysis {
     // one staged column per kernel call: every metric below reads
     // fields of these, so each kernel runs once per row
     val staged = docs.select(Seq(col(idCol).as("doc_id"),
-      counts(T.tokens(col(textCol), "\\s+"), 1 to 10).as("__w"),
+      counts(T.tokens(col(textCol), Tokenize.Whitespace), 1 to 10).as("__w"),
       counts(nonEmptyTrimmed(split(col(textCol), "\n")), Seq(1))(0).as("__ln"),
       counts(nonEmptyTrimmed(split(col(textCol), "\\n\\s*\\n")), Seq(1))(0)
         .as("__pg")) ++ kept: _*)
@@ -780,7 +781,7 @@ object TextAnalysis {
     def counts(df: DataFrame): Array[Long] = {
       val out = Array.fill(nBuckets)(0L)
       // bucketsOf must yield array<int> (the default does)
-      df.select(buckets(T.tokens(col(textCol), "\\s+")).as("__bs"))
+      df.select(buckets(T.tokens(col(textCol), Tokenize.Whitespace)).as("__bs"))
         .select(explode(col("__bs")).as("__b"))
         .groupBy(col("__b")).agg(count(lit(1)).as("__c"))
         .collect().foreach(r => out(r.getInt(0)) = r.getLong(1))
@@ -792,7 +793,7 @@ object TextAnalysis {
     // contract) runs once, not per consumer. ~4 bytes/token at rest,
     // far cheaper than a second digest pass over the corpus.
     val rawB = graft.core.DfOps.cut(raw.select(col(idCol).as("id"),
-      buckets(T.tokens(col(textCol), "\\s+")).as("__b")))
+      buckets(T.tokens(col(textCol), Tokenize.Whitespace)).as("__b")))
     val rc = {
       val out = Array.fill(nBuckets)(0L)
       rawB.select(explode(col("__b")).as("__bk"))
@@ -822,7 +823,7 @@ object TextAnalysis {
         h => pmod(h, lit(nBuckets.toLong)).cast("int")))
     val rawB = graft.core.DfOps.cut(raw.select(col(idCol).as("id"),
       coalesce(targetPred, lit(false)).as("__t"),
-      buckets(T.tokens(col(textCol), "\\s+")).as("__b")))
+      buckets(T.tokens(col(textCol), Tokenize.Whitespace)).as("__b")))
     val tc = Array.fill(nBuckets)(0L)
     val rc = Array.fill(nBuckets)(0L)
     rawB.select(col("__t"), explode(col("__b")).as("__bk"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
@@ -234,9 +234,10 @@ object TokenCounts {
   * array below `n` tokens, null for null input, null tokens skipped
   * as concat_ws skips them. The lambda form re-evaluates any captured
   * non-attribute expression once per position; this is one loop per
-  * row. */
+  * row. Codegen is one static call, as in [[NfcNormalize]], so the
+  * operator stays inside whole-stage codegen. */
 case class NGrams(child: Expression, n: Int, sep: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(n >= 1, s"n-gram width must be at least 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -244,8 +245,23 @@ case class NGrams(child: Expression, n: Int, sep: String)
 
   private lazy val sepUtf8: UTF8String = UTF8String.fromString(sep)
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    NGrams.grams(input.asInstanceOf[ArrayData], n, sepUtf8)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = ctx.addReferenceObj("sep", sepUtf8)
+    defineCodeGen(ctx, ev, c => s"graft.plans.NGrams.grams($c, $n, $s)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): NGrams = copy(child = c)
+}
+
+object NGrams {
+  def column(tokens: Column, n: Int, sep: String): Column =
+    GraftColumnBridge.column(NGrams(GraftColumnBridge.expression(tokens), n, sep))
+
+  /** The `n`-token windows of `toks` joined with `sepUtf8`. */
+  def grams(toks: ArrayData, n: Int, sepUtf8: UTF8String): ArrayData = {
     val m = toks.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val words = new Array[UTF8String](m)
@@ -263,13 +279,6 @@ case class NGrams(child: Expression, n: Int, sep: String)
     }
     new GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): NGrams = copy(child = c)
-}
-
-object NGrams {
-  def column(tokens: Column, n: Int, sep: String): Column =
-    GraftColumnBridge.column(NGrams(GraftColumnBridge.expression(tokens), n, sep))
 }
 
 /** Repetition counts over n-unit windows in ONE eval per row: an

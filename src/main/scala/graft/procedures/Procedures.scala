@@ -590,6 +590,7 @@ object Procedures {
         case BooleanType | _: NumericType => true
         case _ => false
       }).toSet
+    def zeroText(n: Column): Column = when(n === 0.0, n.cast("string"))
     // pass 1: one aggregate row across every column (total row count
     // folded in — the separate df.count() pass this replaces was a
     // whole extra scan)
@@ -603,10 +604,11 @@ object Procedures {
         (if (fpCols(c)) Seq(
           // non-ANSI division by zero is NULL, so the sign of 1/x
           // can't probe the zero's sign — the string rendering can:
-          // exactly "-0.0" / "0.0", and only for true zeros
-          max(when(n.cast("string") === "-0.0", 1L).otherwise(0L))
+          // "-0.0" or "0.0". Only zeros are rendered: subexpression
+          // elimination hoists the shared cast onto every row
+          max(when(zeroText(n) === "-0.0", 1L).otherwise(0L))
             .as(s"${c}__negZero"),
-          max(when(n.cast("string") === "0.0", 1L).otherwise(0L))
+          max(when(zeroText(n) === "0.0", 1L).otherwise(0L))
             .as(s"${c}__posZero"))
         else Nil) ++
         (if (deriveUnique(c)) Nil
@@ -614,11 +616,6 @@ object Procedures {
            Seq(countDistinct(col(s"`$c`")).as(s"${c}__nUnique"))
          else Seq(countDistinct(strExpr(c)).as(s"${c}__nUnique")))
     }
-    def melted(ncols: Seq[String], value: String => Column) =
-      df.select(explode(array(ncols.map(c =>
-        struct(lit(c).as("c"), value(c).as("v"))): _*)).as("cv"))
-        .select(col("cv.c").as("c"), col("cv.v").as("v"))
-        .filter(col("v").isNotNull)
     // Overlap the two big scans (guide §2.6 — concurrent independent
     // jobs back-fill each other's stragglers): pass 1 runs in the
     // background while the statically-numeric count table's shuffle
@@ -628,9 +625,9 @@ object Procedures {
     val rowF = graft.core.DfOps.inBackground(df.sparkSession) {
       df.agg(aggs.head, aggs.tail: _*).head()
     }
-    val staticCounts: Option[DataFrame] =
+    val staticCounts: Option[SummaryCounts.Table] =
       if (cols.exists(staticNumeric))
-        Some(SummaryCounts.countTable(melted(cols.filter(staticNumeric), numExpr)))
+        Some(SummaryCounts.countTable(df, cols.filter(staticNumeric), numExpr))
       else None
     val row = rowF()
     val total = row.getAs[Long]("__total")
@@ -652,7 +649,7 @@ object Procedures {
         val counts =
           if (numericCols.forall(staticNumeric) && staticCounts.nonEmpty)
             staticCounts.get
-          else SummaryCounts.countTable(melted(numericCols, numExpr))
+          else SummaryCounts.countTable(df, numericCols, numExpr)
         SummaryCounts.numeric(counts, numericCols.map(c =>
           c -> SummaryCounts.Extent(g[Long](c, "nNotNull"),
             g[java.lang.Double](c, "min"), g[java.lang.Double](c, "max"))).toMap)
@@ -663,7 +660,7 @@ object Procedures {
     val catTops: Map[String, Seq[(String, Long)]] =
       if (catCols.isEmpty) Map.empty
       else {
-        SummaryCounts.digest(SummaryCounts.countTable(melted(catCols, strExpr)),
+        SummaryCounts.digest(SummaryCounts.countTable(df, catCols, strExpr),
           SummaryCounts.Strings, Map.empty)
           .map { case (c, d) => c -> d.top.map { case (v, n) => v.toString -> n } }
       }

@@ -2,16 +2,18 @@ package graft.procedures
 
 import scala.collection.mutable
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `summary.statistics`' value statistics per column, read off one
-  * count table `(c: string, v, cnt: long)` that holds each distinct
+  * count table `(c: int, v, cnt: long)` that holds each distinct
   * (column, value) once: the plain hash `groupBy(c, v)`
-  * ([[countTable]]), read exactly twice.
+  * ([[countTable]]), read exactly twice. `c` is the column's ordinal in
+  * the [[Table]]'s `names`, so the groupBy key is fixed-width for a
+  * numeric `v` and a task finds a row's column by indexing an array.
   *
   *  A. [[digest]]: one job yields, per column, the count total, the row
   *     (distinct value) count, the top-10 by (cnt desc, v desc) and, for
@@ -70,14 +72,27 @@ object SummaryCounts {
   /** The most rows pass B collects from one crossing bucket. */
   val RowCap = 65536
 
-  /** `melted`'s `(c, v)` rows counted into `(c, v, cnt)` by a hash
-    * groupBy. Building its rows here starts the groupBy's shuffle map
-    * stage on the calling thread under adaptive execution (one job);
-    * each pass that reads them re-runs only the final aggregate. */
-  def countTable(melted: DataFrame): DataFrame = {
+  /** A count table's `(c, v, cnt)` rows and the column name of each
+    * ordinal `c`. */
+  final case class Table(rows: DataFrame, names: IndexedSeq[String]) {
+    private[graft] def ordinal(column: String): Int = names.indexOf(column)
+  }
+
+  /** `df`'s `cols` melted into `(c, v)` rows, `c` the column's position
+    * in `cols` and `v` its `value`, null values dropped, and counted
+    * into `(c, v, cnt)` by a hash groupBy. Building its rows here starts
+    * the groupBy's shuffle map stage on the calling thread under
+    * adaptive execution (one job); each pass that reads them re-runs
+    * only the final aggregate. */
+  def countTable(df: DataFrame, cols: Seq[String],
+      value: String => Column): Table = {
+    val melted = df.select(explode(array(cols.zipWithIndex.map { case (c, i) =>
+        struct(lit(i).as("c"), value(c).as("v")) }: _*)).as("cv"))
+      .select(col("cv.c").as("c"), col("cv.v").as("v"))
+      .filter(col("v").isNotNull)
     val counts = melted.groupBy(col("c"), col("v")).agg(count(lit(1)).as("cnt"))
     counts.queryExecution.toRdd
-    counts
+    Table(counts, cols.toIndexedSeq)
   }
 
   /** An order-preserving long key of Spark's double order: NaN above
@@ -164,45 +179,43 @@ object SummaryCounts {
     }
   }
 
-  /** Rows grouped by column within one partition, one `make` per
-    * column seen. */
-  private def byColumn[A](it: Iterator[InternalRow], make: String => A)(
-      add: (A, InternalRow) => Unit): Iterator[(String, A)] = {
-    val accs = mutable.LinkedHashMap.empty[UTF8String, (String, A)]
+  /** Rows grouped by their column ordinal (of `width`) within one
+    * partition, one `make` per column seen. */
+  private def byColumn[A <: AnyRef](it: Iterator[InternalRow], width: Int,
+      make: Int => A)(add: (A, InternalRow) => Unit): Iterator[(Int, A)] = {
+    val accs = new Array[AnyRef](width)
     it.foreach { r =>
-      val c = r.getUTF8String(0)
-      val a = accs.getOrElse(c, {
-        val s = c.toString
-        val a = (s, make(s))
-        accs(c.clone()) = a
-        a
-      })
-      add(a._2, r)
+      val c = r.getInt(0)
+      if (accs(c) == null) accs(c) = make(c)
+      add(accs(c).asInstanceOf[A], r)
     }
-    accs.valuesIterator
+    accs.indices.iterator.filter(accs(_) != null)
+      .map(c => (c, accs(c).asInstanceOf[A]))
   }
 
   /** Pass A: one job, one merged [[Digest]] per column present; a
     * column in `spans` also gets its histogram. */
-  def digest[V](counts: DataFrame, kind: ValueKind[V],
+  def digest[V](table: Table, kind: ValueKind[V],
       spans: Map[String, Span]): Map[String, Digest[V]] = {
-    val out = mutable.Map.empty[String, Digest[V]]
-    counts.sparkSession.sparkContext.runJob(counts.queryExecution.toRdd,
+    val byOrd = table.names.map(spans.get)
+    val out = mutable.Map.empty[Int, Digest[V]]
+    val rdd = table.rows.queryExecution.toRdd
+    rdd.sparkContext.runJob(rdd,
       (_: TaskContext, it: Iterator[InternalRow]) =>
-        byColumn(it, c => new Acc(kind, spans.get(c)))(_.add(_)).map {
+        byColumn(it, byOrd.size, c => new Acc(kind, byOrd(c)))(_.add(_)).map {
           case (c, a) => (c, a.total, a.rows, a.top.toSeq,
             Option(a.hist).map(_.occupied))
         }.toArray,
-      (_: Int, part: Array[(String, Long, Long, Seq[(V, Long)],
+      (_: Int, part: Array[(Int, Long, Long, Seq[(V, Long)],
           Option[Buckets])]) =>
         part.foreach { case (c, total, rows, top, buckets) =>
           val d = out.getOrElse(c, new Digest[V](0L, 0L, Nil,
-            spans.get(c).map(new Hist(_)).orNull))
+            byOrd(c).map(new Hist(_)).orNull))
           buckets.foreach(d.hist.addAll)
           out(c) = new Digest(d.total + total, d.rows + rows,
             best(kind, d.top ++ top), d.hist)
         })
-    out.toMap
+    out.map { case (c, d) => table.names(c) -> d }.toMap
   }
 
   /** One quartile crossing: the column, the key range of the bucket it
@@ -241,19 +254,24 @@ object SummaryCounts {
   /** One job over the count table: the `(v, cnt)` rows of each
     * `collect` crossing, and a finer histogram over each `narrow`
     * crossing's key range. */
-  private[graft] def scan(counts: DataFrame, collect: Seq[Cross],
+  private[graft] def scan(table: Table, collect: Seq[Cross],
       narrow: Seq[Cross]): (Seq[Seq[(Double, Long)]], Seq[Hist]) = {
-    def asks(xs: Seq[Cross]) = xs.zipWithIndex.groupBy(_._1.column)
-      .map { case (c, ys) => c -> ys.map { case (x, i) => (i, x.range) } }
+    // per column ordinal, the (crossing index, key range) pairs asked
+    def asks(xs: Seq[Cross]) = {
+      val byCol = xs.zipWithIndex.groupBy(x => table.ordinal(x._1.column))
+      table.names.indices.map(c =>
+        byCol.getOrElse(c, Nil).map { case (x, i) => (i, x.range) })
+    }
     val (cAsk, nAsk) = (asks(collect), asks(narrow))
     val rows = collect.map(_ => mutable.ArrayBuffer.empty[(Double, Long)])
     val hists = narrow.map(x => new Hist(x.range))
     type Part = (Array[(Int, Double, Long)], Array[(Int, Buckets)])
-    counts.sparkSession.sparkContext.runJob(counts.queryExecution.toRdd,
+    val rdd = table.rows.queryExecution.toRdd
+    rdd.sparkContext.runJob(rdd,
       (_: TaskContext, it: Iterator[InternalRow]) => {
         val got = mutable.ArrayBuffer.empty[(Int, Double, Long)]
-        val hs = byColumn(it, c => (cAsk.getOrElse(c, Nil),
-          nAsk.getOrElse(c, Nil).map { case (i, s) => (i, new Hist(s)) })) {
+        val hs = byColumn(it, cAsk.size, c => (cAsk(c),
+          nAsk(c).map { case (i, s) => (i, new Hist(s)) })) {
           case ((cs, hs), r) if cs.nonEmpty || hs.nonEmpty =>
             val (v, n) = (r.getDouble(1), r.getLong(2))
             val k = key(v)
@@ -275,7 +293,7 @@ object SummaryCounts {
     * One job per round; a round narrows every crossing bucket of more
     * than `cap` rows, so the answer is exact on any data. A column
     * without rows gets NaN. */
-  def exactQuartiles(counts: DataFrame, digests: Map[String, Digest[Double]],
+  def exactQuartiles(table: Table, digests: Map[String, Digest[Double]],
       nn: Map[String, Long], cap: Int = RowCap): Map[String, Seq[Double]] = {
     val out = nn.keys.map(_ -> Array.fill(Thresholds.size)(Double.NaN)).toMap
     var open = firstCrossings(digests, nn)
@@ -283,7 +301,7 @@ object SummaryCounts {
       // one key is one value: a one-key bucket is never narrowed
       val (collect, narrow) =
         open.partition(x => x.rows <= cap || x.range.lo == x.range.hi)
-      val (rows, hists) = scan(counts, collect, narrow)
+      val (rows, hists) = scan(table, collect, narrow)
       collect.zip(rows).foreach { case (x, rs) =>
         var cum = x.below
         var pending = x.ts
@@ -305,11 +323,11 @@ object SummaryCounts {
   /** Both passes over a [[countTable]] of numeric columns: two jobs
     * unless a crossing bucket holds more than `cap` rows. Every
     * `extents` column gets an entry. */
-  def numeric(counts: DataFrame, extents: Map[String, Extent],
+  def numeric(table: Table, extents: Map[String, Extent],
       cap: Int = RowCap): Map[String, NumericCounts] = {
-    val ds = digest(counts, Doubles,
+    val ds = digest(table, Doubles,
       extents.map { case (c, e) => c -> Span(key(e.min), key(e.max)) })
-    val qs = exactQuartiles(counts, ds, extents.map { case (c, e) => c -> e.nn }, cap)
+    val qs = exactQuartiles(table, ds, extents.map { case (c, e) => c -> e.nn }, cap)
     extents.keys.map { c =>
       val d = ds.get(c)
       c -> NumericCounts(qs(c), d.map(_.top).getOrElse(Nil),

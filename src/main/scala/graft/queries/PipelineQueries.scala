@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.{HtmlFunctions => H, TextFunctions => T, VectorFunctions => V}
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.plans.Tokenize
 import graft.procedures.Procedures
 
 /** Training-data pipeline operators: dedup (exact / MinHash-LSH /
@@ -167,7 +168,7 @@ object PipelineQueries {
       Tables.documents(s, d).select(col("doc_id"),
         T.tokenCount(col("text")).cast("long").as("n_tokens"),
         length(col("text")).cast("long").as("n_chars_computed"),
-        size(array_distinct(T.tokens(col("text"), "\\s+"))).cast("long").as("n_unique"))
+        size(array_distinct(T.tokens(col("text"), Tokenize.Whitespace))).cast("long").as("n_unique"))
     },
 
     // --- corpus-level token frequencies (the tokenize → bag pipeline) ---
@@ -179,7 +180,7 @@ object PipelineQueries {
         |GROUP BY token""".stripMargin) { (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(T.tokens(col("text"), "\\s+")).as("token"))
+          explode(T.tokens(col("text"), Tokenize.Whitespace)).as("token"))
         .groupBy(col("token"))
         .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
     },
@@ -364,7 +365,7 @@ object PipelineQueries {
         when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L)
       }.reduce(_ + _)
       val sims = Tables.documents(s, d).filter(col("doc_id") < 2000)
-        .select(col("doc_id"), explode(T.tokens(col("text"), "\\s+")).as("t"))
+        .select(col("doc_id"), explode(T.tokens(col("text"), Tokenize.Whitespace)).as("t"))
         .withColumn("h", h.cast("long"))
         .groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
         .select(col("doc_id"), sim.cast("long").as("sim"))
@@ -1864,7 +1865,7 @@ object PipelineQueries {
         when(col("doc_id") % 17 === 0, lit("\nlorem ipsum dolor sit amet."))
           .otherwise(lit("")))
       TextAnalysis.c4Clean(
-        docs.select(col("doc_id"), T.tokens(col("text"), "\\s+").as("__w"))
+        docs.select(col("doc_id"), T.tokens(col("text"), Tokenize.Whitespace).as("__w"))
           .select(col("doc_id"), page.as("text")),
         "doc_id", "text")
     },

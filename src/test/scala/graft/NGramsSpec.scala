@@ -246,7 +246,7 @@ class NGramsSpec extends AnyFunSuite {
   }
 
   test("WindowCounts equals the twin on documents' words") {
-    val words = docs.select(T.tokens(col("text"), "\\s+").as("w"))
+    val words = docs.select(T.tokens(col("text"), graft.plans.Tokenize.Whitespace).as("w"))
     val bad = words.filter(!(WindowCounts.column(col("w"), 1 to 10) <=>
       windowCountsTwin(col("w"), 1 to 10))).count()
     assert(bad === 0)

@@ -290,6 +290,39 @@ class ProceduresSpec extends AnyFunSuite {
     assert(si.head.stats("num_unique") === 3L)
   }
 
+  test("summary statistics num_unique over -0.0, 0.0 and NaN equals a " +
+      "string countDistinct") {
+    val s2 = spark
+    import s2.implicits._
+    val df = Seq[java.lang.Double](-0.0, 0.0, Double.NaN, -0.0, 1.0,
+      Double.NaN, 0.0, null, -1.0, Double.NaN).toDF("d")
+    val want = df.agg(countDistinct(col("d").cast("string"))).head().getLong(0)
+    assert(want === 5L) // -0.0, 0.0, NaN, 1.0, -1.0
+    val got = Procedures.summaryStatisticsReference(df, Seq("d")).head
+    assert(got.stats("num_unique") === want)
+    // one zero sign alone counts once
+    Seq(-0.0, 0.0).foreach { z =>
+      val one = Seq[java.lang.Double](z, z, Double.NaN, 2.0).toDF("d")
+      assert(Procedures.summaryStatisticsReference(one, Seq("d")).head
+        .stats("num_unique") === 3L, s"zero $z")
+    }
+  }
+
+  test("q126's count table groups on an int column ordinal") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.types.{DoubleType, IntegerType}
+    val df = Tables.lineitem(spark, sf).select("l_extendedprice", "l_quantity")
+    val t = graft.procedures.SummaryCounts.countTable(df, df.columns.toSeq,
+      c => col(c).cast("double"))
+    assert(t.names === df.columns.toSeq)
+    val plan = t.rows.queryExecution.optimizedPlan
+    val keys = plan.collect { case a: Aggregate =>
+      a.groupingExpressions.map(_.dataType) }
+    assert(keys.nonEmpty && keys.forall(_ == Seq(IntegerType, DoubleType)), plan)
+    assert(t.rows.select("c").distinct().collect().map(_.getInt(0)).sorted
+      === Array(0, 1))
+  }
+
   test("summary statistics jobs carry the calling thread's job group") {
     // pass 1 runs on another thread while the count table is pinned;
     // every job of each call must carry that call's group, not the

@@ -427,7 +427,7 @@ class PropertySpec extends AnyFunSuite {
       (qs, top)
     }
     def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
-    val schema = StructType(Seq(StructField("c", StringType),
+    val schema = StructType(Seq(StructField("c", IntegerType),
       StructField("v", DoubleType), StructField("cnt", LongType)))
     // a cap this small makes every crossing bucket of 3+ rows narrow
     val smallCap = 2
@@ -439,8 +439,10 @@ class PropertySpec extends AnyFunSuite {
       // 1. the passes themselves, over the table shuffled into four
       //    partitions, at the default cap and at the small one
       val rnd = new scala.util.Random(seed)
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(
-        rnd.shuffle(table).map { case (c, v, n) => Row(c, v, n) }, 4), schema)
+      val names = byCol.keys.toIndexedSeq.sorted
+      val df = SummaryCounts.Table(spark.createDataFrame(spark.sparkContext.parallelize(
+        rnd.shuffle(table).map { case (c, v, n) => Row(names.indexOf(c), v, n) }, 4),
+        schema), names)
       val extents = byCol.map { case (c, rs) =>
         val asc = rs.map(_._2).sortWith(compareDoubles(_, _) < 0)
         c -> SummaryCounts.Extent(rs.map(_._3).sum, asc.head, asc.last)

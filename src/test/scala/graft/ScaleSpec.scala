@@ -639,11 +639,7 @@ class ScaleSpec extends AnyFunSuite {
     //    most 4,096 buckets and one top-10 per column, and pass B
     //    collects at most 3 × cap crossing rows per column — counted at
     //    150k distinct values, at a cap that also forces narrowing
-    val melted = df.select(explode(array(Seq("cont", "lowcard").map(c =>
-      struct(lit(c).as("c"), col(c).as("v"))): _*)).as("cv"))
-      .select(col("cv.c").as("c"), col("cv.v").as("v"))
-      .filter(col("v").isNotNull)
-    val counts = SummaryCounts.countTable(melted)
+    val counts = SummaryCounts.countTable(df, Seq("cont", "lowcard"), col)
     val extents = Seq("cont", "lowcard").map { c =>
       val vs = local.map(_.getAs[Double](c))
       c -> SummaryCounts.Extent(n, vs.min, vs.max)
@@ -676,7 +672,7 @@ class ScaleSpec extends AnyFunSuite {
     }
     // 3. PLAN SHAPE: the count table is a plain hash groupBy — no range
     //    exchange, no sort, no window keyed by the column NAME
-    val plan = counts.queryExecution.executedPlan.toString.toLowerCase
+    val plan = counts.rows.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("hashpartitioning(c#"), plan.take(2000))
     Seq("rangepartitioning", "sort", "windowspecdefinition").foreach { op =>
       assert(!plan.contains(op), s"$op in the summary count table:\n" +
